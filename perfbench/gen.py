@@ -259,38 +259,40 @@ def _accumulate(ws):
 
 # -- analytics statement mix ------------------------------------------------
 
-LOC_LISTS = [
-    (1, 2, 3),
-    (1, 4, 9, 16),
-    (2, 5, 7),
-    (3, 6, 10, 12, 20),
-    (8, 11, 13),
-    (1, 2, 3, 4, 5, 6),
-]
-
-
-def analytics_statements(n_snapshots: int) -> list[tuple[str, tuple]]:
+def analytics_statements(seed: int, n_days: int, n_snapshots: int) -> list[tuple[str, tuple]]:
     """The distinct (template, params) statements of the analytics mix,
-    in popularity order: `statement_deck` repeats the first ones most."""
-    out: list[tuple[str, tuple]] = []
-    for i in range(2):
-        d0 = 11 * i + 2
-        out.append(("dashboard", (day_str(d0), day_str(d0 + 6), LOC_LISTS[i])))
-        out.append(("day_count", (day_str(d0 + 3),)))
-        out.append(("rank_cte", (day_str(d0), day_str(d0 + 4))))
-        out.append(("zone_join", (day_str(d0), day_str(d0 + 9))))
-        out.append(("time_travel", (2 + 2 * i,)))
-    out.append(("files_meta", ()))
-    return out
+    in popularity order: `statement_deck` repeats the first ones most.
+    The seed draws each statement's dates, pickup locations and snapshot
+    within the table's `n_days` days and `n_snapshots` snapshots; the
+    kinds and their order are the same for every seed, so every run
+    times the same mix of statement shapes."""
+    rng = Random(seed)
+
+    def window(days: int) -> tuple[str, str]:
+        d0 = rng.randrange(n_days - days + 1)
+        return day_str(d0), day_str(d0 + days - 1)
+
+    def busy_zones() -> tuple[int, ...]:
+        return tuple(sorted(rng.sample(range(1, 13), rng.randint(3, 6))))
+
+    return [
+        ("dashboard", (*window(7), busy_zones())),
+        ("day_count", (window(1)[0],)),
+        ("dashboard", (*window(7), busy_zones())),
+        ("rank_cte", window(5)),
+        ("zone_join", window(10)),
+        ("time_travel", (rng.randrange(1, n_snapshots - 1),)),
+        ("files_meta", ()),
+    ]
 
 
-def statement_deck(seed: int, n_statements: int) -> list[int]:
-    """A Zipf-skewed deck of statement indexes in seeded order. Statement
-    k appears about 5/(k+1)^0.9 times (at least once), so the mix is the
-    same for every seed and only the order and the data vary."""
-    deck = [k for k in range(n_statements) for _ in range(max(1, round(5 / (k + 1) ** 0.9)))]
-    Random(seed).shuffle(deck)
-    return deck
+def statement_deck(n_statements: int) -> list[int]:
+    """A Zipf-skewed deck of statement indexes: statement k appears about
+    5/(k+1)^0.9 times (at least once), its copies spread evenly over the
+    deck. The deck is the same for every seed, so a run that ends part
+    way through it times the same statements whatever the seed."""
+    counts = [max(1, round(5 / (k + 1) ** 0.9)) for k in range(n_statements)]
+    return [k for _, k in sorted(((j + 0.5) / c, k) for k, c in enumerate(counts) for j in range(c))]
 
 
 def client_schedule(deck: list[int], client: int, clients: int, length: int) -> list[int]:

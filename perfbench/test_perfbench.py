@@ -13,11 +13,14 @@ import json
 import os
 import subprocess
 import sys
+import threading
+import time
+from types import SimpleNamespace
 
 import pytest
 
 from perfbench import gen
-from perfbench.trace import Span, parse_sql_metric, self_times, union_length
+from perfbench.trace import Span, Tracer, parse_sql_metric, self_times, union_length
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -67,10 +70,21 @@ def test_doc_shards_record_injected_groups():
     assert not {r[1] for r in nxt} & {r[1] for r in first}
 
 
+def test_statements_are_seeded_but_keep_their_kinds():
+    a, b = gen.analytics_statements(11, 28, 4), gen.analytics_statements(12, 28, 4)
+    assert a == gen.analytics_statements(11, 28, 4)
+    assert a != b and [k for k, _ in a] == [k for k, _ in b]
+    days = {gen.day_str(d) for d in range(28)}
+    for stmts in (a, b):
+        for kind, params in stmts:
+            assert {p for p in params if isinstance(p, str)} <= days
+            if kind == "time_travel":
+                assert 1 <= params[0] <= 2
+
+
 def test_statement_deck_is_one_deck_across_clients():
-    n = len(gen.analytics_statements(6))
-    deck = gen.statement_deck(11, n)
-    assert sorted(deck) == sorted(gen.statement_deck(12, n))  # same mix, any seed
+    n = len(gen.analytics_statements(11, 28, 4))
+    deck = gen.statement_deck(n)
     assert deck.count(0) > deck.count(n - 1) >= 1  # Zipf skew
     starts = [c * len(deck) // 4 for c in range(4)] + [len(deck)]
     first = [i for c in range(4) for i in gen.client_schedule(deck, c, 4, starts[c + 1] - starts[c])]
@@ -93,6 +107,49 @@ def test_self_time_on_a_synthetic_span_tree():
     ]
     st = self_times(spans)
     assert st == pytest.approx([10 - (5 + 1), 3 - 1, 1, 2.5, 1])
+
+
+class _FakeSparkContext:
+    """The few SparkContext calls `Tracer.span` makes, with no jobs."""
+
+    def getLocalProperty(self, key):
+        return None
+
+    def setJobGroup(self, group, desc):
+        pass
+
+    def setLocalProperty(self, key, value):
+        pass
+
+    def statusTracker(self):
+        return SimpleNamespace(getJobIdsForGroup=lambda group: [])
+
+    _jsc = SimpleNamespace(sc=lambda: SimpleNamespace(statusStore=lambda: None))
+
+
+def test_adopting_span_owns_spans_of_other_threads():
+    # a streaming run hands its commits to the query's own thread: those
+    # spans must count as its children, or its self time includes them
+    tracer = Tracer(SimpleNamespace(sparkContext=_FakeSparkContext()))
+
+    def commit():
+        with tracer.span("append"):
+            with tracer.span("cas"):
+                time.sleep(0.02)
+
+    with tracer.span("run", adopt=True):
+        t = threading.Thread(target=commit)
+        t.start()
+        t.join()
+    t = threading.Thread(target=commit)  # after the run: no parent
+    t.start()
+    t.join()
+    names = [s.name for s in tracer.spans]
+    parents = [s.parent for s in tracer.spans]
+    assert names == ["run", "append", "cas", "append", "cas"]
+    assert parents == [None, 0, 1, None, 3]
+    st = tracer.layer_self_times()
+    assert st["run"] < st["cas"] / 2
 
 
 def test_parse_sql_metric():

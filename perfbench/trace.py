@@ -73,7 +73,7 @@ class NullTracer:
     enabled = False
 
     @contextlib.contextmanager
-    def span(self, name: str):
+    def span(self, name: str, adopt: bool = False):
         yield None
 
     def add(self, name: str, value: float = 1.0) -> None:
@@ -108,6 +108,9 @@ class Tracer:
         self._local = threading.local()
         self._patches: list[tuple[object, str, object]] = []
         self._listener = None
+        # span that adopts spans opened on threads with no open span of
+        # their own (a streaming query's foreachBatch thread)
+        self._adopter: int | None = None
 
     # -- spans and counters ------------------------------------------------
     def add(self, name: str, value: float = 1.0) -> None:
@@ -120,12 +123,19 @@ class Tracer:
         return self._local.stack
 
     @contextlib.contextmanager
-    def span(self, name: str):
+    def span(self, name: str, adopt: bool = False):
+        """A span on the calling thread's stack. With `adopt`, spans that
+        other threads open while it is open and that have no parent on
+        their own thread become its children, so its self time excludes
+        work it hands to those threads."""
         stack = self._stack()
         with self._lock:
             idx = len(self.spans)
-            sp = Span(name, time.time(), parent=stack[-1] if stack else None, group=f"perfbench-{idx}")
+            parent = stack[-1] if stack else self._adopter
+            sp = Span(name, time.time(), parent=parent, group=f"perfbench-{idx}")
             self.spans.append(sp)
+            if adopt:
+                prev_adopter, self._adopter = self._adopter, idx
         prev_group = self.sc.getLocalProperty("spark.jobGroup.id")
         prev_desc = self.sc.getLocalProperty("spark.job.description")
         self.sc.setJobGroup(sp.group, name)
@@ -135,6 +145,9 @@ class Tracer:
         finally:
             sp.end = time.time()
             stack.pop()
+            if adopt:
+                with self._lock:
+                    self._adopter = prev_adopter
             self.sc.setLocalProperty("spark.jobGroup.id", prev_group)
             self.sc.setLocalProperty("spark.job.description", prev_desc)
             sp.jobs = self._group_jobs(sp.group)

@@ -28,6 +28,7 @@ class OpResult:
     items: int = 0
     attempted: int = 0
     failures: list[str] = field(default_factory=list)
+    rate: float = 0.0  # items/s of concurrent clients, summed; 0 for one client
 
     def sample(self, kind: str, seconds: float) -> None:
         self.samples.setdefault(kind, []).append(seconds)
@@ -38,6 +39,7 @@ class OpResult:
         self.items += other.items
         self.attempted += other.attempted
         self.failures += other.failures
+        self.rate += other.rate
 
 
 def _norm(v):
@@ -74,7 +76,7 @@ def rows_match(got: list[tuple], want: list[tuple]) -> bool:
 
 class Workload:
     clients = 1
-    primary = ""  # sample kind behind op_p50_s
+    primary = ""  # sample kind of the workload's latency (`<kind>_p50_s`)
 
     def __init__(self, spark, seed: int, work: str, tracer):
         self.spark = spark
@@ -130,9 +132,10 @@ ANALYTICS_SQL = {
 
 class Analytics(Workload):
     primary = "query"
-    n_appends = 6
-    days_per_append = 5
-    rows_per_append = 4000
+    n_appends = 4
+    days_per_append = 7
+    rows_per_append = 6000
+    write_partitions = 2  # files per append = days x partitions
 
     def __init__(self, spark, seed, work, tracer, clients: int):
         super().__init__(spark, seed, work, tracer)
@@ -163,8 +166,8 @@ class Analytics(Workload):
         con = duckdb.connect()
         con.register("taxi_trips", trips)
         con.register("taxi_zones", zones)
-        self.statements = gen.analytics_statements(self.n_appends)
-        self.deck = gen.statement_deck(self.seed, len(self.statements))
+        self.statements = gen.analytics_statements(self.seed, self.n_appends * self.days_per_append, self.n_appends)
+        self.deck = gen.statement_deck(len(self.statements))
         self.expected = []
         for kind, params in self.statements:
             if kind == "files_meta":
@@ -195,7 +198,7 @@ class Analytics(Workload):
         table = LakeTable.create(self.spark, self.root, partition_by=["pickup_date"])
         self.snapshot_ts = []
         for b in self.batches:
-            df = self.spark.createDataFrame(gen.trips_pandas(b), schema).repartition(2)
+            df = self.spark.createDataFrame(gen.trips_pandas(b), schema).repartition(self.write_partitions)
             snap = table.append(df)
             ts = datetime.fromtimestamp(snap.timestamp_ms / 1000, timezone.utc)
             self.snapshot_ts.append(ts.isoformat(timespec="milliseconds"))
@@ -247,6 +250,7 @@ class Analytics(Workload):
         previous reply arrived, until the deadline or `per_client` ops."""
         def client(c: int) -> OpResult:
             res = OpResult()
+            start = last = time.perf_counter()
             sched = gen.client_schedule(self.deck, c, self.clients, per_client or 100000)
             for i in sched:
                 if deadline is not None and time.perf_counter() >= deadline:
@@ -259,10 +263,14 @@ class Analytics(Workload):
                 except Exception as exc:  # one failed statement must not stop the client
                     res.failures.append(f"{self.statements[i][0]}: {exc!r}")
                     continue
-                res.sample("query", time.perf_counter() - t0)
+                last = time.perf_counter()
+                res.sample("query", last - t0)
                 res.items += 1
                 if not rows_match(norm_rows(rows), self.expected[i]):
                     res.failures.append(f"{self.statements[i][0]}{self.statements[i][1]}: rows differ from DuckDB")
+            # the client's own rate, up to its last reply: clients that
+            # finish early do not wait on the slowest one's last statement
+            res.rate = res.items / (last - start) if res.items else 0.0
             return res
 
         merged = OpResult()
@@ -277,8 +285,8 @@ class Analytics(Workload):
 
 class Ingest(Workload):
     primary = "microbatch"
-    files_per_cycle = 4
-    rows_per_file = 2000
+    files_per_cycle = 5
+    rows_per_file = 1000
 
     def __init__(self, spark, seed, work, tracer):
         super().__init__(spark, seed, work, tracer)
@@ -320,7 +328,8 @@ class Ingest(Workload):
         from de_gcp_lakehouse_iceberg_spark.streaming.taxi import run_streaming_pipeline
 
         t0 = time.time()
-        with self.tr.span("streaming.taxi.run"):
+        # the sinks commit on the query's own thread: adopt those spans
+        with self.tr.span("streaming.taxi.run", adopt=True):
             counts = run_streaming_pipeline(self.spark, c["in"], c["wh"], max_files_per_trigger=1)
         t1 = time.time()
         wh = Warehouse(self.spark, c["wh"])
@@ -382,9 +391,9 @@ class Ingest(Workload):
 
 class Lifecycle(Workload):
     primary = "change"
-    rows_per_day = 300
+    rows_per_day = 100
     corrections = 20
-    updates = 2
+    updates = 4
 
     def __init__(self, spark, seed, work, tracer):
         super().__init__(spark, seed, work, tracer)
@@ -417,7 +426,10 @@ class Lifecycle(Workload):
             minmax_cols=["total_amount"],
             distinct_cols=["dropoff_location_id"],
         )
-        self.op(-1)  # warm-up round, its results discarded
+        # no warm-up round: the build already runs the scans, appends and
+        # rollup a round uses, and a round costs more than the rest of the
+        # run's set-up; only the first MERGE is still cold (about 1.5 s
+        # slower than later ones, above the change median either way)
 
     def op(self, i: int) -> OpResult:
         from de_gcp_lakehouse_iceberg_spark.lakehouse import dml, maintenance
@@ -449,7 +461,7 @@ class Lifecycle(Workload):
         for row in fixed + fresh:
             self.model[row[0]] = row
         # 2. UPDATEs anonymizing the drop-offs of a busy pickup location on
-        # one day; two per round, so the statement median sits between
+        # one day; four per round, so the statement median sits between
         # samples of one kind
         changed = 0
         for _ in range(self.updates):
