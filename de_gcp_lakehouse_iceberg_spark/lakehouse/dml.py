@@ -311,7 +311,8 @@ def _net_diff_feed(
 ) -> DataFrame:
     """Fused two-sided multiset diff — the exact feed
     `plus.exceptAll(minus)` tagged INSERT unioned with
-    `minus.exceptAll(plus)` tagged DELETE, computed in ONE aggregation.
+    `minus.exceptAll(plus)` tagged DELETE, computed in ONE aggregation:
+    the weighted core `_net_diff_feed_weighted`, replicated.
 
     Spark itself rewrites EXCEPT ALL as a ±1-tagged union, a count
     aggregation, and row replication (RewriteExceptAll), so running two
@@ -323,42 +324,31 @@ def _net_diff_feed(
     shuffle and one scan of each side (r14, guide §2.3/§2.4: the
     changelog diff was the dominant shuffle of every IVM/CDC lifecycle
     query)."""
-    cols = plus.columns
-    sgn = _uniq("_sgn", cols)
-    net = _uniq("_net", [*cols, sgn])
-    tagged = plus.select(*cols, F.lit(1).alias(sgn)).unionByName(
-        minus.select(*cols, F.lit(-1).alias(sgn))
-    )
-    netted = (
-        tagged.groupBy(*cols)
-        .agg(F.sum(sgn).alias(net))
-        .filter(F.col(net) != 0)
-    )
+    return _replicate(_net_diff_feed_weighted(plus, minus, v, ts_ms))
+
+
+def _replicate(feed: DataFrame) -> DataFrame:
+    """Weighted feed → replicated feed: rows with `_n` = 0 (cancelled
+    values) drop, every other row repeats `_n` times, and `_n` /
+    `_gross` go. The optimizer prunes the unused `_gross` count out of
+    the diff aggregate, leaving one aggregate over the signed sum."""
+    cols = [c for c in feed.columns if c not in ("_n", "_gross")]
     # replication count stays long until the cast; a multiplicity past
     # int range raises instead of silently wrapping (r14 ADVICE) —
     # 2^31 duplicates of ONE row value is a degenerate changelog no
     # consumer could replay anyway
     n_rep = F.when(
-        F.abs(F.col(net)) > F.lit(2147483647),
+        F.col("_n") > F.lit(2147483647),
         F.raise_error(
             F.lit(
                 "changelog: net row multiplicity exceeds int range — "
                 "the change feed cannot replicate one value 2^31 times"
             )
         ).cast("int"),
-    ).otherwise(F.abs(F.col(net)).cast("int"))
-    return netted.select(
-        *cols,
-        F.explode(
-            F.array_repeat(
-                F.when(F.col(net) > 0, F.lit("INSERT")).otherwise(
-                    F.lit("DELETE")
-                ),
-                n_rep,
-            )
-        ).alias("_change_type"),
-        F.lit(v).alias("_change_version"),
-        F.lit(ts_ms).alias("_change_timestamp"),
+    ).otherwise(F.col("_n").cast("int"))
+    rep = F.explode(F.array_repeat("_change_type", n_rep))
+    return feed.filter(F.col("_n") > 0).select(
+        *[rep.alias(c) if c == "_change_type" else c for c in cols]
     )
 
 
@@ -374,14 +364,15 @@ def _uniq(base: str, taken) -> str:
 def _net_diff_feed_weighted(
     plus: DataFrame, minus: DataFrame, v: int, ts_ms: int
 ) -> DataFrame:
-    """The `columns=`-projected form of `_net_diff_feed`: ONE signed
-    aggregation over the projected inputs, emitting ONE row per
-    distinct value with `_n` = |net| (the replicated-feed multiplicity)
-    and `_gross` = n₊ + n₋ (how many input rows of both sides carried
-    the value — the uncancelled feed size, which IVM reports as
-    delta_rows). Values whose net is zero are KEPT (with _n = 0) so
-    Σ_gross equals the projected inputs' total row count exactly; a
-    weighted consumer must scale every per-row contribution by `_n`."""
+    """The one signed-diff core of every changelog diff: ONE signed
+    aggregation over the (possibly `columns=`-projected) inputs,
+    emitting ONE row per distinct value with `_n` = |net| (the
+    replicated-feed multiplicity) and `_gross` = n₊ + n₋ (how many
+    input rows of both sides carried the value — the uncancelled feed
+    size, which IVM reports as delta_rows). Values whose net is zero
+    are KEPT (with _n = 0) so Σ_gross equals the inputs' total row
+    count exactly; a weighted consumer must scale every per-row
+    contribution by `_n`. `_net_diff_feed` is the replicated form."""
     cols = plus.columns
     sgn = _uniq("_sgn", cols)
     net = _uniq("_net", [*cols, sgn])
@@ -444,28 +435,21 @@ def changelog(
         """Tag a filter/one-sided branch: every physical row is one
         feed row (projection never changes a filter's row count), so
         the weighted form carries _n = _gross = 1."""
-        base = _project(df).select(
+        return _project(df).select(
             "*",
             F.lit(kind).alias("_change_type"),
             F.lit(v).alias("_change_version"),
             F.lit(ts).alias("_change_timestamp"),
+            F.lit(1).cast("long").alias("_n"),
+            F.lit(1).cast("long").alias("_gross"),
         )
-        if columns is not None:
-            base = base.select(
-                "*",
-                F.lit(1).cast("long").alias("_n"),
-                F.lit(1).cast("long").alias("_gross"),
-            )
-        return base
 
     def _diff(
         plus: DataFrame, minus: DataFrame, v: int, ts: int
     ) -> DataFrame:
-        if columns is not None:
-            return _net_diff_feed_weighted(
-                _project(plus), _project(minus), v, ts
-            )
-        return _net_diff_feed(plus, minus, v, ts)
+        return _net_diff_feed_weighted(
+            _project(plus), _project(minus), v, ts
+        )
 
     out: DataFrame | None = None
     for v in range(from_version + 1, to_version + 1):
@@ -566,7 +550,9 @@ def changelog(
         out = tagged if out is None else out.unionByName(tagged)
     if out is None:
         raise ValueError("no changes between requested versions")
-    return out
+    # every branch emits the weighted shape; the default feed is its
+    # replication
+    return out if columns is not None else _replicate(out)
 
 
 def apply_changelog(

@@ -292,7 +292,16 @@ class IncrementalRollup:
         Returns {"mode", "delta_rows", "source_version",
         "files_rewritten", "files_total"}. Scans the source ONLY for
         groups whose stored extremum/sketch a delete may have touched
-        (targeted recompute); COUNT/SUM never read the source."""
+        (targeted recompute); COUNT/SUM never read the source.
+
+        `delta_rows` is Σ`_gross` of the weighted feed: every input row
+        of every diffing commit, cancelled or not. It equals the
+        full-width `dml.changelog` row count unless two FULL rows
+        cancel — a generic-diff commit such as a MERGE rewrites the
+        unchanged rows of every file it touches, and each such row
+        counts twice here (removed and re-added) while the full feed
+        drops the pair. It measures the feed work, not the net
+        change."""
         base, last, cur = self._source_cursor()
         if cur == last:
             return {

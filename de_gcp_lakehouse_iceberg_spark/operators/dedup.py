@@ -22,6 +22,8 @@ no driver-side collects, no per-row Python. Scale posture per operator:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
@@ -193,6 +195,21 @@ def doc_shingles(
     return ex
 
 
+def _spread(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, _t) projection of `docs`, spread over at least one
+    partition per core. The signing passes are CPU-bound Arrow work: a
+    low-partition input (one small parquet file, a single-partition
+    cached table) would serialize them onto one core. At real corpus
+    scale inputs arrive many-partitioned and the guard is a no-op."""
+    cpus = docs.sparkSession.sparkContext.defaultParallelism
+    base = docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
+    )
+    if base.rdd.getNumPartitions() < cpus:
+        base = base.repartition(cpus, "doc_id")
+    return base
+
+
 def _signed_keys(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -203,12 +220,7 @@ def _signed_keys(
     the bounded signing cache. This exact plan is shared by the whole
     Jaccard family AND the fan-out estimator, so building it twice
     costs one cache lookup, not a second Arrow pass."""
-    cpus = docs.sparkSession.sparkContext.defaultParallelism
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-    )
-    if base.rdd.getNumPartitions() < cpus:
-        base = base.repartition(cpus, "doc_id")
+    base = _spread(docs, id_col, text_col)
     return _cached_signing(
         base.select("doc_id", doc_keys2_udf(n)(F.col("_t")).alias("keys"))
     )
@@ -296,6 +308,10 @@ def near_dup_pairs(
     route='exact'/'lsh' to force."""
     if route is None:
         route = choose_jaccard_route(docs, id_col, text_col, n)
+    elif route not in ("exact", "lsh"):
+        raise ValueError(
+            f"route must be None, 'exact' or 'lsh', got {route!r}"
+        )
     if route == "lsh":
         return minhash_lsh_pairs(
             docs, id_col, text_col, n,
@@ -370,28 +386,8 @@ def ngram_jaccard_pairs(
         exs = ex.join(sizes, "doc_id")
     if prefix_filter:
         return _jaccard_prefix_filtered(ex, dfc, threshold)
-    a = exs.select(
-        F.col("doc_id").alias("doc_a"), "sh", F.col("nsh").alias("na")
-    )
-    b = exs.select(
-        F.col("doc_id").alias("doc_b"), "sh", F.col("nsh").alias("nb")
-    )
-    eps = 1e-9
     common = (
-        a.join(
-            b,
-            (a["sh"] == b["sh"])
-            & (F.col("doc_a") < F.col("doc_b"))
-            # length filter BEFORE the shuffle-aggregate: J ≥ t implies
-            # t·max(|a|,|b|) ≤ min(|a|,|b|) — rows failing it can never
-            # reach the threshold, so dropping them is exact
-            & (
-                F.least(F.col("na"), F.col("nb")).cast("double")
-                >= F.lit(threshold)
-                * F.greatest(F.col("na"), F.col("nb"))
-                - F.lit(eps)
-            ),
-        )
+        _shared_key_pairs(exs, threshold)
         .groupBy("doc_a", "doc_b", "na", "nb")  # na/nb functionally
         .agg(F.count("*").alias("common"))  # determined by the ids
     )
@@ -401,6 +397,31 @@ def ngram_jaccard_pairs(
     return common.select(
         "doc_a", "doc_b", jac.alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
+
+
+def _shared_key_pairs(ex: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, na, nb), doc_a < doc_b, once per key the two docs
+    share — the inverted-index self-join on (doc_id, nsh, sh) rows.
+    The length filter runs BEFORE any shuffle-aggregate: J ≥ t implies
+    t·max(|a|,|b|) ≤ min(|a|,|b|) — rows failing it can never reach
+    the threshold, so dropping them is exact."""
+    a = ex.select(
+        F.col("doc_id").alias("doc_a"), "sh", F.col("nsh").alias("na")
+    )
+    b = ex.select(
+        F.col("doc_id").alias("doc_b"), "sh", F.col("nsh").alias("nb")
+    )
+    eps = 1e-9
+    return a.join(
+        b,
+        (a["sh"] == b["sh"])
+        & (F.col("doc_a") < F.col("doc_b"))
+        & (
+            F.least(F.col("na"), F.col("nb")).cast("double")
+            >= F.lit(threshold) * F.greatest(F.col("na"), F.col("nb"))
+            - F.lit(eps)
+        ),
+    ).select("doc_a", "doc_b", "na", "nb")
 
 
 def _jaccard_prefix_filtered(
@@ -439,28 +460,7 @@ def _jaccard_prefix_filtered(
             )
         ).alias("sh"),
     )
-    pa = prefix.select(
-        F.col("doc_id").alias("doc_a"), "sh", F.col("nsh").alias("na")
-    )
-    pb = prefix.select(
-        F.col("doc_id").alias("doc_b"), "sh", F.col("nsh").alias("nb")
-    )
-    cand = (
-        pa.join(
-            pb,
-            (pa["sh"] == pb["sh"])
-            & (F.col("doc_a") < F.col("doc_b"))
-            # length filter: J ≥ t ⇒ t·max(|a|,|b|) ≤ min(|a|,|b|)
-            & (
-                F.least(F.col("na"), F.col("nb")).cast("double")
-                >= F.lit(threshold)
-                * F.greatest(F.col("na"), F.col("nb"))
-                - F.lit(eps)
-            ),
-        )
-        .select("doc_a", "doc_b", "na", "nb")
-        .distinct()
-    )
+    cand = _shared_key_pairs(prefix, threshold).distinct()
     kset = ordered.select(
         "doc_id",
         F.transform("_ord", lambda s: s["sh"]).alias("keys"),
@@ -517,102 +517,20 @@ def _char_poly_key(w: Column) -> Column:
     )
 
 
-def _char_poly_batch(strings: list[str]) -> "np.ndarray":
-    """Vectorized char-poly hash of a batch of strings.
-
-    One `''.join` + one UTF-32 encode turns the whole batch into a flat
-    codepoint array at C speed; the polynomial fold then runs as
-    max_len masked numpy passes (vectorized over the batch) instead of
-    per-character interpreted expressions. acc·31 + cp < 2^36 — int64
-    exact, so results equal `_char_poly_key` bit-for-bit."""
-    n = len(strings)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return out
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64, count=n)
-    flat = np.frombuffer(
-        "".join(strings).encode("utf-32-le"), dtype=np.uint32
-    ).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    for j in range(int(lens.max())):
-        valid = lens > j
-        out[valid] = (
-            out[valid] * SIMHASH_BASE + flat[starts[valid] + j]
-        ) % SIMHASH_MOD
-    return out
-
-
-def char_poly_key_udf():
-    """Arrow-batched pandas UDF form of `_char_poly_key` (hot path).
-    NULL in → NULL out, matching the expression form."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def key(s: pd.Series) -> pd.Series:
-        mask = np.asarray(s.isna())
-        vals = pd.array(_char_poly_batch(s.fillna("").tolist()), dtype="Int64")
-        vals[mask] = pd.NA
-        return pd.Series(vals)
-
-    return key
-
-
-# second polynomial family for the 62-bit combined shingle key used by
-# the exact-Jaccard fast path: key = h31(s)·P2 + h37(s) with h37 a
-# base-37 fold mod P2. Two ~31-bit polynomial hashes give a ~2⁻⁶²
-# cross-shingle collision bound — the same class as the xxhash64 join
-# key the slow path used, far beyond any corpus size here.
-JACCARD_BASE2 = 37
-JACCARD_P2 = 2147483629
-
-
-def _char_poly2_batch(strings: list[str]) -> "np.ndarray":
-    """Vectorized dual char-poly hash → combined 62-bit keys.
-    Same masked-pass structure as `_char_poly_batch`, two accumulators
-    per pass; acc·37 + cp < 2^37 and h1·P2 + h2 < 2^63 — int64 exact."""
-    n = len(strings)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64, count=n)
-    flat = np.frombuffer(
-        "".join(strings).encode("utf-32-le"), dtype=np.uint32
-    ).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    h1 = np.zeros(n, dtype=np.int64)
-    h2 = np.zeros(n, dtype=np.int64)
-    for j in range(int(lens.max()) if n else 0):
-        valid = lens > j
-        cp = flat[starts[valid] + j]
-        h1[valid] = (h1[valid] * SIMHASH_BASE + cp) % SIMHASH_MOD
-        h2[valid] = (h2[valid] * JACCARD_BASE2 + cp) % JACCARD_P2
-    return h1 * JACCARD_P2 + h2
-
-
-def _batch_shingles(texts: list, n: int) -> tuple[list[str], "np.ndarray"]:
-    """Flattened per-doc distinct n-token shingles + per-doc counts —
-    mirrors functions.text.shingles/tokens exactly (split on single
-    space keeps empties; range(max(len-n,0)+1) windows; array_distinct
-    keeps first occurrence)."""
-    all_sh: list[str] = []
-    counts = np.zeros(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        if t is None:
-            continue
-        toks = t.split(" ")
-        upper = max(len(toks) - n, 0)
-        sh = [" ".join(toks[i0 : i0 + n]) for i0 in range(upper + 1)]
-        sh = list(dict.fromkeys(sh))  # array_distinct semantics
-        all_sh.extend(sh)
-        counts[i] = len(sh)
-    return all_sh, counts
-
-
 def _char_poly_fams(
     strings: list[str], fams: tuple
 ) -> list["np.ndarray"]:
-    """Char-poly hashes of a batch for SEVERAL (base, mod) families in
-    one flat-codepoint pass (the `_char_poly_batch` masked fold,
-    generalized — one UTF-32 encode shared by all families)."""
+    """Vectorized char-poly hashes of a batch of strings, one array per
+    (base, mod) family — the one masked fold every Arrow signing path
+    runs on.
+
+    One `''.join` + one UTF-32 encode turns the whole batch into a flat
+    codepoint array at C speed; the polynomial fold then runs as
+    max_len masked numpy passes (vectorized over the batch, every
+    family in the same pass) instead of per-character interpreted
+    expressions. acc·base + cp < 2^37 — int64 exact, so the
+    (SIMHASH_BASE, SIMHASH_MOD) family equals `_char_poly_key`
+    bit-for-bit."""
     n = len(strings)
     outs = [np.zeros(n, dtype=np.int64) for _ in fams]
     if n == 0:
@@ -630,17 +548,84 @@ def _char_poly_fams(
     return outs
 
 
+# second polynomial family for the 62-bit combined shingle key used by
+# the exact-Jaccard fast path: key = h31(s)·P2 + h37(s) with h37 a
+# base-37 fold mod P2. Two ~31-bit polynomial hashes give a ~2⁻⁶²
+# cross-shingle collision bound — the same class as the xxhash64 join
+# key the slow path used, far beyond any corpus size here.
+JACCARD_BASE2 = 37
+JACCARD_P2 = 2147483629
+
 _SPACE_CP = 32  # ord(' ') — the shingle separator's codepoint
 
 _FAMS1 = ((SIMHASH_BASE, SIMHASH_MOD),)
 _FAMS2 = ((SIMHASH_BASE, SIMHASH_MOD), (JACCARD_BASE2, JACCARD_P2))
 
 
+def _pack_keys(hs: list["np.ndarray"], fams: tuple) -> "np.ndarray":
+    """One key per string from per-family hashes: the single family's
+    hash, or the combined 62-bit key h1·P2 + h2 for `_FAMS2`
+    (h1 < 2^31, h2 < P2 — int64 exact)."""
+    if len(fams) == 1:
+        return hs[0]
+    return hs[0] * fams[1][1] + hs[1]
+
+
+def _token_hashes(texts: list, fams: tuple) -> tuple:
+    """Split every text into tokens and char-poly-hash each token ONCE.
+    Python's str.split(" ") keeps empties, like Spark's
+    split(text, ' '). Returns (tokens flattened over the batch,
+    per-text token counts, per-family token hashes); a count is 0 only
+    for None, since "" splits to [""]."""
+    toks: list[str] = []
+    counts = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        if t is not None:
+            words = t.split(" ")
+            toks.extend(words)
+            counts[i] = len(words)
+    return toks, counts, _char_poly_fams(toks, fams)
+
+
+# Memoized pandas UDFs, one object per (kind, params) key: repeated
+# plans share the SAME UDF object, so identical logical plans let
+# Spark's cache manager (and `_cached_signing`) substitute a cached
+# signing stage across queries.
+_UDF_CACHE: dict = {}
+_UDF_LOCK = __import__("threading").Lock()
+
+
+def _memo_udf(key: tuple, return_type: str, fn):
+    """The pandas UDF for `key`: wraps `fn` on first use, then returns
+    that same object on every later call."""
+    from pyspark.sql.functions import pandas_udf
+
+    with _UDF_LOCK:
+        if key not in _UDF_CACHE:
+            _UDF_CACHE[key] = pandas_udf(fn, return_type)
+        return _UDF_CACHE[key]
+
+
+def char_poly_key_udf():
+    """Arrow-batched pandas UDF form of `_char_poly_key` (hot path).
+    NULL in → NULL out, matching the expression form."""
+
+    def key(s: pd.Series) -> pd.Series:
+        mask = np.asarray(s.isna())
+        vals = pd.array(
+            _char_poly_fams(s.fillna("").tolist(), _FAMS1)[0], dtype="Int64"
+        )
+        vals[mask] = pd.NA
+        return pd.Series(vals)
+
+    return _memo_udf(("charpoly",), "long", key)
+
+
 def _window_keys_batch(texts: list, n: int, fams: tuple) -> list:
     """Per-doc n-token-window shingle keys WITHOUT building the shingle
-    strings (r13: the q88/q90/q37 signing ceiling — `_batch_shingles`'
-    per-position `" ".join` allocated ~n× the corpus text in Python and
-    char-hashed the duplicated bytes).
+    strings (r13: the q88/q90/q37 signing ceiling — a per-position
+    `" ".join` allocated ~n× the corpus text in Python and char-hashed
+    the duplicated bytes).
 
     EXACT modular composition replaces string construction: for the
     char-poly fold h(s) = fold((acc·B + cp) % P) over s's codepoints,
@@ -654,25 +639,14 @@ def _window_keys_batch(texts: list, n: int, fams: tuple) -> list:
     them unchanged. Intermediates stay < 2^62 (g < P ≤ 2^31, shift
     < 2^31), int64-exact like the Column form.
 
-    Per-doc semantics mirror `_batch_shingles` minus its string-level
-    dedup (callers np.unique the keys — the same set): docs with ≥ n
-    tokens yield one key per window in position order; docs with
-    1..n−1 tokens yield the whole-text fallback shingle's key; None
-    yields empty. Cross-doc windows are computed by the global fold
-    but never selected (the q72 rewrite's pattern)."""
-    ndocs = len(texts)
-    all_toks: list[str] = []
-    tok_counts = np.zeros(ndocs, dtype=np.int64)
-    is_none = np.zeros(ndocs, dtype=bool)
-    for i, t in enumerate(texts):
-        if t is None:
-            is_none[i] = True
-            continue
-        toks = t.split(" ")
-        all_toks.extend(toks)
-        tok_counts[i] = len(toks)
+    Per-doc semantics mirror functions.text.shingles minus its
+    array_distinct (callers np.unique the keys — the same set): docs
+    with ≥ n tokens yield one key per window in position order; docs
+    with 1..n−1 tokens yield the whole-text fallback shingle's key;
+    None yields empty. Cross-doc windows are computed by the global
+    fold but never selected (the q72 rewrite's pattern)."""
+    all_toks, tok_counts, hs = _token_hashes(texts, fams)
     total = len(all_toks)
-    hs = _char_poly_fams(all_toks, fams)
     lens = np.fromiter((len(s) for s in all_toks), dtype=np.int64, count=total)
     maxlen = int(lens.max()) if total else 0
     pws = []
@@ -700,7 +674,7 @@ def _window_keys_batch(texts: list, n: int, fams: tuple) -> list:
             np.remainder(g, mod, out=g)
         gs.append(g)
     starts_tok = np.concatenate(([0], np.cumsum(tok_counts)))
-    short_idx = np.nonzero((~is_none) & (tok_counts < n))[0]
+    short_idx = np.nonzero((tok_counts > 0) & (tok_counts < n))[0]
     sks = []
     for h, pw, (base, mod) in zip(hs, pws, fams):
         if len(short_idx) == 0:
@@ -714,19 +688,14 @@ def _window_keys_batch(texts: list, n: int, fams: tuple) -> list:
             kk = (k[sel] * base + _SPACE_CP) % mod
             k[sel] = (kk * pw[st[sel] + j] + h[st[sel] + j]) % mod
         sks.append(k)
-    if len(fams) == 1:
-        gkey, skey = gs[0], sks[0]
-    else:  # combined 62-bit key — same packing as _char_poly2_batch
-        gkey = gs[0] * fams[1][1] + gs[1]
-        skey = sks[0] * fams[1][1] + sks[1]
+    gkey, skey = _pack_keys(gs, fams), _pack_keys(sks, fams)
     spos = {int(d): i for i, d in enumerate(short_idx)}
     out: list = []
-    for i in range(ndocs):
-        if is_none[i]:
-            out.append(np.empty(0, np.int64))
-            continue
+    for i in range(len(texts)):
         m = int(tok_counts[i])
-        if m >= n:
+        if m == 0:  # None text
+            out.append(np.empty(0, np.int64))
+        elif m >= n:
             st = int(starts_tok[i])
             out.append(gkey[st : st + m - n + 1])
         else:
@@ -745,45 +714,17 @@ def _doc_keys2_batch(texts: list, n: int) -> list:
     ]
 
 
-_UDF_CACHE: dict = {}
-
-
-def _char_poly2_pair_batch(
-    strings: list[str],
-) -> tuple["np.ndarray", "np.ndarray"]:
-    """`_char_poly2_batch`'s two accumulators, returned SEPARATELY —
-    for callers that keep folding (the positional gram-key fold) before
-    combining into the 62-bit key."""
-    n = len(strings)
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64, count=n)
-    flat = np.frombuffer(
-        "".join(strings).encode("utf-32-le"), dtype=np.uint32
-    ).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    h1 = np.zeros(n, dtype=np.int64)
-    h2 = np.zeros(n, dtype=np.int64)
-    for j in range(int(lens.max()) if n else 0):
-        valid = lens > j
-        cp = flat[starts[valid] + j]
-        h1[valid] = (h1[valid] * SIMHASH_BASE + cp) % SIMHASH_MOD
-        h2[valid] = (h2[valid] * JACCARD_BASE2 + cp) % JACCARD_P2
-    return h1, h2
-
-
-# token-level fold bases for the positional gram key (distinct from the
-# char bases so a token sequence never aliases a character sequence)
-_GRAM_TOKB1 = 1000003
-_GRAM_TOKB2 = 999983
+# token-level fold bases for the positional gram key, one per `_FAMS2`
+# family (distinct from the char bases so a token sequence never
+# aliases a character sequence)
+_GRAM_TOKB = (1000003, 999983)
 
 
 def doc_gram_keys_udf(n: int = 3):
     """text → ORDERED (non-distinct) 62-bit n-gram keys, one per start
     position (array index == position). Docs with fewer than n tokens
     yield an empty array — dup_span_stats' semantics (a short doc has
-    no n-gram), which differs from `_batch_shingles`' whole-text
+    no n-gram), which differs from the shingle keys' whole-text
     fallback shingle. One Arrow pass per batch; memoized per n.
 
     r13 rewrite (the q72 sf3 ceiling): instead of BUILDING every
@@ -799,36 +740,21 @@ def doc_gram_keys_udf(n: int = 3):
     polynomial folds collide (~2⁻⁶², the class already accepted for
     the char-poly key). Measured: the signing pass drops ~3× at sf3
     (SCALE.md "q72 gram-key signing rewrite")."""
-    key = ("gramkeys", n)
-    if key in _UDF_CACHE:
-        return _UDF_CACHE[key]
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<long>")
     def f(s: pd.Series) -> pd.Series:
         texts = s.tolist()
-        all_toks: list[str] = []
-        tok_counts = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if t is None:
-                continue
-            toks = t.split(" ")
-            all_toks.extend(toks)
-            tok_counts[i] = len(toks)
-        t1, t2 = _char_poly2_pair_batch(all_toks)
-        total = len(all_toks)
-        m_all = total - n + 1  # global window count (incl. cross-doc)
+        toks, tok_counts, hs = _token_hashes(texts, _FAMS2)
+        m_all = len(toks) - n + 1  # global window count (incl. cross-doc)
         if m_all > 0:
-            g1 = t1[:m_all].copy()
-            g2 = t2[:m_all].copy()
-            for j in range(1, n):
-                np.multiply(g1, _GRAM_TOKB1, out=g1)
-                np.add(g1, t1[j : m_all + j], out=g1)
-                np.remainder(g1, SIMHASH_MOD, out=g1)
-                np.multiply(g2, _GRAM_TOKB2, out=g2)
-                np.add(g2, t2[j : m_all + j], out=g2)
-                np.remainder(g2, JACCARD_P2, out=g2)
-            g = g1 * JACCARD_P2 + g2
+            gs = []
+            for h, tokb, (_, mod) in zip(hs, _GRAM_TOKB, _FAMS2):
+                g = h[:m_all].copy()
+                for j in range(1, n):
+                    np.multiply(g, tokb, out=g)
+                    np.add(g, h[j : m_all + j], out=g)
+                    np.remainder(g, mod, out=g)
+                gs.append(g)
+            g = _pack_keys(gs, _FAMS2)
         bounds = np.concatenate(([0], np.cumsum(tok_counts)))
         out: list = []
         for i in range(len(texts)):
@@ -840,28 +766,19 @@ def doc_gram_keys_udf(n: int = 3):
                 out.append(g[st : st + m].tolist())
         return pd.Series(out)
 
-    _UDF_CACHE[key] = f
-    return f
+    return _memo_udf(("gramkeys", n), "array<long>", f)
 
 
 def doc_keys2_udf(n: int = 3):
     """text → sorted distinct combined shingle keys (array<long>) in
-    one Arrow pass. Memoized per n so repeated plans share the SAME
-    UDF object — identical logical plans let Spark's cache manager
-    substitute a cached signing stage across queries."""
-    key = ("keys2", n)
-    if key in _UDF_CACHE:
-        return _UDF_CACHE[key]
-    from pyspark.sql.functions import pandas_udf
+    one Arrow pass. Memoized per n (see `_memo_udf`)."""
 
-    @pandas_udf("array<long>")
     def f(s: pd.Series) -> pd.Series:
         return pd.Series(
             [k.tolist() for k in _doc_keys2_batch(s.tolist(), n)]
         )
 
-    _UDF_CACHE[key] = f
-    return f
+    return _memo_udf(("keys2", n), "array<long>", f)
 
 
 def _doc_keys_sig_batch(
@@ -871,9 +788,9 @@ def _doc_keys_sig_batch(
 
     Shingle construction mirrors functions.text.shingles/tokens exactly
     (split on single space keeps empties — Python str.split(" ") matches
-    Spark split(text, ' ')), and keys are _char_poly_batch — so every
-    integer equals the exploded expression path bit-for-bit, which is
-    what keeps the DuckDB oracle reproducing this pipeline. The
+    Spark split(text, ' ')), and keys are the `_FAMS1` char-poly family
+    — so every integer equals the exploded expression path bit-for-bit,
+    which is what keeps the DuckDB oracle reproducing this pipeline. The
     signature fold is ONE (flat_keys × num_hashes) int64 matmul-shaped
     pass + np.minimum.reduceat per batch — no per-doc Python loops in
     the hash math. r13: keys come from the string-free window fold
@@ -924,15 +841,9 @@ def doc_keys_sig_udf(n: int = 3, num_hashes: int = 64):
     """text → struct(keys: sorted distinct char-poly shingle keys,
     sig: MinHash signature) in one Arrow pass. NULL/empty-shingle docs
     get empty keys and NULL sig (they cannot pair anyway). Memoized
-    per (n, num_hashes) — see doc_keys2_udf."""
-    ck = ("keyssig", n, num_hashes)
-    if ck in _UDF_CACHE:
-        return _UDF_CACHE[ck]
-    from pyspark.sql.functions import pandas_udf
-
+    per (n, num_hashes) — see `_memo_udf`."""
     coeffs = minhash_coeffs(num_hashes)
 
-    @pandas_udf("keys array<long>, sig array<long>")
     def f(s: pd.Series) -> pd.DataFrame:
         keys, sigs = _doc_keys_sig_batch(s.tolist(), n, coeffs)
         return pd.DataFrame(
@@ -942,8 +853,9 @@ def doc_keys_sig_udf(n: int = 3, num_hashes: int = 64):
             }
         )
 
-    _UDF_CACHE[ck] = f
-    return f
+    return _memo_udf(
+        ("keyssig", n, num_hashes), "keys array<long>, sig array<long>", f
+    )
 
 
 def simhash(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
@@ -979,89 +891,16 @@ def simhash(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
     )
 
 
-def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Connected components over a near-dup pair graph — the "keep one
     doc per duplicate cluster" primitive that turns pairwise Jaccard
-    output into a dedup decision.
+    output into a dedup decision. Returns (doc_id, cluster_id) with
+    cluster_id = min doc id reachable.
 
-    Iterative min-label propagation: every node starts labelled with its
-    own id; each round replaces a node's label with the min over itself
-    and its neighbors' labels. Converges in O(graph diameter) rounds —
-    near-dup clusters are shallow (pairs share shingles transitively),
-    so a handful of rounds suffice; `max_iter` bounds pathological
-    chains. Each round is one join + one groupBy; labels persist per
-    round and the previous round unpersists, so peak state is two label
-    sets of O(#nodes-in-pairs). Convergence is detected with sum(label)
-    (strictly decreasing while any label changes). At 100 TB the same
-    loop holds — swap in the alternating large-star/small-star variant
-    if a single component's edge list skews one reducer.
-
-    Returns (doc_id, cluster_id) with cluster_id = min doc id reachable.
-    """
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = (
-        fwd.unionByName(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint per round (not just persist): without truncating
-    # the lineage, round N's plan nests all N-1 prior plans and analysis
-    # time grows geometrically — see dup_clusters_star for the measured
-    # effect.
-    def _ckpt_with_sum(lb: DataFrame, tag: str):
-        # convergence sum observed on the checkpoint job itself (r14 —
-        # same fusion as dup_clusters_star): the separate per-round
-        # agg job re-read every label for a control-flow scalar
-        from pyspark.sql import Observation
-
-        # anonymous Observation: a fixed name repeats across calls in
-        # one session and adds nothing — each instance is independent
-        # (r14 ADVICE); `tag` stays for the job-description reader
-        del tag
-        obs = Observation()
-        lb = lb.observe(obs, F.sum("label").alias("s")).localCheckpoint()
-        return lb, obs.get["s"]
-
-    labels, prev_sum = _ckpt_with_sum(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id")),
-        "cc_labels_0",
-    )
-    for i in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["doc_id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels, cur_sum = _ckpt_with_sum(
-            labels.join(
-                neighbor_min, labels["doc_id"] == neighbor_min["src"], "left"
-            ).select(
-                F.col("doc_id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            ),
-            f"cc_labels_{i + 1}",
-        )
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Skew-safe connected components: alternating large-star /
-    small-star (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public algorithm, re-expressed as DataFrame ops).
-
-    Same contract as `dup_clusters` (doc_id → min reachable id), built
-    for the case that breaks min-label propagation at scale: one viral
+    Skew-safe: alternating large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm, re-expressed as DataFrame ops), built for the case that
+    breaks min-label propagation at scale: one viral
     duplicate cluster whose edge list lands on one reducer. Each
     round's per-node min is an ALGEBRAIC aggregate (map-side combine
     flattens hub keys before the shuffle), the join back is
@@ -1127,7 +966,9 @@ def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         # pure control-flow overhead, now free.
         from pyspark.sql import Observation
 
-        # anonymous Observation — see _ckpt_with_sum (r14 ADVICE)
+        # anonymous Observation: a fixed name repeats across calls in
+        # one session and adds nothing — each instance is independent
+        # (r14 ADVICE); `tag` stays for the job-description reader
         del tag
         obs = Observation()
         e = e.observe(
@@ -1170,27 +1011,18 @@ def simhash_fast(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
     polynomial fold, then a segmented reduce for the per-doc bit votes.
     This is the 10 TB-of-text form; the expression `simhash()` stays as
     the DuckDB-oracle shape and the equality anchor (tests/test_dedup)."""
-    from pyspark.sql.functions import pandas_udf
-
     masks = (1 << np.arange(bits)).astype(np.int64)
 
-    @pandas_udf("long")
     def sig(texts: pd.Series) -> pd.Series:
         if len(texts) == 0:
             return pd.Series(pd.array([], dtype="Int64"))
         na = np.asarray(texts.isna())
-        toks_per_doc = [
-            ("" if t is None else t).split(" ") for t in texts.tolist()
-        ]
-        counts = np.fromiter(
-            (len(t) for t in toks_per_doc), dtype=np.int64,
-            count=len(toks_per_doc),
-        )
-        flat = [w for toks in toks_per_doc for w in toks]
-        keys = _char_poly_batch(flat)
+        # NULL hashes as '' (masked back to NULL below); '' splits to
+        # [''] so every doc owns ≥1 token and no reduceat segment below
+        # is empty
+        _, counts, (keys,) = _token_hashes(texts.fillna("").tolist(), _FAMS1)
         # ±1 vote per (token, bit), summed per doc with a segmented
-        # reduce over the contiguous token runs ('' splits to [''] so
-        # every doc owns ≥1 token — reduceat segments are never empty)
+        # reduce over the contiguous token runs
         votes_tok = (
             ((keys[:, None] & masks[None, :]) != 0).astype(np.int64) * 2 - 1
         )
@@ -1202,7 +1034,7 @@ def simhash_fast(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
         return pd.Series(out)
 
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return sig(c)
+    return _memo_udf(("simhash", bits), "long", sig)(c)
 
 
 def simhash_pairs(
@@ -1211,7 +1043,7 @@ def simhash_pairs(
     """Candidate near-dup pairs with identical SimHash — an equality
     self-join on the signature (hash join, no fan-out)."""
     sigs = docs.select(
-        F.col(id_col).alias("doc_id"), simhash(text_col).alias("sig")
+        F.col(id_col).alias("doc_id"), simhash_fast(text_col).alias("sig")
     )
     a, b = sigs.alias("a"), sigs.alias("b")
     return a.join(
@@ -1222,6 +1054,38 @@ def simhash_pairs(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
         F.col("a.sig").alias("sig"),
+    )
+
+
+def _is_portable(hash_mode: str) -> bool:
+    """True for the portable MinHash family, False for xxhash64 — the
+    one place a `hash_mode` value is checked; anything else raises."""
+    if hash_mode not in ("xxhash64", "portable"):
+        raise ValueError(
+            f"hash_mode must be 'xxhash64' or 'portable', got {hash_mode!r}"
+        )
+    return hash_mode == "portable"
+
+
+def _minhash_agg(
+    rows: DataFrame, key: Column, num_hashes: int, hash_mode: str
+) -> DataFrame:
+    """(doc_id, signature): per doc, the min over its rows' `key` of
+    each family member — (A_k·key + B_k) mod P for the portable family
+    (key must be a char-poly long), xxhash64(key, seed=k) otherwise.
+    A narrow projection + one groupBy(doc_id)."""
+    if _is_portable(hash_mode):
+        hs = [
+            (F.lit(a) * key + F.lit(b)) % F.lit(MINHASH_P)
+            for a, b in minhash_coeffs(num_hashes)
+        ]
+    else:
+        hs = [F.xxhash64(key, F.lit(k)) for k in range(num_hashes)]
+    return rows.groupBy("doc_id").agg(
+        *[F.min(h).alias(f"h{k}") for k, h in enumerate(hs)]
+    ).select(
+        "doc_id",
+        F.array(*[f"h{k}" for k in range(num_hashes)]).alias("signature"),
     )
 
 
@@ -1246,23 +1110,194 @@ def minhash_signatures(
       math, slightly more CPU (one interpreted char fold per shingle).
     """
     ex = doc_shingles(docs, id_col, text_col, n, max_df)
-    if hash_mode == "portable":
-        # vectorized UDF == expression fold exactly (integer math); the
-        # 64 (A·key+B) mod P projections stay JVM-side Column arithmetic
-        key = char_poly_key_udf()(F.col("shingle"))
-        mins = [
-            F.min((F.lit(a) * key + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{k}")
-            for k, (a, b) in enumerate(minhash_coeffs(num_hashes))
-        ]
-    else:
-        mins = [
-            F.min(F.xxhash64(F.col("shingle"), F.lit(k))).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-    sig = ex.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[f"h{k}" for k in range(num_hashes)]).alias("signature")
+    # portable: vectorized UDF == expression fold exactly (integer
+    # math); the (A·key+B) mod P projections stay JVM-side Column
+    # arithmetic
+    key = (
+        char_poly_key_udf()(F.col("shingle"))
+        if _is_portable(hash_mode)
+        else F.col("shingle")
     )
+    return _minhash_agg(ex, key, num_hashes, hash_mode)
+
+
+class _Side(NamedTuple):
+    """One side of an LSH join (see `_lsh_side`)."""
+
+    pinned: DataFrame  # persisted rows; the caller unpersists them
+    sig: DataFrame  # (doc_id, signature)
+    sets: DataFrame | None  # (doc_id, sh) distinct key arrays
+
+
+def _index_side(index: DataFrame) -> _Side:
+    """`_lsh_side` of (doc_id, keys, sig) rows — a `signature_index`
+    result or a stored index: pinned as-is, the stored arrays serve
+    both the banding and the verify."""
+    dk = index.persist()
+    return _Side(
+        dk,
+        dk.select("doc_id", F.col("sig").alias("signature")),
+        dk.select("doc_id", F.col("keys").alias("sh")),
+    )
+
+
+def _lsh_side(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    hash_mode: str,
+    max_df: int | None = None,
+) -> _Side:
+    """One side of an LSH join. `sets` is None when the verify must
+    collect the key sets from `pinned`'s (doc_id, key) rows.
+
+    Portable without `max_df` is the fast path: ONE Arrow pass per doc
+    (`signature_index`) computes the distinct shingle keys AND the full
+    signature (numpy, bit-identical to the exploded expression form —
+    asserted in tests). No explode, no per-shingle shuffle, no
+    collect_set: the only shuffles left are the banding join and the
+    verify joins. Persisted MEMORY_AND_DISK (spills, not OOMs, at
+    corpus scale) — the persist is what lets the verify stage reuse
+    the pass instead of re-running the UDF, and block-level locking
+    makes a banding self-join's two branches share one computation.
+
+    General path (xxhash mode / max_df cap): explode+hash once, shared
+    by the signature agg AND the verify stage. Persisted — without
+    this a banding self-join re-runs the whole subtree once PER ALIAS
+    and the verify stage a third time (measured 3x the pipeline cost
+    at sf0.1)."""
+    if _is_portable(hash_mode) and max_df is None:
+        return _index_side(
+            signature_index(
+                _spread(docs, id_col, text_col), "doc_id", "_t", n, num_hashes
+            )
+        )
+    ex = doc_shingles(docs, id_col, text_col, n, max_df)
+    key = (
+        char_poly_key_udf()(F.col("shingle"))
+        if _is_portable(hash_mode)
+        else F.xxhash64("shingle")
+    )
+    keyed = ex.select("doc_id", key.alias("key")).persist()
+    return _Side(
+        keyed, _minhash_agg(keyed, F.col("key"), num_hashes, hash_mode), None
+    )
+
+
+def _bands(sig: DataFrame, bands: int, r: int, hash_mode: str) -> DataFrame:
+    """(doc_id, band_id, band_hash): one bucket row per signature band
+    of rows_per_band `r` members — what the LSH join matches on."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(bi).alias("band_id"),
+                    band_hash_col("signature", bi, r, hash_mode).alias(
+                        "band_hash"
+                    ),
+                )
+                for bi in range(bands)
+            ])
+        ).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_hash")
+
+
+def _candidate_sets(side: _Side, ids: DataFrame) -> DataFrame:
+    """(doc_id, sh) distinct key sets of the side's docs listed in
+    `ids`. The broadcast ships only candidate DOC IDS (8 bytes each),
+    never key arrays, and lands BELOW any groupBy/collect_set, so the
+    verify shuffles candidate docs' keys, not the whole corpus's. The
+    id count is bounded by band collisions — the LSH contract; a
+    pathological input where everything collides with everything
+    inflates it toward |a|·|b| ids, where Spark's 10 MB broadcast
+    threshold refuses long before memory is at risk and the join
+    degrades gracefully to a shuffled left_semi. Deliberately not
+    capped harder. (With max_df the document-frequency cap still
+    counts over the FULL corpus — it is applied during the explode,
+    before the candidate scoping.)"""
+    if side.sets is not None:
+        # the per-doc key array IS the distinct set already
+        return side.sets.join(F.broadcast(ids), "doc_id", "left_semi")
+    return (
+        side.pinned.join(F.broadcast(ids), "doc_id", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_set("key").alias("sh"))
+    )
+
+
+def _lsh_verify(
+    side_a: _Side,
+    side_b: _Side,
+    cols: tuple[str, str],
+    bands: int,
+    r: int,
+    hash_mode: str,
+    threshold: float,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidates, verified) for two `_lsh_side`s: bucket join on
+    (band_id, band_hash) → distinct candidate pairs named `cols`
+    (persisted and materialized here) → exact shingle-set Jaccard ≥
+    threshold on those pairs only. The same side passed twice is the
+    symmetric self-join: pairs come ordered a < b, and one key-set
+    scope serves both columns."""
+    a, b = cols
+    self_join = side_b is side_a
+    band_a = _bands(side_a.sig, bands, r, hash_mode)
+    if self_join:
+        # `band_a` (#docs x bands rows of three longs — narrow at any
+        # corpus size) is pinned while the candidates materialize, so
+        # the self-join computes the signature once per side from the
+        # persisted side rows instead of replaying explode+hash; then
+        # the band index is dropped — only the side rows (verify
+        # input) and the candidates stay pinned.
+        band_a = band_b = band_a.persist()
+    else:
+        band_b = _bands(side_b.sig, bands, r, hash_mode)
+    la, lb = band_a.alias("l"), band_b.alias("r")
+    on = (F.col("l.band_id") == F.col("r.band_id")) & (
+        F.col("l.band_hash") == F.col("r.band_hash")
+    )
+    if self_join:
+        on = on & (F.col("l.doc_id") < F.col("r.doc_id"))
+    candidates = (
+        la.join(lb, on)
+        .select(F.col("l.doc_id").alias(a), F.col("r.doc_id").alias(b))
+        .distinct()
+        # the candidate set feeds several subtrees (pair output and the
+        # id scopes of both sides); without persisting, Spark re-runs
+        # the whole signature+banding pipeline once per consumer.
+        # Candidates are small by construction (that is the point of
+        # banding), so pinning them is bounded at any corpus size.
+        .persist()
+    )
+    candidates.count()
+    if self_join:
+        band_a.unpersist()
+
+    def ids(c: str) -> DataFrame:
+        return candidates.select(F.col(c).alias("doc_id"))
+
+    if self_join:
+        sets_a = sets_b = _candidate_sets(
+            side_a, ids(a).unionByName(ids(b)).distinct()
+        )
+    else:
+        sets_a = _candidate_sets(side_a, ids(a).distinct())
+        sets_b = _candidate_sets(side_b, ids(b).distinct())
+    sa = sets_a.select(F.col("doc_id").alias(a), F.col("sh").alias("_sa"))
+    sb = sets_b.select(F.col("doc_id").alias(b), F.col("sh").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    union = F.size("_sa") + F.size("_sb") - inter
+    verified = (
+        candidates.join(sa, a)
+        .join(sb, b)
+        .select(a, b, (inter.cast("double") / union).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+    return candidates, verified
 
 
 def minhash_lsh_pairs(
@@ -1300,154 +1335,12 @@ def minhash_lsh_pairs(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
-    r = num_hashes // bands
-    dk = keyed = None
-    if hash_mode == "portable" and max_df is None:
-        # Fast path: ONE Arrow pass per doc computes the distinct shingle
-        # keys AND the full signature (numpy, bit-identical to the
-        # exploded expression form — asserted in tests). No explode, no
-        # per-shingle shuffle, no collect_set: the only shuffles left in
-        # the whole operator are the banding self-join and the verify
-        # joins. Persisted MEMORY_AND_DISK (spills, not OOMs, at corpus
-        # scale) and RELEASED before returning — the persist is what
-        # lets the verify stage reuse the pass instead of re-running the
-        # UDF, and block-level locking makes the banding self-join's two
-        # branches share one computation.
-        fast_base = docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-        )
-        # The signature pass is CPU-bound Arrow work: a low-partition
-        # input (one small parquet file, a single-partition cached
-        # table) would serialize it onto one core — spread it first.
-        # At real corpus scale inputs arrive many-partitioned and this
-        # guard is a no-op.
-        cpus = docs.sparkSession.sparkContext.defaultParallelism
-        if fast_base.rdd.getNumPartitions() < cpus:
-            fast_base = fast_base.repartition(cpus, "doc_id")
-        dk = (
-            fast_base.select(
-                "doc_id",
-                doc_keys_sig_udf(n, num_hashes)(F.col("_text")).alias("ks"),
-            )
-            .select("doc_id", "ks.keys", "ks.sig")
-            .filter(F.size("keys") > 0)
-            .persist()
-        )
-        sig = dk.select("doc_id", F.col("sig").alias("signature"))
-        sets_src = dk.select("doc_id", F.col("keys").alias("sh"))
-    else:
-        # General path (xxhash mode / max_df cap): explode+hash once,
-        # shared by the signature agg AND the verify stage. Persisted —
-        # without this the banding self-join re-runs the whole subtree
-        # once PER ALIAS and the verify stage a third time (measured 3x
-        # the pipeline cost at sf0.1).
-        ex = doc_shingles(docs, id_col, text_col, n, max_df)
-        if hash_mode == "portable":
-            key_expr = char_poly_key_udf()(F.col("shingle"))
-        else:
-            key_expr = F.xxhash64("shingle")
-        keyed = ex.select("doc_id", key_expr.alias("key")).persist()
-        mins = [
-            (
-                F.min((F.lit(a) * F.col("key") + F.lit(b)) % F.lit(MINHASH_P))
-                if hash_mode == "portable"
-                else F.min(F.xxhash64(F.col("key"), F.lit(k)))
-            ).alias(f"h{k}")
-            for k, (a, b) in enumerate(minhash_coeffs(num_hashes))
-        ]
-        sig = keyed.groupBy("doc_id").agg(*mins).select(
-            "doc_id",
-            F.array(*[f"h{k}" for k in range(num_hashes)]).alias("signature"),
-        )
-        sets_src = None
-
-    def band_hash(bi: int):
-        members = [F.col("signature")[bi * r + j] for j in range(r)]
-        if hash_mode == "portable":
-            # left fold (…(h0·M + h1)·M + h2…) mod P — members are < P so
-            # every intermediate stays < 2^52
-            acc = members[0]
-            for m in members[1:]:
-                acc = (acc * F.lit(MINHASH_BAND_MULT) + m) % F.lit(MINHASH_P)
-            return acc
-        return F.xxhash64(*members)
-
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_id"),
-                        band_hash(bi).alias("band_hash"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash").persist()
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        # the candidate set feeds THREE subtrees (pair output, doc_a ids,
-        # doc_b ids); without persisting, Spark re-runs the whole
-        # signature+banding pipeline once per consumer. Candidates are
-        # small by construction (that is the point of banding), so
-        # pinning them is bounded at any corpus size.
-        .persist()
+    side = _lsh_side(
+        docs, id_col, text_col, n, num_hashes, hash_mode, max_df
     )
-    # materialize candidates NOW, while `banded` (#docs x bands rows of
-    # three longs — narrow at any corpus size) is pinned so the self-join
-    # computes the signature agg once per side from the persisted `keyed`
-    # instead of replaying explode+hash; then drop the band index — only
-    # `keyed` (verify input) and `candidates` stay pinned.
-    candidates.count()
-    banded.unpersist()
-    # exact-verify ONLY the candidate pairs — and build shingle-key sets
-    # ONLY for docs that appear in a candidate pair: the broadcast
-    # semi-join lands BELOW the groupBy/collect_set, so the verify stage
-    # shuffles #candidate-docs' keys, not the whole corpus's. (With
-    # max_df the document-frequency cap still counts over the FULL
-    # corpus — the cap is applied during the explode, before the
-    # candidate scoping.)
-    cand_ids = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    if sets_src is not None:
-        # fast path: the per-doc key array IS the distinct set already —
-        # no explode, no collect_set, just a semi-join to scope it
-        sets = sets_src.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    else:
-        sets = (
-            keyed.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-            .select("doc_id", F.col("key").alias("shingle"))
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("sh"))
-        )
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    verified = (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    candidates, verified = _lsh_verify(
+        side, side, ("doc_a", "doc_b"),
+        bands, num_hashes // bands, hash_mode, threshold,
     )
     if release:
         # Materialize the verified pairs — small by construction,
@@ -1461,7 +1354,7 @@ def minhash_lsh_pairs(
         verified = verified.persist()
         verified.count()
         candidates.unpersist()
-        (dk if dk is not None else keyed).unpersist()
+        side.pinned.unpersist()
     return verified
 
 
@@ -1492,12 +1385,7 @@ def dup_span_stats(
     pattern; measured ~2x on the q72 path). The q72 oracle replays the
     same grouping on the strings, identical barring ~2⁻⁶² collisions.
     """
-    cpus = docs.sparkSession.sparkContext.defaultParallelism
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-    )
-    if base.rdd.getNumPartitions() < cpus:
-        base = base.repartition(cpus, "doc_id")
+    base = _spread(docs, id_col, text_col)
     # per-doc ORDERED (non-distinct) n-gram keys; docs shorter than n
     # have none — posexplode turns the array index into the position
     grams = base.select(
@@ -1541,10 +1429,11 @@ def dup_span_stats(
 
 
 def band_hash_col(sig_col: str, bi: int, r: int, hash_mode: str) -> Column:
-    """Band hash of signature members [bi·r, bi·r+r) — the same fold
-    minhash_lsh_pairs uses (portable: left fold ·MULT + m mod P)."""
+    """Band hash of signature members [bi·r, bi·r+r) — the fold every
+    LSH banding uses (portable: left fold (…(h0·M + h1)·M + h2…) mod P;
+    members are < P so every intermediate stays < 2^52)."""
     members = [F.col(sig_col)[bi * r + j] for j in range(r)]
-    if hash_mode == "portable":
+    if _is_portable(hash_mode):
         acc = members[0]
         for m in members[1:]:
             acc = (acc * F.lit(MINHASH_BAND_MULT) + m) % F.lit(MINHASH_P)
@@ -1561,12 +1450,12 @@ def signature_index(
 ) -> DataFrame:
     """Persistable per-document signature rows for the PORTABLE MinHash
     family: (doc_id, keys: sorted distinct char-poly shingle keys,
-    sig: MinHash signature). One Arrow pass per partition — the exact
-    dataset `lsh_probe_pairs(hash_mode="portable")` derives internally,
-    factored out so a deployment can MAINTAIN it as a table
-    (lakehouse/dedup_index.SignatureIndex) instead of re-signing the
-    corpus on every incoming batch. Empty/None-text docs are dropped
-    (no shingles ⇒ can never pair)."""
+    sig: MinHash signature). One Arrow pass per partition — the one
+    portable signer: `minhash_lsh_pairs` and `lsh_probe_pairs` derive
+    exactly this dataset internally, and a deployment can MAINTAIN it
+    as a table (lakehouse/dedup_index.SignatureIndex) instead of
+    re-signing the corpus on every incoming batch. Empty/None-text
+    docs are dropped (no shingles ⇒ can never pair)."""
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -1614,136 +1503,30 @@ def lsh_probe_pairs(
         raise ValueError(
             "exactly one of corpus_docs / corpus_index must be given"
         )
-    if corpus_index is not None and hash_mode != "portable":
+    if corpus_index is not None and not _is_portable(hash_mode):
         raise ValueError(
             "corpus_index stores the portable family — pass "
             'hash_mode="portable"'
         )
-    r = num_hashes // bands
-    cpus = new_docs.sparkSession.sparkContext.defaultParallelism
-
-    def _keyed_sig(docs: DataFrame):
-        """(keyed-or-arrays df, sig df, sets-source df) for one side.
-        Portable mode uses the ONE-Arrow-pass fast path (keys + full
-        signature per doc — no explode, no per-shingle shuffle; the
-        same path minhash_lsh_pairs measured 2x+ on)."""
-        if hash_mode == "portable":
-            base = docs.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-            )
-            if base.rdd.getNumPartitions() < cpus:
-                base = base.repartition(cpus, "doc_id")
-            dk = (
-                base.select(
-                    "doc_id",
-                    doc_keys_sig_udf(n, num_hashes)(F.col("_t")).alias("ks"),
-                )
-                .select("doc_id", "ks.keys", "ks.sig")
-                .filter(F.size("keys") > 0)
-                .persist()
-            )
-            sig = dk.select("doc_id", F.col("sig").alias("signature"))
-            sets_src = dk.select("doc_id", F.col("keys").alias("sh"))
-            return dk, sig, sets_src
-        ex = doc_shingles(docs, id_col, text_col, n)
-        keyed = ex.select(
-            "doc_id", F.xxhash64("shingle").alias("key")
-        ).persist()
-        mins = [
-            F.min(F.xxhash64(F.col("key"), F.lit(k))).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-        sig = keyed.groupBy("doc_id").agg(*mins).select(
-            "doc_id",
-            F.array(*[f"h{k}" for k in range(num_hashes)]).alias("signature"),
-        )
-        return keyed, sig, None
-
-    def _bands(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(bi).alias("band_id"),
-                        band_hash_col("signature", bi, r, hash_mode).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for bi in range(bands)
-                ])
-            ).alias("band"),
-        ).select("doc_id", "band.band_id", "band.band_hash")
-
-    keyed_new, sig_new, sets_new = _keyed_sig(new_docs)
+    side_new = _lsh_side(
+        new_docs, id_col, text_col, n, num_hashes, hash_mode
+    )
     if corpus_index is not None:
-        dk_cor = (
-            corpus_index.select("doc_id", "keys", "sig")
-            .filter(F.size("keys") > 0)
-            .persist()
+        side_cor = _index_side(
+            corpus_index.select("doc_id", "keys", "sig").filter(
+                F.size("keys") > 0
+            )
         )
-        keyed_cor = dk_cor
-        sig_cor = dk_cor.select("doc_id", F.col("sig").alias("signature"))
-        sets_cor = dk_cor.select("doc_id", F.col("keys").alias("sh"))
     else:
-        keyed_cor, sig_cor, sets_cor = _keyed_sig(corpus_docs)
-    nb = _bands(sig_new).alias("n")
-    cb = _bands(sig_cor).alias("c")
-    candidates = (
-        nb.join(
-            cb,
-            (F.col("n.band_id") == F.col("c.band_id"))
-            & (F.col("n.band_hash") == F.col("c.band_hash")),
+        side_cor = _lsh_side(
+            corpus_docs, id_col, text_col, n, num_hashes, hash_mode
         )
-        .select(
-            F.col("n.doc_id").alias("new_id"),
-            F.col("c.doc_id").alias("corpus_id"),
-        )
-        .distinct()
-        .persist()
+    candidates, verified = _lsh_verify(
+        side_new, side_cor, ("new_id", "corpus_id"),
+        bands, num_hashes // bands, hash_mode, threshold,
     )
-    candidates.count()
-
-    def _sets(keyed: DataFrame, sets_src, ids: DataFrame) -> DataFrame:
-        # The broadcast below ships only candidate DOC IDS (8 bytes
-        # each), never key arrays: bounded by O(batch × band
-        # collisions) ids — the incremental-batch contract. A
-        # pathological batch where everything collides with everything
-        # inflates this toward |batch|·|corpus| ids; at the default
-        # 10 MB broadcast threshold Spark would refuse long before
-        # memory is at risk, and dropping the hint degrades gracefully
-        # to a shuffled left_semi. Deliberately not capped harder.
-        if sets_src is not None:
-            # fast path: the per-doc key array IS the distinct set
-            return sets_src.join(F.broadcast(ids), "doc_id", "left_semi")
-        return (
-            keyed.join(F.broadcast(ids), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("key").alias("sh"))
-        )
-
-    sn = _sets(
-        keyed_new, sets_new,
-        candidates.select(F.col("new_id").alias("doc_id")).distinct(),
-    ).select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n"))
-    sc = _sets(
-        keyed_cor, sets_cor,
-        candidates.select(F.col("corpus_id").alias("doc_id")).distinct(),
-    ).select(F.col("doc_id").alias("corpus_id"), F.col("sh").alias("sh_c"))
-    inter = F.size(F.array_intersect(F.col("sh_n"), F.col("sh_c")))
-    union = F.size("sh_n") + F.size("sh_c") - inter
-    verified = (
-        candidates.join(sn, "new_id")
-        .join(sc, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .persist()
-    )
+    verified = verified.persist()
     verified.count()
-    for df in (candidates, keyed_new, keyed_cor):
+    for df in (candidates, side_new.pinned, side_cor.pinned):
         df.unpersist()
     return verified

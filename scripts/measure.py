@@ -1,12 +1,15 @@
-"""Round-15 measurement harness: time individual queries in a
-bench-identical session (warm-up + table/shingle cache) and capture
-their `.explain("formatted")` plans.
+"""Measurement harness: time individual queries in a bench-identical
+session (warm-up + table/shingle cache) and capture their
+`.explain("formatted")` plans.
 
 Usage:
-  python scripts/r15_measure.py time q108_source_overlap_matrix q112_... \
+  python scripts/measure.py time q108_source_overlap_matrix q112_... \
       [--runs 3] [--sf /root/testdata/sf0.1]
-  python scripts/r15_measure.py explain q108_source_overlap_matrix \
+  python scripts/measure.py explain q108_source_overlap_matrix \
       [--out plans/r15/q108_before.txt]
+
+Explain mode prints the plans to stdout, or writes the one query's plan
+to `--out`.
 
 `time` mirrors bench.py's methodology (collect(), min-of-N, same
 session shape) so numbers are comparable to the ledger; `explain`
@@ -25,13 +28,13 @@ def _bench_session(sf_dir: str):
     from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
     from de_gcp_lakehouse_iceberg_spark.session import get_spark
 
-    spark = get_spark("r15-measure")
+    spark = get_spark("measure")
     # bench-identical warm-up: JVM/codegen, Python worker pool, caches
     QUERIES["q01_global_count"](spark, sf_dir).collect()
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import col, pandas_udf
 
-    import scripts.r15_measure as _self  # noqa: F401 (module-scope UDF)
+    import scripts.measure as _self  # noqa: F401 (module-scope UDF)
 
     _warm = pandas_udf(_udf_identity, "long")
     spark.range(1_000_000).repartition(64).select(_warm(col("id"))).count()
@@ -60,10 +63,11 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=None)
-    ap.add_argument("--suffix", default="plan",
-                    help="plans/r15/<qNN>_<suffix>.txt for explain mode")
+    ap.add_argument("--out", default=None,
+                    help="explain mode: write the plan of ONE query here")
     args = ap.parse_args()
+    if args.out and len(args.queries) > 1:
+        ap.error("--out takes the plan of one query")
 
     from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
 
@@ -75,16 +79,16 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            out = args.out or (
-                f"plans/r15/{name.split('_')[0]}_{args.suffix}.txt"
-            )
-            with open(out, "w") as f:
+            if args.out is None:
+                print(f"# {name}\n{plan}")
+                continue
+            with open(args.out, "w") as f:
                 f.write(plan)
-            print(f"# wrote {out} ({len(plan)} bytes)")
+            print(f"# wrote {args.out} ({len(plan)} bytes)")
         return
 
     for name in args.queries:
-        spark.sparkContext.setJobDescription(f"r15: {name}")
+        spark.sparkContext.setJobDescription(f"measure: {name}")
         best, first = None, None
         for i in range(args.runs):
             t0 = time.perf_counter()

@@ -1,12 +1,18 @@
 """Dedup operator semantics: exact dedup winner selection, Jaccard
-correctness, SimHash determinism, and the LSH-vs-exact recall gap that
-the driver's rows-only check can't see."""
+correctness, SimHash determinism, the LSH-vs-exact recall gap that
+a rows-only check can't see, option validation, and the
+near-dup route chooser (the corpus-clean stage must auto-route to the
+scale-safe LSH path when the exact inverted-index join's fan-out goes
+quadratic, and the router's estimate must be the real Σ df² of the
+join the exact route would run)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.operators import dedup
+from de_gcp_lakehouse_iceberg_spark.operators.corpus import clean_corpus
 from de_gcp_lakehouse_iceberg_spark.tables import table
 
 
@@ -339,14 +345,170 @@ def test_window_keys_match_string_built_shingle_keys():
             " ".join(toks[i : i + n])
             for i in range(max(len(toks) - n, 0) + 1)
         ]
-        return (
-            dedup._char_poly2_batch(sh)
-            if dual
-            else dedup._char_poly_batch(sh)
-        )
+        fams = dedup._FAMS2 if dual else dedup._FAMS1
+        return dedup._pack_keys(dedup._char_poly_fams(sh, fams), fams)
 
     for n in (2, 3, 5):
         for fams, dual in ((dedup._FAMS1, False), (dedup._FAMS2, True)):
             got = dedup._window_keys_batch(texts, n, fams)
             for t, g in zip(texts, got):
                 assert np.array_equal(g, built(t, n, dual)), (n, dual, t)
+
+
+def test_simhash_pairs_equal_shared_expression_simhash(spark, sf_dir):
+    """simhash_pairs (on the Arrow `simhash_fast`) pairs exactly the
+    docs whose expression-form `simhash` values are equal — NULL text
+    has no signature and pairs with nothing."""
+    docs = table(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    )
+    planted = spark.createDataFrame(
+        [(-1, "same words here"), (-2, "same words here"), (-3, None)],
+        "doc_id long, text string",
+    )
+    docs = docs.unionByName(planted)
+    by_sig: dict = {}
+    for r in docs.select("doc_id", dedup.simhash("text").alias("s")).collect():
+        if r.s is not None:
+            by_sig.setdefault(r.s, []).append(r.doc_id)
+    want = {
+        (a, b) for ids in by_sig.values() for a in ids for b in ids if a < b
+    }
+    got = {(r.doc_a, r.doc_b) for r in dedup.simhash_pairs(docs).collect()}
+    assert (-2, -1) in want
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda d: dedup.minhash_signatures(d, hash_mode="Portable"),
+        lambda d: dedup.minhash_lsh_pairs(d, hash_mode="Portable"),
+        lambda d: dedup.lsh_probe_pairs(d, d, hash_mode="Portable"),
+        lambda d: dedup.band_hash_col("signature", 0, 2, "Portable"),
+        lambda d: dedup.near_dup_pairs(d, route="LSH"),
+    ],
+    ids=[
+        "minhash_signatures", "minhash_lsh_pairs", "lsh_probe_pairs",
+        "band_hash_col", "near_dup_pairs",
+    ],
+)
+def test_unknown_option_values_raise(spark, call):
+    """A mistyped hash_mode / route raises instead of silently running
+    the xxhash64 family or the exact route."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="'Portable'|'LSH'"):
+        call(docs)
+
+
+# -- near-dup route chooser ---------------------------------------------
+
+def _docs(spark, texts):
+    return spark.createDataFrame(
+        [(i, t, "en") for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string",
+    )
+
+
+def _varied(n):
+    """Heaps-ish corpus: every doc has its own vocabulary → df ≈ 1."""
+    return [
+        " ".join(f"w{i}_{j}" for j in range(12)) for i in range(n)
+    ]
+
+
+def _saturated(n):
+    """3-word vocabulary: every trigram ubiquitous → Σ df² ≈ rows²."""
+    words = ["aa", "bb", "cc"]
+    return [
+        " ".join(words[(i + j) % 3] for j in range(12)) for i in range(n)
+    ]
+
+
+def test_fanout_stats_match_exact_join(spark):
+    """Σ df² from the estimator == the brute-force count over the
+    exploded shingle table (same keys the exact join shuffles)."""
+    docs = _docs(spark, _varied(20) + _saturated(10))
+    rows, df2 = dedup.shingle_fanout_stats(docs)
+    ex = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                dedup.doc_keys2_udf(3)(F.col("text"))
+            )
+        ).alias("sh"),
+    )
+    brute = (
+        ex.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .agg(
+            F.sum("d").alias("rows"),
+            F.sum(F.col("d") * F.col("d")).alias("df2"),
+        )
+        .first()
+    )
+    assert rows == brute["rows"]
+    assert df2 == float(brute["df2"])
+
+
+def test_route_chooser_flips_on_saturation(spark):
+    varied = _docs(spark, _varied(200))
+    saturated = _docs(spark, _saturated(200))
+    assert dedup.choose_jaccard_route(varied) == "exact"
+    assert dedup.choose_jaccard_route(saturated) == "lsh"
+    # empty corpus: defined, exact (nothing to join either way)
+    empty = _docs(spark, []).filter(F.lit(False))
+    assert dedup.choose_jaccard_route(empty) == "exact"
+
+
+def test_clean_corpus_auto_routes_and_matches_forced_routes(spark):
+    """On a saturated corpus the default (auto) pipeline must take the
+    LSH route AND return the exact route's survivor set — planted dups
+    sit far above threshold, where banded-LSH recall ≈ 1."""
+    texts = _saturated(60)
+    # plant two exact-ish near-dup pairs with distinctive vocabulary
+    base = "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12"
+    texts += [base, base + " x13", "y1 y2 y3 y4 y5 y6 y7 y8"]
+    docs = _docs(spark, texts)
+    assert dedup.choose_jaccard_route(docs) == "lsh"
+
+    auto = {r["doc_id"] for r in clean_corpus(docs).collect()}
+    lsh = {r["doc_id"] for r in clean_corpus(docs, use_lsh=True).collect()}
+    exact = {r["doc_id"] for r in clean_corpus(docs, use_lsh=False).collect()}
+    assert auto == lsh == exact
+    assert len(auto) > 0
+
+
+def test_clean_corpus_auto_keeps_exact_at_gate_scale(spark, sf_dir):
+    """Gate-scale fixtures stay BELOW the fan-out threshold:
+    the default route is the exact oracle-verified baseline (q44's
+    hash gate keeps meaning what it meant)."""
+    docs = table(spark, sf_dir, "documents")
+    kept = docs.filter(F.col("lang").isin(["en", "de", "fr"]))
+    assert dedup.choose_jaccard_route(kept) == "exact"
+
+
+def test_near_dup_pairs_routes_agree(spark):
+    """The routed pair source returns the SAME (doc_a, doc_b) set on
+    both routes — the invariant that lets q53/q97/q44 keep their exact
+    oracles while auto-routing at scale."""
+    texts = _saturated(80)
+    base = "p1 p2 p3 p4 p5 p6 p7 p8 p9 p10 p11 p12"
+    texts += [base, base + " p13", base.replace("p1 ", "p1 p1 ")]
+    docs = _docs(spark, texts)
+    exact = {
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.near_dup_pairs(docs, route="exact").collect()
+    }
+    lsh = {
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.near_dup_pairs(docs, route="lsh").collect()
+    }
+    auto = {
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.near_dup_pairs(docs).collect()
+    }
+    assert exact == lsh == auto
+    assert len(exact) > 0

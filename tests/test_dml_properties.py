@@ -402,3 +402,22 @@ def test_net_diff_feed_equals_two_sided_exceptall(spark):
     assert (None, "n") not in types
     assert types[(4, None)] == ["INSERT"]
     assert types[(5, "x")] == ["DELETE"]
+
+
+def test_net_diff_feed_plan_is_one_signed_sum_aggregate(spark):
+    """The default (replicated) feed is the weighted core with its
+    unused `_gross` count pruned: ONE aggregate (partial + final),
+    over the signed sum only."""
+    from de_gcp_lakehouse_iceberg_spark.lakehouse.dml import _net_diff_feed
+
+    plus = spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string")
+    minus = spark.createDataFrame([(1, "a")], "k int, s string")
+    plan = (
+        _net_diff_feed(plus, minus, 1, 0)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    aggs = [ln for ln in plan.splitlines() if "HashAggregate" in ln]
+    assert len(aggs) == 2, plan
+    assert all("count" not in ln and "sum(" in ln for ln in aggs), plan

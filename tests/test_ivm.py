@@ -680,3 +680,40 @@ def test_join_rollup_broadcast_is_size_gated(spark, tmp_path, monkeypatch):
     res = ru.refresh()
     assert res["mode"] == "delta"
     _assert_join_matches(ru, fact, dim)
+
+
+def test_delta_rows_counts_rewritten_rows_a_merge_cancels(spark, tmp_path):
+    """`delta_rows` is Σ`_gross`: on a generic-diff MERGE commit it
+    counts the rewritten unchanged rows that the full-width feed
+    cancels as whole rows, so it exceeds that feed's row count by
+    twice the rewritten-unchanged rows (the refresh docstring's
+    contract)."""
+    t = LakeTable.create(spark, str(tmp_path / "base"))
+    row = lambda lo, hi, v: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g"), v.alias("v")
+    )
+    t.append(row(0, 60, F.col("id") * 1.5).coalesce(1))  # one file
+    ru = IncrementalRollup.create(
+        spark, str(tmp_path / "ru"), t, group_cols=["g"], sum_cols=["v"]
+    )
+    v0 = t.current_version()
+    # keys 55-59 match and update, 60-64 insert; the merge rewrites the
+    # one file, carrying keys 0-54 over unchanged
+    dml.merge(
+        t, row(55, 65, F.lit(-1.0)), ["k"],
+        when_matched_update={"v": "source.v"},
+    )
+    v1 = t.current_version()
+    assert t.snapshot().operation == "merge"
+    gross = (
+        dml.changelog(t, v0, v1, columns=["g", "v"])
+        .agg(F.sum("_gross"))
+        .first()[0]
+    )
+    full = dml.changelog(t, v0, v1).count()
+    assert gross == 60 + 65  # every removed and added row
+    assert full == 5 + 5 + 5  # updated pairs + inserts
+    res = ru.refresh()
+    assert res["mode"] == "delta"
+    assert res["delta_rows"] == gross == full + 2 * 55
+    _assert_matches_recompute(ru, t)

@@ -82,9 +82,9 @@ def test_pack_chunks_invariants(spark, sf_dir_medium):
 
 
 def test_dup_clusters_matches_bruteforce_components(spark):
-    """Label propagation must equal the true connected components on a
+    """dup_clusters_star must equal the true connected components on a
     graph with a chain, a triangle, an isolated pair — including a chain
-    long enough to need several propagation rounds."""
+    long enough to need several rounds."""
     pairs = [
         # chain 1-2-3-4-5 (diameter 4)
         (1, 2), (2, 3), (3, 4), (4, 5),
@@ -95,7 +95,8 @@ def test_dup_clusters_matches_bruteforce_components(spark):
     ]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
-        r.doc_id: r.cluster_id for r in dedup.dup_clusters(df).collect()
+        r.doc_id: r.cluster_id
+        for r in dedup.dup_clusters_star(df).collect()
     }
     assert got == {
         1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
@@ -106,12 +107,16 @@ def test_dup_clusters_matches_bruteforce_components(spark):
 
 def test_dup_clusters_empty_pairs(spark):
     df = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert dedup.dup_clusters(df).count() == 0
+    assert dedup.dup_clusters_star(df).count() == 0
+    # self-pairs carry no edge: still no clusters
+    loops = spark.createDataFrame([(1, 1), (2, 2)], "doc_a long, doc_b long")
+    assert dedup.dup_clusters_star(loops).count() == 0
 
 
 def test_dup_clusters_star_matches_label_propagation(spark):
     """large-star/small-star (the skew-safe scale path) must produce the
-    exact same labelling as min-label propagation on a mixed graph."""
+    exact same labelling as min-label propagation on a mixed graph —
+    run here in plain Python as the reference."""
     pairs = [
         (1, 2), (2, 3), (3, 4), (4, 5),        # chain, diameter 4
         (10, 11), (11, 12), (10, 12),          # triangle
@@ -119,7 +124,15 @@ def test_dup_clusters_star_matches_label_propagation(spark):
         (30, 31), (31, 32), (30, 33), (33, 34) # tree
     ]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    lp = {r.doc_id: r.cluster_id for r in dedup.dup_clusters(df).collect()}
+    lp = {u: u for e in pairs for u in e}
+    changed = True
+    while changed:  # every node takes the min label over its edges
+        changed = False
+        for u, v in pairs:
+            m = min(lp[u], lp[v])
+            if (lp[u], lp[v]) != (m, m):
+                lp[u] = lp[v] = m
+                changed = True
     star = {
         r.doc_id: r.cluster_id for r in dedup.dup_clusters_star(df).collect()
     }
