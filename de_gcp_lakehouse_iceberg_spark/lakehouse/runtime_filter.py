@@ -25,7 +25,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from .table import LakeTable
+from .table import LakeTable, _normalize_where, _plan_row_groups
 
 DEFAULT_MAX_KEYS = 100_000
 
@@ -67,10 +67,9 @@ def scan_with_join_filter(
     stats/bloom/partition pruning per key; `info` reports
     {files_total, files_planned, n_keys} so callers (and the q91
     pruning proof) can assert the skip actually happened."""
-    import os
-
     keys = harvest_keys(dim, dim_col or fact_col, max_keys)
-    where = [(fact_col, "in", keys)]
+    # sorted ONCE: planning and row-group refinement share the key set
+    where = _normalize_where([(fact_col, "in", keys)])
     # Plan ONCE. When the snapshot carries a columnar manifest sidecar
     # (≥ PARQUET_MANIFEST_MIN files), pruning runs as a Spark job —
     # sorted-key range intersection + bloom probes per manifest batch on
@@ -78,54 +77,21 @@ def scan_with_join_filter(
     # driver. plan_files_distributed falls back to the driver loop for
     # small snapshots; results are identical by construction (same
     # per-entry `_file_survives`).
-    snap0 = fact.snapshot()
-    if os.path.exists(fact._parquet_manifest_path(snap0.version)):
-        snap, planned = fact.plan_files_distributed(
-            version=snap0.version, where=where
-        )
-    else:
-        snap, planned = fact.plan_files(
-            version=snap0.version, where=where
-        )
+    snap, planned = fact.plan_files_distributed(where=where)
     # Row-group refinement: surviving files whose manifest entries
     # carry per-row-group stats are narrowed to the groups the key set
     # can actually touch (the `in` op binary-searches each group's
     # [min,max] — same decision as file level, finer floor on bytes
-    # read). Delete-free snapshots only; the sorted-key candidates
-    # machinery makes each group's check O(log keys + keys-in-range).
-    from .table import _normalize_where, _rg_survives
-
-    rg_total = rg_read = 0
-    plans: list = []
-    preds = _normalize_where(where)
-    if not snap.deletes:
-        for f in planned:
-            if f.rg_stats is None:
-                plans.append((f, None))
-                rg_total += 1
-                rg_read += 1
-                continue
-            idx = [
-                i
-                for i, st in enumerate(f.rg_stats)
-                if _rg_survives(st, preds)
-            ]
-            rg_total += len(f.rg_stats)
-            rg_read += len(idx)
-            if idx:
-                plans.append((f, idx))
-    if not snap.deletes and rg_read < rg_total:
-        df = fact._apply_exact_where(
-            fact._read_planned_row_groups(snap, plans), where
-        )
+    # read). Delete-free snapshots only: the MOR read path owns files
+    # under pending deletes.
+    plans, rg = _plan_row_groups([] if snap.deletes else planned, where)
+    if rg["rowgroups_read"] < rg["rowgroups_total"]:
+        df = fact._read_planned_row_groups(snap, plans)
     else:
-        df = fact._apply_exact_where(
-            fact._read_files(snap, [f.path for f in planned]), where
-        )
-    return df, {
-        "files_total": len(snap0.files),
+        df = fact._read_files(snap, [f.path for f in planned])
+    return fact._apply_exact_where(df, where), {
+        "files_total": len(snap.files),
         "files_planned": len(planned),
         "n_keys": len(keys),
-        "rowgroups_total": rg_total,
-        "rowgroups_read": rg_read,
+        **rg,
     }

@@ -83,81 +83,83 @@ def _stat_value(v):
     return None
 
 
-def _footer_stats(meta) -> dict[str, list]:
-    """Aggregate per-column [min, max] across a parquet file's row
-    groups — the exact metadata Iceberg manifests carry, harvested for
-    free from footers (no data scan). Columns with missing/partial
-    statistics are omitted (⇒ never pruned on)."""
-    acc: dict[str, list] = {}
-    dead: set[str] = set()
-    for rg in range(meta.num_row_groups):
-        for ci in range(meta.num_columns):
-            col = meta.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if name in dead or name.startswith("_p_"):
-                continue
-            st = col.statistics
-            try:
-                lo = (
-                    _stat_value(st.min)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-                hi = (
-                    _stat_value(st.max)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-            except Exception:  # noqa: BLE001 — pyarrow raises
-                # ArrowNotImplementedError for types it cannot extract
-                # (e.g. DECIMAL); those columns simply carry no stats
-                lo = hi = None
-            if lo is None or hi is None:
-                dead.add(name)
-                acc.pop(name, None)
-                continue
-            if name in acc:
-                acc[name][0] = min(acc[name][0], lo)
-                acc[name][1] = max(acc[name][1], hi)
-            else:
-                acc[name] = [lo, hi]
-    return acc
+def _write_json_atomic(path: str, obj) -> None:
+    """Replace `path` with `obj` as JSON; readers never see a partial
+    file."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(path + ".tmp", path)
 
 
 def _footer_rg_stats(meta) -> list[dict[str, list]]:
     """Per-ROW-GROUP [min, max] stats — the granularity below the
     manifest's per-file stats (Iceberg carries the same idea as split
     offsets + column sizes; Parquet footers give it for free). One dict
-    per row group, same value conventions as `_footer_stats`; a column
+    per row group, values as `_stat_value` makes them; a column
     missing from a group's dict carries no stats there (⇒ that group is
     never pruned on it). Size: O(row-groups × prunable columns) per
-    file — the same order as the footer itself, fine for manifests."""
+    file — the same order as the footer itself, fine for manifests.
+    The ONE walk over a footer: file-level stats fold these
+    (`_fold_rg_stats`)."""
     out: list[dict[str, list]] = []
     for rg in range(meta.num_row_groups):
+        group = meta.row_group(rg)
         acc: dict[str, list] = {}
         for ci in range(meta.num_columns):
-            col = meta.row_group(rg).column(ci)
+            col = group.column(ci)
             name = col.path_in_schema
             if name.startswith("_p_"):
                 continue
             st = col.statistics
             try:
-                lo = (
-                    _stat_value(st.min)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-                hi = (
-                    _stat_value(st.max)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-            except Exception:  # noqa: BLE001 — pyarrow stat extraction
-                lo = hi = None
+                if st is None or not st.has_min_max:
+                    continue
+                lo, hi = _stat_value(st.min), _stat_value(st.max)
+            except Exception:  # noqa: BLE001 — pyarrow raises
+                # ArrowNotImplementedError for types it cannot extract
+                # (e.g. DECIMAL); those columns simply carry no stats
+                continue
             if lo is not None and hi is not None:
                 acc[name] = [lo, hi]
         out.append(acc)
     return out
+
+
+def _fold_rg_stats(rg_stats: list[dict[str, list]]) -> dict[str, list]:
+    """File-level [min, max] per column — the exact metadata Iceberg
+    manifests carry — folded from the row-group stats: min of mins,
+    max of maxes. A column missing from ANY group's stats is omitted
+    (partial stats ⇒ never pruned on at file level)."""
+    if not rg_stats:
+        return {}
+    out: dict[str, list] = {}
+    for name in rg_stats[0]:
+        if all(name in g for g in rg_stats):
+            out[name] = [
+                min(g[name][0] for g in rg_stats),
+                max(g[name][1] for g in rg_stats),
+            ]
+    return out
+
+
+def _map_footers(paths: list[str], fn: Callable) -> list:
+    """`fn(path, footer)` for every parquet file, each footer read
+    fresh from storage (a read validates the file's magic bytes and
+    metadata). Footer reads are per-file independent and I/O-bound
+    (pyarrow releases the GIL on the read) — a partitioned load
+    landing hundreds of files per commit fans out over threads instead
+    of paying a serial driver loop."""
+    import pyarrow.parquet as pq
+
+    def _one(p: str):
+        return fn(p, pq.ParquetFile(p).metadata)
+
+    if len(paths) > 4:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+            return list(ex.map(_one, paths))
+    return [_one(p) for p in paths]
 
 
 _PRUNE_OPS = {"=", "==", "<", "<=", ">", ">=", "in"}
@@ -237,7 +239,7 @@ def _stats_may_match(stats: dict, col: str, op: str, value) -> bool:
     """Conservative [min,max]-stats pruning for ONE conjunct: False
     ONLY when the stats PROVE no matching row (NULLs never satisfy
     these comparisons, so bounds over non-null values are sufficient).
-    Shared by file-level (`_file_may_match`) and row-group-level
+    Shared by file-level (`_file_survives`) and row-group-level
     (`_rg_survives`) skipping — same decision, different granularity."""
     s = stats.get(col)
     if s is None:
@@ -246,6 +248,12 @@ def _stats_may_match(stats: dict, col: str, op: str, value) -> bool:
     v = _stat_value(value)
     if v is None or (type(v) is str) != (type(lo) is str):
         return True  # incomparable — keep the file
+    if lo != lo or hi != hi or v != v:
+        # NaN bound or value: Spark orders NaN above every double (and
+        # NaN = NaN holds), while parquet writers record it as a plain
+        # min/max — [1.0, NaN] for 1.0, 3.0, NaN — on which Python's
+        # comparisons are all False. Nothing is proven; keep it.
+        return True
     if op in ("=", "=="):
         return lo <= v <= hi
     if op == "<":
@@ -259,8 +267,33 @@ def _stats_may_match(stats: dict, col: str, op: str, value) -> bool:
     return True
 
 
-def _file_may_match(entry: "FileEntry", col: str, op: str, value) -> bool:
-    return _stats_may_match(entry.stats, col, op, value)
+def _conjunction_survives(
+    stats: dict,
+    where: list[tuple[str, str, Any]] | None,
+    one: Callable[[str, str, Any], bool],
+) -> bool:
+    """The conjunction loop of every pruning granularity: a container
+    (file or row group) with `stats` survives iff each conjunct passes
+    `one(col, op, value)`. An `in` conjunct — the join-driven runtime
+    filter (FR-008 pushdown analog), whose value is a bounded key SET
+    harvested from a dimension-side query — passes iff SOME key passes
+    the full `one(col, "=", key)` check, so a key passing stats in one
+    file and bloom in another never keeps a third. The sorted-key range
+    intersection narrows the probes to keys inside the container's
+    [min, max] FIRST (binary search), so per-key work is
+    O(keys-in-range), not O(keys)."""
+    for col, op, value in where or []:
+        if op not in _PRUNE_OPS:
+            raise ValueError(f"unsupported prune op {op!r}")
+        if op == "in":
+            sk = value if isinstance(value, _SortedKeys) else _SortedKeys(value)
+            if not any(
+                one(col, "=", k) for k in sk.candidates(stats.get(col))
+            ):
+                return False
+        elif not one(col, op, value):
+            return False
+    return True
 
 
 def _rg_survives(
@@ -269,21 +302,9 @@ def _rg_survives(
     """Row-group survival under a conjunction — stats-only (bloom and
     partition-transform pruning are file-level and already applied by
     the time row groups are considered)."""
-    for col, op, value in where or []:
-        if op == "in":
-            sk = (
-                value
-                if isinstance(value, _SortedKeys)
-                else _SortedKeys(value)
-            )
-            if not any(
-                _stats_may_match(stats, col, "=", k)
-                for k in sk.candidates(stats.get(col))
-            ):
-                return False
-        elif not _stats_may_match(stats, col, op, value):
-            return False
-    return True
+    return _conjunction_survives(
+        stats, where, lambda c, op, v: _stats_may_match(stats, c, op, v)
+    )
 
 
 def _file_survives(
@@ -301,7 +322,7 @@ def _file_survives(
 
     def _one(col: str, op: str, value) -> bool:
         """Survival under a single scalar conjunct."""
-        if not _file_may_match(entry, col, op, value):
+        if not _stats_may_match(entry.stats, col, op, value):
             return False
         # bloom skipping: equality probes on high-cardinality columns
         # where [min,max] can't prune (lakehouse/bloom.py)
@@ -320,26 +341,33 @@ def _file_survives(
                 return False
         return True
 
-    for col, op, value in where or []:
-        if op not in _PRUNE_OPS:
-            raise ValueError(f"unsupported prune op {op!r}")
-        if op == "in":
-            # join-driven runtime filter (FR-008 pushdown analog): the
-            # value is a bounded key SET harvested from a dimension-side
-            # query. The file survives iff SOME key could live in it —
-            # each key runs the FULL per-key check (stats ∧ bloom ∧
-            # partition transforms) so a key passing stats in one file
-            # and bloom in another never keeps a third. The sorted-key
-            # range intersection narrows the per-key probes to keys
-            # inside the file's [min, max] FIRST (binary search), so
-            # bloom/transform work is O(keys-in-range), not O(keys).
-            sk = value if isinstance(value, _SortedKeys) else _SortedKeys(value)
-            if not any(_one(col, "=", k) for k in sk.candidates(entry.stats.get(col))):
-                return False
+    return _conjunction_survives(entry.stats, where, _one)
+
+
+def _plan_row_groups(
+    files: list["FileEntry"], where: list[tuple[str, str, Any]] | None
+) -> tuple[list[tuple["FileEntry", list[int] | None]], dict[str, int]]:
+    """Per-file row-group planning under `where`: each planned file
+    keeps only the groups whose manifest stats may hold a matching row.
+    Returns ([(entry, surviving_rg_indices | None)], {rowgroups_total,
+    rowgroups_read}); `None` indices ⇒ pre-row-group manifest entry
+    (read the whole file, counted as one group); a file with no
+    surviving group is dropped."""
+    preds = _normalize_where(where)
+    plans: list[tuple[FileEntry, list[int] | None]] = []
+    total = read = 0
+    for f in files:
+        if f.rg_stats is None:
+            plans.append((f, None))
+            total += 1
+            read += 1
             continue
-        if not _one(col, op, value):
-            return False
-    return True
+        idx = [i for i, st in enumerate(f.rg_stats) if _rg_survives(st, preds)]
+        total += len(f.rg_stats)
+        read += len(idx)
+        if idx:
+            plans.append((f, idx))
+    return plans, {"rowgroups_total": total, "rowgroups_read": read}
 
 
 @dataclass
@@ -419,6 +447,19 @@ class Snapshot:
         return sum(f.bytes for f in self.files)
 
 
+def _snapshot_header(s: Snapshot) -> dict[str, Any]:
+    """A commit's history row without its file list — what
+    `history_df` shows and the compacted history log keeps."""
+    return {
+        "version": s.version,
+        "timestamp_ms": s.timestamp_ms,
+        "operation": s.operation,
+        "file_count": len(s.files),
+        "total_rows": s.total_rows,
+        "summary": s.summary,
+    }
+
+
 class LakeTable:
     """A snapshot-versioned parquet table rooted at a directory."""
 
@@ -491,6 +532,20 @@ class LakeTable:
     # ------------------------------------------------------------------
     # snapshot bookkeeping
     # ------------------------------------------------------------------
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self.root, MANIFEST_DIR, f"v{version:08d}.json")
+
+    def _manifest_versions(self) -> list[int]:
+        """Versions whose manifest is on disk, ascending."""
+        return sorted(
+            int(fn[1:-5])
+            for fn in os.listdir(os.path.join(self.root, MANIFEST_DIR))
+            if fn.startswith("v") and fn.endswith(".json")
+        )
+
+    def _set_hint(self, version: int) -> None:
+        self.committer.set_hint(os.path.join(self.root, POINTER), str(version))
+
     def current_version(self) -> int | None:
         """Head version. The CAS-created manifest is the COMMIT POINT;
         the pointer file is a fast hint. Walking forward past the hint
@@ -507,30 +562,20 @@ class LakeTable:
         raw = self.committer.read_hint(os.path.join(self.root, POINTER))
         hint = int(raw) if raw is not None else None
         scanned = False
-        if hint is not None and not os.path.exists(
-            os.path.join(self.root, MANIFEST_DIR, f"v{hint:08d}.json")
-        ):
+        if hint is not None and not os.path.exists(self._manifest_path(hint)):
             scanned = True
             # the hinted manifest is GONE — a stale hint write landing
             # after expire_snapshots deleted that version (or manual
             # damage). Walking forward from a hole would return an
             # expired head; fall back to a directory scan (rare path).
             try:
-                versions = [
-                    int(fn[1:-5])
-                    for fn in os.listdir(
-                        os.path.join(self.root, MANIFEST_DIR)
-                    )
-                    if fn.startswith("v") and fn.endswith(".json")
-                ]
+                versions = self._manifest_versions()
             except FileNotFoundError:
                 versions = []
             hint = max(versions) if versions else None
         v = hint
         nxt = 0 if v is None else v + 1
-        while os.path.exists(
-            os.path.join(self.root, MANIFEST_DIR, f"v{nxt:08d}.json")
-        ):
+        while os.path.exists(self._manifest_path(nxt)):
             v = nxt
             nxt += 1
         if v is not None and (hint is None or scanned or v - hint >= 2):
@@ -544,9 +589,7 @@ class LakeTable:
             # ≤1-version walk; the walk is monotonic so a hint can
             # never point PAST the head it walked to
             try:
-                self.committer.set_hint(
-                    os.path.join(self.root, POINTER), str(v)
-                )
+                self._set_hint(v)
             except OSError:
                 pass  # hint repair is best-effort; reads stay correct
         return v
@@ -556,8 +599,7 @@ class LakeTable:
             version = self.current_version()
             if version is None:
                 raise FileNotFoundError("table has no snapshots")
-        p = os.path.join(self.root, MANIFEST_DIR, f"v{version:08d}.json")
-        with open(p) as f:
+        with open(self._manifest_path(version)) as f:
             d = json.load(f)
         return Snapshot(
             version=d["version"],
@@ -570,12 +612,7 @@ class LakeTable:
         )
 
     def snapshots(self) -> list[Snapshot]:
-        mdir = os.path.join(self.root, MANIFEST_DIR)
-        out = []
-        for fn in sorted(os.listdir(mdir)):
-            if fn.startswith("v") and fn.endswith(".json"):
-                out.append(self.snapshot(int(fn[1:-5])))
-        return out
+        return [self.snapshot(v) for v in self._manifest_versions()]
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
         """Time travel: latest snapshot committed at or before ts
@@ -601,11 +638,7 @@ class LakeTable:
             return {"tags": {}}
 
     def _write_refs(self, refs: dict[str, Any]) -> None:
-        p = os.path.join(self.root, REFS)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-        os.replace(tmp, p)
+        _write_json_atomic(os.path.join(self.root, REFS), refs)
 
     def tags(self) -> dict[str, int]:
         """Named immutable snapshot refs (Iceberg tags,
@@ -615,11 +648,7 @@ class LakeTable:
         return dict(self._read_refs().get("tags", {}))
 
     def set_tag(self, name: str, version: int | None = None) -> int:
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise FileNotFoundError("table has no snapshots")
-        self.snapshot(version)  # must exist
+        version = self.snapshot(version).version  # must exist
         refs = self._read_refs()
         refs.setdefault("tags", {})[name] = version
         self._write_refs(refs)
@@ -691,13 +720,7 @@ class LakeTable:
         never see the rows. Returns the wap_id for audit/publish.
         Staged files are protected from `remove_orphans` until the
         stage is published or discarded."""
-        base = self.current_version()
-        prev = self.snapshot(base)
-        if prev.schema_json:
-            df = self._align_to_schema(df, prev.schema_json)
-            schema_json = prev.schema_json
-        else:
-            schema_json = df.schema.json()
+        base, df, schema_json = self._align_to_head(df)
         new_files = self._write_files(df)
         wap_id = uuid.uuid4().hex[:12]
         staged = {
@@ -707,10 +730,7 @@ class LakeTable:
             "files": [f.to_json() for f in new_files],
             "schema_json": schema_json,
         }
-        tmp = self._staged_path(wap_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(staged, f)
-        os.replace(tmp, self._staged_path(wap_id))
+        _write_json_atomic(self._staged_path(wap_id), staged)
         return wap_id
 
     def _read_staged(self, wap_id: str) -> dict[str, Any]:
@@ -754,22 +774,9 @@ class LakeTable:
         Row-count-wise identical to
         `scan_staged(wap_id, include_base=False).count()`; audits that
         gate on data QUALITY (not counts) still use `scan_staged`."""
-        import pyarrow.parquet as pq
-
         d = self._read_staged(wap_id)
         paths = [os.path.join(self.root, x["path"]) for x in d["files"]]
-
-        def _one(p: str) -> int:
-            return pq.ParquetFile(p).metadata.num_rows
-
-        if len(paths) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(16, len(paths))
-            ) as ex:
-                return sum(ex.map(_one, paths))
-        return sum(_one(p) for p in paths)
+        return sum(_map_footers(paths, lambda _p, meta: meta.num_rows))
 
     def publish(
         self, wap_id: str, extra_summary: dict[str, Any] | None = None
@@ -853,13 +860,14 @@ class LakeTable:
                 f"concurrent modification: expected base v{base}, found v{cur}"
             )
         version = 0 if cur is None else cur + 1
+        parent = self.snapshot(cur) if cur is not None else None
         # merge-on-read delete entries: inherit unless the caller sets
         # them explicitly (delete_mor adds one; rollback restores the
         # target's). Auto-GC: an entry applying to NO live file (every
         # file's seq >= its seq — e.g. after a full compaction rewrote
         # everything) is dropped.
         if deletes is None:
-            deletes = self.snapshot(cur).deletes if cur is not None else []
+            deletes = parent.deletes if parent is not None else []
         deletes = [
             d for d in deletes if any(f.seq < d["seq"] for f in files)
         ]
@@ -869,8 +877,8 @@ class LakeTable:
         # only, never scan the history. Incoming summary values win
         # (that's the committing micro-batch advancing its own mark).
         summary = dict(summary or {})
-        if cur is not None:
-            prev_wm = self.snapshot(cur).summary.get("stream_watermarks")
+        if parent is not None:
+            prev_wm = parent.summary.get("stream_watermarks")
             if prev_wm:
                 merged = dict(prev_wm)
                 merged.update(summary.get("stream_watermarks", {}))
@@ -884,7 +892,7 @@ class LakeTable:
             "summary": summary or {},
             "deletes": deletes,
         }
-        mpath = os.path.join(self.root, MANIFEST_DIR, f"v{version:08d}.json")
+        mpath = self._manifest_path(version)
         # CAS: the committer's atomic create fails if another writer
         # already claimed this version number — the loser must re-plan
         # against the new head instead of clobbering the winner's
@@ -906,9 +914,7 @@ class LakeTable:
         # pointer-hint swap — a crash before this line leaves the
         # commit durable (the manifest IS the commit point); readers
         # forward-walk past the stale hint and repair it
-        self.committer.set_hint(
-            os.path.join(self.root, POINTER), str(version)
-        )
+        self._set_hint(version)
         return self.snapshot(version)
 
     # ------------------------------------------------------------------
@@ -981,16 +987,13 @@ class LakeTable:
         return entries
 
     def _scan_written(self, out_dir: str) -> list[FileEntry]:
-        import pyarrow.parquet as pq
-
         paths: list[str] = []
         for dirpath, _dirnames, filenames in os.walk(out_dir):
             for fn in filenames:
                 if fn.endswith(".parquet"):
                     paths.append(os.path.join(dirpath, fn))
 
-        def _one(full: str) -> FileEntry:
-            rel = os.path.relpath(full, self.root)
+        def _one(full: str, meta) -> FileEntry:
             # partition values from dir components k=v
             part: dict[str, str] = {}
             comps = os.path.relpath(os.path.dirname(full), out_dir)
@@ -998,30 +1001,17 @@ class LakeTable:
                 if "=" in comp:
                     k, v = comp.split("=", 1)
                     part[k.removeprefix("_p_")] = v
-            meta = pq.ParquetFile(full).metadata
+            rg_stats = _footer_rg_stats(meta)
             return FileEntry(
-                path=rel,
+                path=os.path.relpath(full, self.root),
                 rows=meta.num_rows,
                 bytes=os.path.getsize(full),
                 partition=part,
-                stats=_footer_stats(meta),
-                rg_stats=_footer_rg_stats(meta),
+                stats=_fold_rg_stats(rg_stats),
+                rg_stats=rg_stats,
             )
 
-        if len(paths) > 4:
-            # footer harvesting is per-file independent and I/O-bound
-            # (pyarrow releases the GIL on the footer read) — a
-            # partitioned load landing hundreds of files per commit
-            # was paying a serial driver loop here (r14, guide §6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(16, len(paths))
-            ) as ex:
-                entries = list(ex.map(_one, paths))
-        else:
-            entries = [_one(p) for p in paths]
-        return sorted(entries, key=lambda e: e.path)
+        return sorted(_map_footers(paths, _one), key=lambda e: e.path)
 
     def _align_to_schema(self, df: DataFrame, schema_json: str) -> DataFrame:
         """Write-side schema enforcement: appended rows are cast to the
@@ -1074,30 +1064,30 @@ class LakeTable:
                 time.sleep(0.005 * (i + 1))
         raise AssertionError("unreachable")
 
-    def append(
-        self,
-        df: DataFrame,
-        operation: str = "append",
-        summary: dict[str, Any] | None = None,
-        writer_options: dict[str, Any] | None = None,
-    ) -> Snapshot:
-        """ACID append (S10/S11: WriteToBigQuery WRITE_APPEND →
-        snapshot-isolated file append). The first append defines the
-        table schema; later appends are aligned/cast to it. `summary`
-        entries are merged into the snapshot summary (used by the
-        streaming sink to advance its exactly-once watermark atomically
-        with the data commit). File additions commute, so losing a
-        commit race rebases the already-written files onto the new head
-        and retries (Iceberg's fast-append semantics) — both of two
-        concurrent appends survive, in some serial order."""
+    def _align_to_head(
+        self, df: DataFrame
+    ) -> tuple[int | None, DataFrame, str]:
+        """Write prologue of every append form: (head version, `df`
+        aligned to the head's schema, that schema). The first append
+        defines the table schema."""
         base = self.current_version()
-        prev = self.snapshot(base)
-        if prev.schema_json:
-            df = self._align_to_schema(df, prev.schema_json)
-            aligned_schema = prev.schema_json
-        else:
-            aligned_schema = df.schema.json()
-        written = self._write_files(df, writer_options=writer_options)
+        schema_json = self.snapshot(base).schema_json
+        if schema_json:
+            return base, self._align_to_schema(df, schema_json), schema_json
+        return base, df, df.schema.json()
+
+    def _commit_additions(
+        self,
+        written: list[FileEntry],
+        base: int | None,
+        aligned_schema: str,
+        operation: str,
+        summary: dict[str, Any] | None,
+    ) -> Snapshot:
+        """Commit already-written files as additions to the head. File
+        additions commute, so a lost commit race rebases onto the new
+        head and retries; the new files land at the end of the file
+        list."""
 
         def _attempt() -> Snapshot:
             head = self.current_version()
@@ -1127,6 +1117,28 @@ class LakeTable:
 
         return self._rebase_retry(_attempt)
 
+    def append(
+        self,
+        df: DataFrame,
+        operation: str = "append",
+        summary: dict[str, Any] | None = None,
+        writer_options: dict[str, Any] | None = None,
+    ) -> Snapshot:
+        """ACID append (S10/S11: WriteToBigQuery WRITE_APPEND →
+        snapshot-isolated file append). The first append defines the
+        table schema; later appends are aligned/cast to it. `summary`
+        entries are merged into the snapshot summary (used by the
+        streaming sink to advance its exactly-once watermark atomically
+        with the data commit). File additions commute, so losing a
+        commit race rebases the already-written files onto the new head
+        and retries (Iceberg's fast-append semantics) — both of two
+        concurrent appends survive, in some serial order."""
+        base, df, aligned_schema = self._align_to_head(df)
+        written = self._write_files(df, writer_options=writer_options)
+        return self._commit_additions(
+            written, base, aligned_schema, operation, summary
+        )
+
     def append_clustered(
         self,
         df: DataFrame,
@@ -1152,13 +1164,7 @@ class LakeTable:
         never enters the data files. `n_clusters` sizes the shuffle."""
         from pyspark.sql import functions as F
 
-        base = self.current_version()
-        prev = self.snapshot(base)
-        if prev.schema_json:
-            df = self._align_to_schema(df, prev.schema_json)
-            aligned_schema = prev.schema_json
-        else:
-            aligned_schema = df.schema.json()
+        base, df, aligned_schema = self._align_to_head(df)
         cl = (
             F.expr(cluster_expr)
             if isinstance(cluster_expr, str)
@@ -1176,31 +1182,9 @@ class LakeTable:
         # prune on a non-spec partition key)
         for e in written:
             e.partition.pop("_cluster", None)
-
-        def _attempt() -> Snapshot:
-            head = self.current_version()
-            hprev = self.snapshot(head)
-            if (
-                head != base
-                and hprev.schema_json
-                and hprev.schema_json != aligned_schema
-            ):
-                raise ValueError(
-                    "table schema changed while this append was in "
-                    "flight — re-run the append against the new schema"
-                )
-            new_files = self._stamp_seq(written)
-            return self._commit_snapshot(
-                operation=operation,
-                files=hprev.files + new_files,
-                schema_json=hprev.schema_json or aligned_schema,
-                base=head,
-                summary={"added_files": len(new_files),
-                         "added_rows": sum(f.rows for f in new_files),
-                         **(summary or {})},
-            )
-
-        return self._rebase_retry(_attempt)
+        return self._commit_additions(
+            written, base, aligned_schema, operation, summary
+        )
 
     def overwrite(
         self,
@@ -1471,6 +1455,18 @@ class LakeTable:
         pq.write_table(tbl, out + ".tmp")
         os.replace(out + ".tmp", out)
 
+    @staticmethod
+    def _sidecar_entry(r) -> FileEntry:
+        """One sidecar row (any mapping of its columns) → its manifest
+        entry: the inverse of `_write_parquet_manifest`, which stores
+        the dict/list fields as JSON text. Sidecars written before
+        row-group stats have no `rg_stats` column."""
+        return FileEntry.from_json({
+            k: json.loads(v) if k in ("partition", "stats", "spec", "rg_stats") else v
+            for k, v in r.items()
+            if v is not None
+        })
+
     def plan_files_distributed(
         self,
         version: int | None = None,
@@ -1488,7 +1484,7 @@ class LakeTable:
         snap = self.snapshot(version)
         pq_path = self._parquet_manifest_path(snap.version)
         if not os.path.exists(pq_path):
-            return self.plan_files(version=version, where=where)
+            return self.plan_files(version=snap.version, where=where)
 
         current_spec = self.partition_by
         # normalized ONCE on the driver; ships to executors pickled so
@@ -1499,50 +1495,17 @@ class LakeTable:
             import pandas as pd
 
             for pdf in batches:
-                keep = []
-                has_rg = "rg_stats" in pdf.columns
-                for i in range(len(pdf)):
-                    e = FileEntry(
-                        path=pdf["path"].iat[i],
-                        rows=int(pdf["rows"].iat[i]),
-                        bytes=int(pdf["bytes"].iat[i]),
-                        partition=json.loads(pdf["partition"].iat[i]),
-                        stats=json.loads(pdf["stats"].iat[i]),
-                        spec=(
-                            None
-                            if pdf["spec"].iat[i] is None
-                            else json.loads(pdf["spec"].iat[i])
-                        ),
-                        seq=int(pdf["seq"].iat[i]),
-                        rg_stats=(
-                            json.loads(pdf["rg_stats"].iat[i])
-                            if has_rg and pdf["rg_stats"].iat[i] is not None
-                            else None
-                        ),
+                keep = [
+                    _file_survives(
+                        LakeTable._sidecar_entry(r), preds, current_spec
                     )
-                    keep.append(_file_survives(e, preds, current_spec))
-                yield pdf[pd.Series(keep, index=pdf.index)]
+                    for r in pdf.to_dict("records")
+                ]
+                yield pdf[pd.Series(keep, index=pdf.index, dtype=bool)]
 
         mdf = self.spark.read.parquet(pq_path)
         survivors = mdf.mapInPandas(prune, schema=mdf.schema).collect()
-        files = [
-            FileEntry(
-                path=r["path"],
-                rows=r["rows"],
-                bytes=r["bytes"],
-                partition=json.loads(r["partition"]),
-                stats=json.loads(r["stats"]),
-                spec=None if r["spec"] is None else json.loads(r["spec"]),
-                seq=r["seq"],
-                rg_stats=(
-                    json.loads(r["rg_stats"])
-                    if "rg_stats" in r.__fields__
-                    and r["rg_stats"] is not None
-                    else None
-                ),
-            )
-            for r in survivors
-        ]
+        files = [self._sidecar_entry(r.asDict()) for r in survivors]
         files.sort(key=lambda e: e.path)
         return snap, files
 
@@ -1614,32 +1577,15 @@ class LakeTable:
         whole file. `info` carries rowgroups_total / rowgroups_read /
         files_planned / files_total for observability (the q103 proof
         query hash-gates them)."""
+        where = _normalize_where(where)  # sort `in` key sets ONCE
         snap, files = self.plan_files(
             version, partition_filter=partition_filter, where=where
         )
-        preds = _normalize_where(where)
-        plans: list[tuple[FileEntry, list[int] | None]] = []
-        total = read = 0
-        for f in files:
-            if f.rg_stats is None:
-                plans.append((f, None))
-                total += 1
-                read += 1
-                continue
-            idx = [
-                i
-                for i, st in enumerate(f.rg_stats)
-                if _rg_survives(st, preds)
-            ]
-            total += len(f.rg_stats)
-            read += len(idx)
-            if idx:
-                plans.append((f, idx))
+        plans, rg = _plan_row_groups(files, where)
         info = {
             "files_total": len(snap.files),
             "files_planned": len(files),
-            "rowgroups_total": total,
-            "rowgroups_read": read,
+            **rg,
         }
         return snap, plans, info
 
@@ -1705,8 +1651,16 @@ class LakeTable:
 
         def read_groups(batches):
             import pandas as pd
+            import pyarrow as pa
             import pyarrow.parquet as pq
 
+            # nullable float dtypes keep NaN apart from NULL: PySpark
+            # masks every NaN of a plain float64 column as NULL on the
+            # way back to Arrow
+            floats = {
+                pa.float64(): pd.Float64Dtype(),
+                pa.float32(): pd.Float32Dtype(),
+            }.get
             for pdf in batches:
                 for path, idx_json in zip(pdf["_path"], pdf["_rgs"]):
                     pf = pq.ParquetFile(path)
@@ -1719,7 +1673,9 @@ class LakeTable:
                         continue
                     present = set(pf.schema_arrow.names)
                     cols = [c for c in names if c in present]
-                    out = pf.read_row_groups(idx, columns=cols).to_pandas()
+                    out = pf.read_row_groups(idx, columns=cols).to_pandas(
+                        types_mapper=floats
+                    )
                     for c in names:  # additive schema evolution → NULL
                         if c not in out.columns:
                             out[c] = None
@@ -1745,7 +1701,7 @@ class LakeTable:
                 return any(isinstance(x, _dt.datetime) for x in v)
             return isinstance(v, _dt.datetime)
 
-        if any(_has_dt(v) for _, _, v in (where or [])):
+        if any(_has_dt(v) for _, _, v in where):
             # Manifest pruning treats naive datetimes as UTC. Pin the
             # session tz too so literal rendering agrees end-to-end.
             self.spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -1761,13 +1717,12 @@ class LakeTable:
                 return v.replace(tzinfo=_dt.timezone.utc)
             return v
 
-        for col, op, raw in where or []:
-            from pyspark.sql import functions as F
+        from pyspark.sql import functions as F
 
+        for col, op, raw in where:
             c = F.col(col)
             if op == "in":
-                keys = raw.keys if isinstance(raw, _SortedKeys) else raw
-                df = df.filter(c.isin([_utc(v) for v in keys]))
+                df = df.filter(c.isin([_utc(v) for v in raw]))
                 continue
             value = _utc(raw)
             df = df.filter(
@@ -1789,12 +1744,11 @@ class LakeTable:
         if snap.schema_json:
             # pinned schema → additive evolution: old files lacking newly
             # added columns read them as NULL (PRD.md:3421-3473 semantics)
-            reader = reader.schema(StructType.fromJson(json.loads(snap.schema_json)))
-        if not rel_paths:
-            if snap.schema_json:
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(snap.schema_json))
-                )
+            schema = StructType.fromJson(json.loads(snap.schema_json))
+            reader = reader.schema(schema)
+            if not rel_paths:
+                return self.spark.createDataFrame([], schema)
+        elif not rel_paths:
             raise ValueError("empty table with no recorded schema")
 
         def _raw(rels: list[str]) -> DataFrame:
@@ -1919,20 +1873,10 @@ class LakeTable:
         metadata compaction."""
         merged = {h["version"]: h for h in self.archived_history()}
         for v in versions:
-            s = self.snapshot(v)
-            merged[v] = {
-                "version": s.version,
-                "timestamp_ms": s.timestamp_ms,
-                "operation": s.operation,
-                "file_count": len(s.files),
-                "total_rows": s.total_rows,
-                "summary": s.summary,
-            }
-        out = [merged[v] for v in sorted(merged)]
-        tmp = self._archive_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(out, f)
-        os.replace(tmp, self._archive_path())
+            merged[v] = _snapshot_header(self.snapshot(v))
+        _write_json_atomic(
+            self._archive_path(), [merged[v] for v in sorted(merged)]
+        )
         return len(versions)
 
     def history_df(self) -> DataFrame:
@@ -1940,7 +1884,11 @@ class LakeTable:
         summary (rows/files added or removed, WAP ids, rollback
         targets) — the audit surface of the snapshot chain. Includes
         commits whose manifests were compacted into the archive log."""
-        live = {s.version for s in self.snapshots()}
+        live = [_snapshot_header(s) for s in self.snapshots()]
+        versions = {h["version"] for h in live}
+        headers = [
+            h for h in self.archived_history() if h["version"] not in versions
+        ] + live
         rows = [
             (
                 h["version"],
@@ -1950,19 +1898,7 @@ class LakeTable:
                 h["total_rows"],
                 json.dumps(h["summary"], sort_keys=True),
             )
-            for h in self.archived_history()
-            if h["version"] not in live
-        ]
-        rows += [
-            (
-                s.version,
-                s.timestamp_ms,
-                s.operation,
-                len(s.files),
-                s.total_rows,
-                json.dumps(s.summary, sort_keys=True),
-            )
-            for s in self.snapshots()
+            for h in headers
         ]
         return self.spark.createDataFrame(
             rows,
@@ -2022,18 +1958,16 @@ class LakeTable:
         # inside the retained contiguous range by construction.
         head = self.current_version()
         if head is not None:
-            self.committer.set_hint(
-                os.path.join(self.root, POINTER), str(head)
-            )
+            self._set_hint(head)
         snaps = self.snapshots()
         drop = set(self._expire_candidates(older_than_ms, keep_last))
-        retained = [s for s in snaps if s.version not in drop]
-        retained_versions = {s.version for s in retained}
-        live_files = {f.path for s in retained for f in s.files}
+        live_files = {
+            f.path for s in snaps if s.version not in drop for f in s.files
+        }
         removed_manifests = 0
         removed_files = 0
         for s in snaps:
-            if s.version in retained_versions:
+            if s.version not in drop:
                 continue
             for f in s.files:
                 if f.path not in live_files:
@@ -2042,9 +1976,7 @@ class LakeTable:
                         os.remove(full)
                         removed_files += 1
                     live_files.add(f.path)  # only count once
-            os.remove(
-                os.path.join(self.root, MANIFEST_DIR, f"v{s.version:08d}.json")
-            )
+            os.remove(self._manifest_path(s.version))
             side = self._parquet_manifest_path(s.version)
             if os.path.exists(side):
                 os.remove(side)
@@ -2061,8 +1993,7 @@ class LakeTable:
         # staged-but-unpublished WAP files are NOT orphans
         for wap_id in self.staged_ids():
             referenced.update(
-                FileEntry.from_json(x).path
-                for x in self._read_staged(wap_id)["files"]
+                x["path"] for x in self._read_staged(wap_id)["files"]
             )
         orphans: list[str] = []
         data_root = os.path.join(self.root, DATA_DIR)

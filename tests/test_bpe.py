@@ -288,3 +288,42 @@ def test_checkpointing_does_not_change_small_runs(spark):
         ).collect()
     ]
     assert a == b
+
+
+def test_bpe_driver_route_equals_distributed(spark):
+    """The size-gated driver-side sequential merge loop must return
+    the exact rows of the distributed incremental learner (and both
+    the r14 full-recount semantics, via the existing reference-replay
+    pins in test_bpe.py)."""
+    from de_gcp_lakehouse_iceberg_spark.operators.bpe import bpe_learn
+
+    docs = spark.createDataFrame(
+        [
+            ("low low lower lowest",),
+            ("new newer newest low",),
+            ("wider wide widest new new",),
+            ("a ab abc abcd abcd ab",),
+        ],
+        "text string",
+    )
+    local = [
+        tuple(r)
+        for r in bpe_learn(spark, docs, n_merges=6).collect()
+    ]
+    dist = [
+        tuple(r)
+        for r in bpe_learn(
+            spark, docs, n_merges=6, driver_vocab_max=0
+        ).collect()
+    ]
+    assert local == dist and len(local) == 6
+    # exhausting every pair must terminate identically on both routes
+    tiny = spark.createDataFrame([("ab ab",)], "text string")
+    a = [tuple(r) for r in bpe_learn(spark, tiny, n_merges=10).collect()]
+    b = [
+        tuple(r)
+        for r in bpe_learn(
+            spark, tiny, n_merges=10, driver_vocab_max=0
+        ).collect()
+    ]
+    assert a == b

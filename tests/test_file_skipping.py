@@ -29,6 +29,59 @@ def test_footer_stats_recorded(spark, tmp_path):
     assert stats["s"] == ["a", "b"]
 
 
+def test_footer_stats_fold_omits_partially_null_column(spark, tmp_path):
+    """File stats fold the row-group stats: a column all-NULL in one
+    row group carries no stats there, so the file omits it while the
+    other groups keep theirs."""
+    t = LakeTable.create(spark, str(tmp_path / "foldtbl"))
+    t.append(
+        spark.range(40_000)
+        .select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") >= 20_000, F.col("id")).alias("n"),
+        )
+        .sort("k")
+        .coalesce(1),
+        writer_options={"parquet.block.size": 32 * 1024},
+    )
+    (e,) = t.snapshot().files
+    groups = e.rg_stats
+    assert len(groups) > 2
+    assert e.stats["k"] == [0, 39_999]
+    assert e.stats["k"] == [
+        min(g["k"][0] for g in groups),
+        max(g["k"][1] for g in groups),
+    ]
+    assert "n" not in e.stats
+    assert "n" not in groups[0]
+    assert groups[-1]["n"][1] == 39_999
+    assert all(g["n"][0] >= 20_000 for g in groups if "n" in g)
+
+
+def test_nan_stats_never_prune_matching_rows(spark, tmp_path):
+    """Spark records [1.0, NaN] as the footer stats of 1.0, 3.0, NaN and
+    orders NaN above every double: file- and row-group-level pruning
+    must keep the file for every predicate the NaN row satisfies."""
+    t = _mk(
+        spark,
+        tmp_path,
+        [([(1, 1.0), (2, 3.0), (3, float("nan"))], "id long, x double")],
+    )
+    x = F.col("x")
+    for where, exact in (
+        ([("x", ">", 5.0)], x > 5.0),
+        ([("x", ">=", 4.0)], x >= 4.0),
+        ([("x", "=", float("nan"))], x == float("nan")),
+        ([("x", "in", [float("nan")])], x.isin([float("nan")])),
+    ):
+        want = sorted(r.id for r in t.scan().filter(exact).collect())
+        assert want == [3], where
+        assert sorted(r.id for r in t.scan(where=where).collect()) == want
+        assert sorted(
+            r.id for r in t.scan_rowgroups(where=where).collect()
+        ) == want, where
+
+
 def test_scan_where_skips_files_and_matches_full_filter(spark, tmp_path):
     # three appends with disjoint id ranges -> three files with disjoint
     # [min,max]; a range predicate must plan only the matching file(s)

@@ -717,3 +717,55 @@ def test_delta_rows_counts_rewritten_rows_a_merge_cancels(spark, tmp_path):
     assert res["mode"] == "delta"
     assert res["delta_rows"] == gross == full + 2 * 55
     _assert_matches_recompute(ru, t)
+
+
+def test_ivm_projected_refresh_equals_bootstrap(spark, tmp_path):
+    """Refresh through the projected weighted feed must equal a
+    from-scratch rollup of the final base — including minmax + KMV
+    sketches — even when a window commit touches ONLY a column outside
+    the projection (its whole diff cancels to _n = 0 rows) and another
+    rewrites the distinct column (sketch eviction recompute)."""
+    base = LakeTable.create(spark, str(tmp_path / "b"))
+    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("k"),
+        (F.col("id") % 5).alias("g"),
+        (F.col("id") % 13).cast("double").alias("v"),
+        (F.col("id") % 9).alias("d"),
+        (F.col("id") % 4).alias("z"),
+    )
+    base.append(mk(0, 200))
+    ru = IncrementalRollup.create(
+        spark,
+        str(tmp_path / "ru"),
+        base,
+        group_cols=["g"],
+        sum_cols=["v"],
+        minmax_cols=["v"],
+        distinct_cols=["d"],
+        kmv_k=8,
+    )
+    # commit whose projection to (g, v, d) is a total no-op
+    dml.update(base, {"z": "z + 100"}, "k % 3 = 0")
+    dml.delete(base, "k % 10 = 0")  # hits v extrema and d sketch slots
+    dml.update(base, {"d": "d + 50"}, "k % 7 = 2")  # sketch eviction
+    base.append(mk(200, 230))
+    res = ru.refresh()
+    assert res["mode"] == "delta" and res["delta_rows"] > 0
+
+    fresh = IncrementalRollup.create(
+        spark,
+        str(tmp_path / "ru_fresh"),
+        base,
+        group_cols=["g"],
+        sum_cols=["v"],
+        minmax_cols=["v"],
+        distinct_cols=["d"],
+        kmv_k=8,
+    )
+    key = lambda r: (  # noqa: E731
+        r["g"], r["cnt"], float(r["sum_v"]), float(r["min_v"]),
+        float(r["max_v"]), r["distinct_d"],
+    )
+    got = sorted(key(r) for r in ru.df().collect())
+    want = sorted(key(r) for r in fresh.df().collect())
+    assert got == want

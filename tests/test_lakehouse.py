@@ -5,6 +5,7 @@ a real local warehouse instead of mocks."""
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -718,3 +719,36 @@ def test_stale_hint_repaired_after_fallback_scan(spark, tmp_path):
     assert t.current_version() == head  # fallback scan found the head
     with open(pointer) as f:
         assert f.read().strip() == str(head)  # ...and repaired the hint
+
+
+def test_append_clustered_manifest_parity_with_loop(spark, tmp_path):
+    """append_clustered's manifest entries carry NO shadow cluster key
+    and match the sequential per-band loop's entries field-for-field
+    (rows, partition, footer stats) — r14 VERDICT #7."""
+    df = spark.range(40).select(
+        (F.col("id") % 4).alias("band"), F.col("id").alias("x")
+    )
+    loop_t = LakeTable.create(spark, str(tmp_path / "loop"))
+    for b in range(4):
+        loop_t.append(df.filter(F.col("band") == b).coalesce(1))
+    cl_t = LakeTable.create(spark, str(tmp_path / "cl"))
+    cl_t.append_clustered(df, "band", 4)
+
+    cl_files = cl_t.snapshot().files
+    loop_files = loop_t.snapshot().files
+    assert len(cl_files) == len(loop_files) == 4
+    for e in cl_files:
+        assert e.partition == {}, (
+            f"shadow cluster key leaked into the manifest: {e.partition}"
+        )
+    key = lambda e: (  # noqa: E731
+        e.rows, json.dumps(e.partition, sort_keys=True),
+        json.dumps(e.stats, sort_keys=True),
+    )
+    assert sorted(key(e) for e in cl_files) == sorted(
+        key(e) for e in loop_files
+    )
+    # and the data is identical
+    assert sorted(
+        tuple(r) for r in cl_t.scan().collect()
+    ) == sorted(tuple(r) for r in loop_t.scan().collect())

@@ -49,11 +49,30 @@ def test_distributed_planning_equals_driver_planning(
         _s, driver = t.plan_files(version=v, where=where)
         _s, dist = t.plan_files_distributed(version=v, where=where)
         assert [f.path for f in dist] == sorted(f.path for f in driver), where
-        # entries round-trip with stats/partition/spec intact
-        if dist:
-            d0, e0 = dist[0], min(driver, key=lambda e: e.path)
-            assert d0.partition == e0.partition
-            assert d0.stats == e0.stats and d0.spec == e0.spec
+        # every entry round-trips through the sidecar field for field
+        # (partition, stats, spec, seq, rg_stats)
+        assert [f.to_json() for f in dist] == [
+            f.to_json() for f in sorted(driver, key=lambda e: e.path)
+        ], where
+
+
+def test_distributed_planning_reads_sidecar_without_rg_stats(
+    spark, tmp_path, monkeypatch
+):
+    """A sidecar written before row-group stats has no `rg_stats`
+    column: its entries decode with rg_stats None and plan the same
+    files."""
+    import pyarrow.parquet as pq
+
+    t = _many_file_table(spark, tmp_path, monkeypatch)
+    v = t.current_version()
+    side = t._parquet_manifest_path(v)
+    pq.write_table(pq.read_table(side).drop(["rg_stats"]), side)
+    where = [("k", ">=", 100)]
+    _s, driver = t.plan_files(version=v, where=where)
+    _s, dist = t.plan_files_distributed(version=v, where=where)
+    assert dist and [f.path for f in dist] == sorted(f.path for f in driver)
+    assert all(f.rg_stats is None for f in dist)
 
 
 def test_distributed_planning_falls_back_without_sidecar(

@@ -87,6 +87,24 @@ def test_rg_in_op_conservative_and_candidates_superset(rows, keys):
             assert k in cand, (k, stats, cand)
 
 
+def test_nan_bounds_or_value_never_prune():
+    """Parquet writers record [1.0, NaN] for a double column holding
+    1.0, 3.0, NaN, and Spark orders NaN above every double (NaN = NaN
+    holds) — a NaN bound or predicate value proves nothing."""
+    nan = float("nan")
+    with_nan = {"c": [1.0, nan]}
+    for op, v in ((">", 5.0), (">=", 4.0), ("=", nan), ("=", 2.0)):
+        assert _stats_may_match(with_nan, "c", op, v), (op, v)
+    assert _stats_may_match({"c": [nan, nan]}, "c", "<", 0.0)
+    assert _stats_may_match({"c": [1.0, 3.0]}, "c", "=", nan)
+    assert _stats_may_match({"c": [1.0, 3.0]}, "c", ">", nan)
+    assert _rg_survives(with_nan, [("c", "in", [nan])])
+    assert _rg_survives({"c": [1.0, 3.0]}, [("c", "in", [nan, 9.0])])
+    # NaN-free stats still prune
+    assert not _stats_may_match({"c": [1.0, 3.0]}, "c", ">", 5.0)
+    assert not _rg_survives({"c": [1.0, 3.0]}, [("c", "in", [9.0])])
+
+
 @settings(max_examples=200)
 @given(
     a=st.lists(st.integers(min_value=0, max_value=10**9), max_size=200),

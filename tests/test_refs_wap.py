@@ -299,3 +299,29 @@ def test_wap_audit_respects_mor_deletes(spark, tmp_path):
     assert sorted(r.id for r in t.scan_staged(wap, include_base=False).collect()) == [4]
     t.publish(wap)
     assert sorted(r.id for r in t.scan().collect()) == audited
+
+
+def test_audit_staged_rows_matches_scan_staged_count(spark, tmp_path):
+    """The footer-level WAP audit must return exactly what a full
+    re-scan of the staged rows counts — and still catch a damaged
+    stage (a staged file truncated after the write fails the fresh
+    footer read instead of silently passing)."""
+    import os
+
+    import pytest
+
+    t = LakeTable.create(spark, str(tmp_path / "t"))
+    t.append(spark.range(10).selectExpr("id AS k", "id * 2 AS v"))
+    staged_df = spark.range(100, 137).selectExpr("id AS k", "id AS v")
+    wap_id = t.stage_append(staged_df.repartition(6))
+    assert t.audit_staged_rows(wap_id) == t.scan_staged(
+        wap_id, include_base=False
+    ).count() == 37
+    # damage one staged file on disk: the fresh footer read must raise
+    d = t._read_staged(wap_id)
+    victim = os.path.join(t.root, d["files"][0]["path"])
+    with open(victim, "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        t.audit_staged_rows(wap_id)
+    t.discard_staged(wap_id)

@@ -245,4 +245,9 @@ def test_join_filter_refines_to_row_groups(spark, tmp_path):
     out, info = scan_with_join_filter(t, "k", dim)
     assert info["rowgroups_total"] > 2
     assert 0 < info["rowgroups_read"] < info["rowgroups_total"]
+    # the same per-file row-group planner as plan_row_groups
+    _s, _p, planned = t.plan_row_groups(where=[("k", "in", [7, 123, 39_900])])
+    assert (info["rowgroups_total"], info["rowgroups_read"]) == (
+        planned["rowgroups_total"], planned["rowgroups_read"]
+    )
     assert sorted(r["k"] for r in out.collect()) == [7, 123, 39_900]
