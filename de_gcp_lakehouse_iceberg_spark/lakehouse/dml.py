@@ -452,9 +452,11 @@ def changelog(
         )
 
     out: DataFrame | None = None
-    for v in range(from_version + 1, to_version + 1):
-        prev = table.snapshot(v - 1)
-        cur = table.snapshot(v)
+    # each version of the window is read once: `cur` of v is `prev` of v+1
+    snaps = [table.snapshot(v) for v in range(from_version, to_version + 1)]
+    for v, prev, cur in zip(
+        range(from_version + 1, to_version + 1), snaps, snaps[1:]
+    ):
         if cur.operation in ("delete_mor", "update_mor"):
             # merge-on-read delete/update: rows leave the table
             # LOGICALLY at this commit (the delete entry hides them) —

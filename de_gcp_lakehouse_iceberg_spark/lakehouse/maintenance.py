@@ -268,7 +268,7 @@ def rewrite_manifests(
     import os
 
     cutoff = int(time.time() * 1000) - int(retention_days * 86400_000)
-    victims = table._expire_candidates(cutoff, keep_last)
+    victims = table._expire_candidates(table.snapshots(), cutoff, keep_last)
     mdir = os.path.join(table.root, "_manifests")
     before = len(os.listdir(mdir))
     archived = table.archive_snapshot_headers(victims)

@@ -1789,13 +1789,33 @@ class LakeTable:
             out = df if out is None else out.unionByName(df)
         return out
 
+    def _meta_df(self, rows: list[tuple], ddl: str) -> DataFrame:
+        """A metadata table of driver-side rows, built over Arrow: a
+        `createDataFrame` of Python tuples keeps a PythonRDD in its
+        lineage, so every statement over it would start Python workers;
+        an Arrow table becomes a local relation with the same schema,
+        also when `rows` is empty."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        schema = to_arrow_schema(StructType.fromDDL(ddl))
+        cols = list(zip(*rows)) or [()] * len(schema)
+        return self.spark.createDataFrame(
+            pa.Table.from_pydict(dict(zip(schema.names, cols)), schema=schema),
+            ddl,
+        )
+
     def files_df(self) -> DataFrame:
-        """Metadata table analog of Iceberg `t.files` (S7/S8)."""
+        """Metadata table analog of Iceberg `t.files` (S7/S8). The
+        partition is rendered with sorted keys, as in `partitions_df`,
+        so the two tables join on it."""
         snap = self.snapshot()
         rows = [
-            (f.path, f.rows, f.bytes, json.dumps(f.partition)) for f in snap.files
+            (f.path, f.rows, f.bytes, json.dumps(f.partition, sort_keys=True))
+            for f in snap.files
         ]
-        return self.spark.createDataFrame(
+        return self._meta_df(
             rows, "file_path string, row_count long, size_bytes long, partition string"
         )
 
@@ -1811,7 +1831,7 @@ class LakeTable:
             )
             for s in self.snapshots()
         ]
-        return self.spark.createDataFrame(
+        return self._meta_df(
             rows,
             "version long, timestamp_ms long, operation string, "
             "file_count long, total_rows long, total_bytes long",
@@ -1844,7 +1864,7 @@ class LakeTable:
         for name, version in sorted(self.tags().items()):
             s = self.snapshot(version)
             rows.append((name, "tag", version, s.timestamp_ms, s.operation))
-        return self.spark.createDataFrame(
+        return self._meta_df(
             rows,
             "name string, type string, version long, "
             "timestamp_ms long, operation string",
@@ -1900,7 +1920,7 @@ class LakeTable:
             )
             for h in headers
         ]
-        return self.spark.createDataFrame(
+        return self._meta_df(
             rows,
             "version long, timestamp_ms long, operation string, "
             "file_count long, total_rows long, summary string",
@@ -1918,7 +1938,7 @@ class LakeTable:
             cur[1] += f.bytes
             cur[2] += 1
         rows = [(k, v[0], v[1], v[2]) for k, v in sorted(agg.items())]
-        return self.spark.createDataFrame(
+        return self._meta_df(
             rows, "partition string, row_count long, size_bytes long, file_count long"
         )
 
@@ -1926,15 +1946,19 @@ class LakeTable:
     # destructive metadata ops (used by maintenance)
     # ------------------------------------------------------------------
     def _expire_candidates(
-        self, older_than_ms: int | None, keep_last: int
+        self,
+        snaps: list[Snapshot],
+        older_than_ms: int | None,
+        keep_last: int,
     ) -> list[int]:
-        """Versions `expire_snapshots(older_than_ms, keep_last)` will
-        drop — shared with maintenance.rewrite_manifests so header
-        archiving covers EXACTLY the set about to lose its manifests."""
+        """Versions of the live snapshots `snaps` that
+        `expire_snapshots(older_than_ms, keep_last)` will drop — shared
+        with maintenance.rewrite_manifests so header archiving covers
+        EXACTLY the set about to lose its manifests."""
         cur = self.current_version()
         tagged = set(self.tags().values())
         out = []
-        for s in self.snapshots():
+        for s in snaps:
             if s.version == cur or s.version > cur - keep_last:
                 continue
             if s.version in tagged:
@@ -1960,7 +1984,7 @@ class LakeTable:
         if head is not None:
             self._set_hint(head)
         snaps = self.snapshots()
-        drop = set(self._expire_candidates(older_than_ms, keep_last))
+        drop = set(self._expire_candidates(snaps, older_than_ms, keep_last))
         live_files = {
             f.path for s in snaps if s.version not in drop for f in s.files
         }

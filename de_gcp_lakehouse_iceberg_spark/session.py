@@ -11,6 +11,13 @@ cluster-minded even though tests run on local[N]:
 - Arrow enabled for any Pandas-UDF slow path.
 - UTC session timezone so timestamp semantics match the oracle (DuckDB)
   and the reference's UTC-µs convention (sql/create_iceberg_tables.sql).
+- no parallel file-listing job (`parallelPartitionDiscovery.threshold`
+  at its maximum): `LakeTable._read_files` passes the exact file paths
+  its manifest names, and those files live on a POSIX path (the commit
+  protocol is a hard-link CAS; `_scan_written` sizes files with
+  `os.path.getsize`), so a driver-side stat costs microseconds and a
+  listing job — one task per file beyond 32 — never pays for itself.
+  Set on the builder too: `newSession()` children inherit it.
 """
 
 from __future__ import annotations
@@ -43,6 +50,7 @@ def get_spark(
         # carries NO parquet min/max statistics, which would blind the
         # lakehouse column-stats file skipping on every time column
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
     )
     if warehouse_dir:
         # static conf — only effective when this call CREATES the session
@@ -64,6 +72,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+        ("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"),
     ]:
         try:
             spark.conf.set(k, v)

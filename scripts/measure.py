@@ -1,10 +1,11 @@
 """Measurement harness: time individual queries in a bench-identical
-session (warm-up + table/shingle cache) and capture their
-`.explain("formatted")` plans.
+session (warm-up + table/shingle cache), count the Spark work they
+start, and capture their `.explain("formatted")` plans.
 
 Usage:
   python scripts/measure.py time q108_source_overlap_matrix q112_... \
       [--runs 3] [--sf /root/testdata/sf0.1]
+  python scripts/measure.py jobs q53_connected_components ... | all
   python scripts/measure.py explain q108_source_overlap_matrix \
       [--out plans/r15/q108_before.txt]
 
@@ -12,8 +13,12 @@ Explain mode prints the plans to stdout, or writes the one query's plan
 to `--out`.
 
 `time` mirrors bench.py's methodology (collect(), min-of-N, same
-session shape) so numbers are comparable to the ledger; `explain`
-captures the formatted physical plan WITHOUT running the query twice.
+session shape) so numbers are comparable to the ledger; `jobs` runs
+each query once under its own job group and prints the jobs, stages
+and tasks it started (read from Spark's status store: `jobsList`, then
+`lastStageAttempt` for each job's `stageIds`; skipped stages are not
+counted), one line per query and a total line; `explain` captures the
+formatted physical plan WITHOUT running the query twice.
 """
 
 from __future__ import annotations
@@ -57,9 +62,44 @@ def _udf_identity(s):
     return s
 
 
+def _jobs_since(
+    spark, last_job: int
+) -> tuple[int, list[tuple[int, int, int]]]:
+    """(newest job id, [(stages, tasks, stages not retained) per job])
+    of the jobs newer than `last_job` — every job the query started,
+    including those its streaming threads ran under their own groups.
+    `jobsList` lists the newest job first. The store keeps only the
+    last `spark.ui.retainedStages` stages, so a stage it no longer
+    holds is counted apart, not as work."""
+    from py4j.protocol import Py4JJavaError
+
+    store = spark._jsc.sc().statusStore()
+    listed = store.jobsList(None)
+    newest, work = last_job, []
+    for k in range(listed.size()):
+        jd = listed.apply(k)
+        if jd.jobId() <= last_job:
+            break
+        newest = max(newest, jd.jobId())
+        stages = tasks = gone = 0
+        ids = jd.stageIds()
+        for i in range(ids.size()):
+            try:
+                sd = store.lastStageAttempt(ids.apply(i))
+            except Py4JJavaError:
+                gone += 1
+                continue
+            if sd.status().toString() == "SKIPPED":
+                continue
+            stages += 1
+            tasks += sd.numCompleteTasks()
+        work.append((stages, tasks, gone))
+    return newest, work
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("mode", choices=["time", "explain"])
+    ap.add_argument("mode", choices=["time", "jobs", "explain"])
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -72,6 +112,8 @@ def main() -> None:
     from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
 
     spark = _bench_session(args.sf)
+    if args.queries == ["all"]:
+        args.queries = sorted(QUERIES)
 
     if args.mode == "explain":
         for name in args.queries:
@@ -85,6 +127,26 @@ def main() -> None:
             with open(args.out, "w") as f:
                 f.write(plan)
             print(f"# wrote {args.out} ({len(plan)} bytes)")
+        return
+
+    if args.mode == "jobs":
+        sc = spark.sparkContext
+        last, _ = _jobs_since(spark, -1)
+        total = [0, 0, 0, 0, 0.0]
+        for name in args.queries:
+            sc.setJobGroup(f"measure-{name}", f"measure: {name}")
+            t0 = time.perf_counter()
+            QUERIES[name](spark, args.sf).collect()
+            wall = time.perf_counter() - t0
+            last, work = _jobs_since(spark, last)
+            row = [len(work), *(sum(w[i] for w in work) for i in range(3)),
+                   wall]
+            total = [a + b for a, b in zip(total, row)]
+            print(f"{name}: jobs {row[0]} stages {row[1]} tasks {row[2]}"
+                  f" not_retained {row[3]} wall {wall:.2f}s", flush=True)
+        print(f"TOTAL {len(args.queries)} queries: jobs {total[0]} stages "
+              f"{total[1]} tasks {total[2]} not_retained {total[3]}"
+              f" wall {total[4]:.1f}s")
         return
 
     for name in args.queries:

@@ -752,3 +752,175 @@ def test_append_clustered_manifest_parity_with_loop(spark, tmp_path):
     assert sorted(
         tuple(r) for r in cl_t.scan().collect()
     ) == sorted(tuple(r) for r in loop_t.scan().collect())
+
+
+def test_files_and_partitions_join_on_partition(spark, warehouse):
+    """`t.files` and `t.partitions` render a partition as the same
+    string, so joining them on it keeps every file (spec order
+    zone, day is not the sorted key order)."""
+    t = LakeTable.create(spark, warehouse, partition_by=["zone", "day"])
+    t.append(
+        spark.range(40).select(
+            F.col("id"),
+            F.concat(F.lit("z"), (F.col("id") % 3).cast("string")).alias("zone"),
+            F.concat(F.lit("d"), (F.col("id") % 2).cast("string")).alias("day"),
+        )
+    )
+    files, parts = t.files_df(), t.partitions_df()
+    joined = files.join(parts.select("partition", "file_count"), "partition")
+    assert joined.count() == len(t.snapshot().files) == files.count()
+    assert {r.partition for r in files.collect()} == {
+        json.dumps(f.partition, sort_keys=True) for f in t.snapshot().files
+    }
+
+
+def _count_snapshot_reads(monkeypatch):
+    calls: list[int | None] = []
+    real = LakeTable.snapshot
+
+    def counting(self, version=None):
+        calls.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(LakeTable, "snapshot", counting)
+    return calls
+
+
+def _table_with_history(spark, warehouse):
+    t = LakeTable.create(spark, warehouse)
+    for i in range(4):
+        t.append(_orders_df(spark, 5).withColumn("order_id", F.col("order_id") + 10 * i))
+    dml.delete(t, "order_id = 2")
+    return t
+
+
+def test_changelog_reads_each_version_once(spark, warehouse, monkeypatch):
+    t = _table_with_history(spark, warehouse)
+    a, b = 1, t.current_version()
+    calls = _count_snapshot_reads(monkeypatch)
+    dml.changelog(t, a, b)
+    assert sorted(calls) == list(range(a, b + 1))
+
+
+def test_expire_snapshots_reads_each_manifest_once(
+    spark, warehouse, monkeypatch
+):
+    t = _table_with_history(spark, warehouse)
+    manifests = len(t._manifest_versions())
+    calls = _count_snapshot_reads(monkeypatch)
+    res = t.expire_snapshots(
+        older_than_ms=int(time.time() * 1000) + 1000, keep_last=2
+    )
+    assert len(calls) == manifests
+    assert res["expired_snapshots"] == manifests - 2
+
+
+def _jobs_in_group(spark, build):
+    """Run `build` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scans_over_many_files_start_no_listing_job(spark, warehouse):
+    """A read over more files than Spark's listing threshold (32) takes
+    the manifest's paths as-is: building the DataFrame starts no job."""
+    from de_gcp_lakehouse_iceberg_spark.sql_gateway import SqlGateway
+
+    t = LakeTable.create(spark, warehouse)
+    t.append(_orders_df(spark, 400).repartition(40))
+    assert len(t.snapshot().files) == 40
+    want = sorted(tuple(r) for r in _orders_df(spark, 400).collect())
+    gw = SqlGateway(spark, {"orders": t})
+    store = spark._jsc.sc().statusStore()
+    for build in (
+        t.scan,
+        lambda: t.scan(with_file_path=True),
+        lambda: gw.sql("SELECT * FROM orders"),
+    ):
+        before = store.jobsList(None).size()
+        df, jobs = _jobs_in_group(spark, build)
+        assert jobs == 0
+        assert store.jobsList(None).size() == before
+        got = sorted(tuple(r) for r in df.select(*t.scan().columns).collect())
+        assert got == want
+
+
+def test_tune_session_disables_listing_job(spark):
+    from de_gcp_lakehouse_iceberg_spark.session import tune_session
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    s = spark.newSession()
+    s.conf.set(key, "32")
+    assert s.conf.get(key) == "32"
+    assert tune_session(s).conf.get(key) == "2147483647"
+
+
+def test_metadata_tables_run_no_python_worker(spark, warehouse):
+    """Every metadata table is a local Arrow relation (no PythonRDD in
+    its lineage) with the same schema as before, and its rows are the
+    manifest's."""
+    t = LakeTable.create(spark, warehouse, partition_by=["order_date"])
+    t.append(_orders_df(spark, 20))
+    t.append(_orders_df(spark, 10))
+    snaps = t.snapshots()
+    head = snaps[-1]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    cases = {
+        "files_df": (
+            "struct<file_path:string,row_count:bigint,size_bytes:bigint,"
+            "partition:string>",
+            [(f.path, f.rows, f.bytes, json.dumps(f.partition, sort_keys=True))
+             for f in head.files],
+        ),
+        "snapshots_df": (
+            "struct<version:bigint,timestamp_ms:bigint,operation:string,"
+            "file_count:bigint,total_rows:bigint,total_bytes:bigint>",
+            [(s.version, s.timestamp_ms, s.operation, len(s.files),
+              s.total_rows, s.total_bytes) for s in snaps],
+        ),
+        "partitions_df": (
+            "struct<partition:string,row_count:bigint,size_bytes:bigint,"
+            "file_count:bigint>",
+            [(json.dumps(p, sort_keys=True),
+              sum(f.rows for f in head.files if f.partition == p),
+              sum(f.bytes for f in head.files if f.partition == p),
+              sum(1 for f in head.files if f.partition == p))
+             for p in {json.dumps(f.partition, sort_keys=True): f.partition
+                       for f in head.files}.values()],
+        ),
+        "refs_df": (
+            "struct<name:string,type:string,version:bigint,"
+            "timestamp_ms:bigint,operation:string>",
+            [],
+        ),
+        "history_df": (
+            "struct<version:bigint,timestamp_ms:bigint,operation:string,"
+            "file_count:bigint,total_rows:bigint,summary:string>",
+            [(s.version, s.timestamp_ms, s.operation, len(s.files),
+              s.total_rows, json.dumps(s.summary, sort_keys=True))
+             for s in snaps],
+        ),
+    }
+    for name, (schema, want) in cases.items():
+        df = getattr(t, name)()
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, name
+        assert df.schema.simpleString() == schema, name
+        assert rows(df) == sorted(want), name
+    t.set_tag("v1", 1)
+    df = t.refs_df()
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert rows(df) == [("v1", "tag", 1, snaps[1].timestamp_ms, snaps[1].operation)]
