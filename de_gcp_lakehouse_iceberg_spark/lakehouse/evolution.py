@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .table import LakeTable, Snapshot
+from .table import LakeTable, Snapshot, _write_json_atomic
 
 EVOLUTION_LOG = "_evolution_log.jsonl"
 DEFAULTS_FILE = "_column_defaults.json"
@@ -135,10 +135,6 @@ def set_partition_spec(table: LakeTable, new_spec: list[str]) -> Snapshot:
     history = props.setdefault("partition_spec_history", [])
     history.append({"spec": old_spec, "until_version": snap.version})
     props["partition_by"] = list(new_spec)
-    tmp = props_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(props, f)
-    os.replace(tmp, props_path)
     out = table._commit_snapshot(
         operation="set_partition_spec",
         files=snap.files,
@@ -146,6 +142,9 @@ def set_partition_spec(table: LakeTable, new_spec: list[str]) -> Snapshot:
         base=snap.version,
         summary={"old_spec": old_spec, "new_spec": list(new_spec)},
     )
+    # the spec takes force only once a snapshot records it: a lost CAS
+    # above leaves the properties (and every later write) untouched
+    _write_json_atomic(props_path, props)
     _log(
         table,
         {

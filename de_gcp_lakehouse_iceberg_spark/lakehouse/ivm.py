@@ -251,12 +251,14 @@ class IncrementalRollup:
 
     # -- source abstraction (overridden by JoinRollup) -----------------
     def _source_cursor(self):
-        """(handle, last_marker, cur_marker): the source handle the
-        other hooks receive, plus the freshness markers compared for
-        the noop check and recorded in the snapshot summary."""
+        """(handle, rollup snapshot, last_marker, cur_marker): the
+        source handle the other hooks receive, the one rollup snapshot
+        the refresh plans against, plus the freshness markers compared
+        for the noop check and recorded in the snapshot summary."""
         base = LakeTable.load(self.spark, self.base_root)
-        last = self.table.snapshot().summary["source_version"]
-        return base, last, base.current_version()
+        snap = self.table.snapshot()
+        last = snap.summary["source_version"]
+        return base, snap, last, base.current_version()
 
     def _needed_columns(self) -> list[str]:
         """Exactly the source columns the rollup aggregates over — the
@@ -300,16 +302,22 @@ class IncrementalRollup:
         cancel — a generic-diff commit such as a MERGE rewrites the
         unchanged rows of every file it touches, and each such row
         counts twice here (removed and re-added) while the full feed
-        drops the pair. It measures the feed work, not the net
-        change."""
-        base, last, cur = self._source_cursor()
+        drops the pair. It measures the feed work, not the net change.
+
+        One rollup snapshot plans the refresh (source marker, files
+        rewritten, stored rows merged) and is its `expected_base`: if a
+        concurrent refresh rewrote any of those files, this one raises
+        a permanent CommitConflict instead of applying the delta twice.
+        The one case the pin cannot see: a delta touching only buckets
+        with no file yet removes nothing, so it lands like an append."""
+        base, snap, last, cur = self._source_cursor()
         if cur == last:
             return {
                 "mode": "noop",
                 "delta_rows": 0,
                 "source_version": cur,
                 "files_rewritten": 0,
-                "files_total": len(self.table.snapshot().files),
+                "files_total": len(snap.files),
                 "partitions_rewritten": 0,
             }
         ch = self._change_rows(base, last, cur)
@@ -405,13 +413,13 @@ class IncrementalRollup:
         )
         affected = sorted(r["_gb_d"] for r in bucket_rows)
         delta_rows = int(sum(r["_r"] for r in bucket_rows))
-        snap = self.table.snapshot()
         aff_strs = {str(b) for b in affected}
         remove = [
             f.path for f in snap.files if f.partition.get(_GB) in aff_strs
         ]
         old = self.table.scan(
-            partition_filter=lambda p: p.get(_GB) in aff_strs
+            version=snap.version,
+            partition_filter=lambda p: p.get(_GB) in aff_strs,
         )
 
         # NULL-safe group match: a NULL group value is a real group
@@ -468,6 +476,7 @@ class IncrementalRollup:
             add_df=merged,
             operation="ivm_delta_refresh",
             summary={"source_version": cur, "delta_rows": delta_rows},
+            expected_base=snap.version,
         )
         return {
             "mode": "delta",
@@ -730,12 +739,13 @@ class JoinRollup(IncrementalRollup):
     def _source_cursor(self):
         fact = LakeTable.load(self.spark, self.base_root)
         dim = LakeTable.load(self.spark, self.dim_root)
-        last = dict(self.table.snapshot().summary["source_version"])
+        snap = self.table.snapshot()
+        last = dict(snap.summary["source_version"])
         cur = {
             "fact": fact.current_version(),
             "dim": dim.current_version(),
         }
-        return (fact, dim), last, cur
+        return (fact, dim), snap, last, cur
 
     def _joined(self, fdf: DataFrame, ddf: DataFrame) -> DataFrame:
         cond = None

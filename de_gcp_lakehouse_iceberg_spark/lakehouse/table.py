@@ -20,12 +20,13 @@ a deliberately thin metadata layer:
   between link and hint-swap neither hides its committed version nor
   blocks the slot, and a stale hint write can never regress the head).
   Multi-writer optimistic concurrency: the loser of a race gets
-  `CommitConflict` and re-plans against the new head — `append` and
-  `publish` rebase automatically (file additions commute, Iceberg's
-  fast-append retry), while copy-on-write `replace_files` surfaces the
-  conflict to its caller, which planned against specific files. On a
-  shared object store the CAS-create plays exactly the role of
-  Iceberg's catalog commit.
+  `CommitConflict`. `append`, `publish` and copy-on-write
+  `replace_files` land on the new head through one loop and one rule
+  (`LakeTable._land`): additions commute (Iceberg's fast-append
+  retry), while a rewrite whose removed files or schema changed
+  surfaces a permanent conflict to its caller, which planned against
+  specific files. On a shared object store the CAS-create plays
+  exactly the role of Iceberg's catalog commit.
 
 Scale posture: a snapshot read hands Spark an explicit file list with
 `basePath`, so partition columns survive and Catalyst still does column
@@ -49,9 +50,10 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 class CommitConflict(RuntimeError):
-    """Another writer committed between planning and commit. Appends
-    and publishes rebase+retry automatically; copy-on-write callers
-    must re-plan against the new head."""
+    """Another writer committed between planning and commit. Commits
+    through `LakeTable._land` rebase and retry automatically; a
+    `permanent` conflict (the landing rule failed) must be re-planned
+    by its caller against the new head."""
 
 
 MANIFEST_DIR = "_manifests"
@@ -81,6 +83,10 @@ def _stat_value(v):
         epoch = _dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
         return (v - epoch) // _dt.timedelta(microseconds=1)
     return None
+
+
+def _field_types(schema_json: str) -> dict[str, Any]:
+    return {f["name"]: f["type"] for f in json.loads(schema_json)["fields"]}
 
 
 def _write_json_atomic(path: str, obj) -> None:
@@ -782,61 +788,22 @@ class LakeTable:
         self, wap_id: str, extra_summary: dict[str, Any] | None = None
     ) -> Snapshot:
         """WAP step 3 (publish): commit the staged files onto the
-        CURRENT head. File additions are commutative, so a stage
-        planned against an older base rebases cleanly (Iceberg
-        cherry-pick semantics for appends) — unless the table schema
-        changed incompatibly since staging."""
+        CURRENT head. File additions commute, so a stage planned
+        against an older base lands on a moved head (Iceberg
+        cherry-pick semantics for appends) iff every column it wrote
+        still exists at the head with the same type (`_land`);
+        otherwise ValueError. `extra_summary` rides the same atomic
+        commit (e.g. the streaming dedup ingest's exactly-once
+        watermark)."""
         d = self._read_staged(wap_id)
-
-        def _attempt() -> Snapshot:
-            base = self.current_version()
-            prev = self.snapshot(base)
-            if (
-                prev.schema_json
-                and d["schema_json"]
-                and prev.schema_json != d["schema_json"]
-            ):
-                staged_fields = {
-                    f["name"]: f["type"]
-                    for f in json.loads(d["schema_json"])["fields"]
-                }
-                cur_fields = {
-                    f["name"]: f["type"]
-                    for f in json.loads(prev.schema_json)["fields"]
-                }
-                bad = [
-                    n
-                    for n, t in staged_fields.items()
-                    if cur_fields.get(n) != t
-                ]
-                if bad:
-                    raise ValueError(
-                        f"cannot publish stage {wap_id}: columns {bad} no "
-                        "longer match the table schema (staged files would "
-                        "read wrong)"
-                    )
-            staged_files = self._stamp_seq(
-                [FileEntry.from_json(x) for x in d["files"]]
-            )
-            return self._commit_snapshot(
-                operation="publish",
-                files=prev.files + staged_files,
-                schema_json=prev.schema_json or d["schema_json"],
-                base=base,
-                summary={
-                    "wap_id": wap_id,
-                    "staged_base": d["base"],
-                    "added_files": len(staged_files),
-                    "added_rows": sum(f.rows for f in staged_files),
-                    # callers (e.g. streaming dedup ingest) ride their
-                    # exactly-once watermark on the SAME atomic commit
-                    **(extra_summary or {}),
-                },
-            )
-
-        # additions commute: a publish losing the commit race rebases
-        # onto the new head and retries (cherry-pick semantics)
-        snap = self._rebase_retry(_attempt)
+        snap = self._land(
+            "publish",
+            [FileEntry.from_json(x) for x in d["files"]],
+            d["base"],
+            d["schema_json"],
+            {"wap_id": wap_id, "staged_base": d["base"],
+             **(extra_summary or {})},
+        )
         os.remove(self._staged_path(wap_id))
         return snap
 
@@ -1018,12 +985,10 @@ class LakeTable:
         table schema (missing nullable columns become NULL; unknown
         columns are an error). Prevents type drift across files — the
         read path pins ONE schema for every file in a snapshot."""
-        import json as _json
-
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(_json.loads(schema_json))
+        schema = StructType.fromJson(json.loads(schema_json))
         known = set(schema.fieldNames())
         extra = [c for c in df.columns if c not in known]
         if extra:
@@ -1076,46 +1041,134 @@ class LakeTable:
             return base, self._align_to_schema(df, schema_json), schema_json
         return base, df, df.schema.json()
 
-    def _commit_additions(
+    def _land(
         self,
-        written: list[FileEntry],
-        base: int | None,
-        aligned_schema: str,
         operation: str,
-        summary: dict[str, Any] | None,
+        written: list[FileEntry],
+        base: int,
+        schema_json: str,
+        summary: dict[str, Any] | None = None,
+        remove: list[str] | None = None,
     ) -> Snapshot:
-        """Commit already-written files as additions to the head. File
-        additions commute, so a lost commit race rebases onto the new
-        head and retries; the new files land at the end of the file
-        list."""
+        """The one landing loop of every commit that may rebase: drop
+        `remove` from the CURRENT head and add `written`, the files of
+        a commit planned at v`base` against `schema_json`, retrying a
+        lost CAS. A head that moved since `base` takes the commit by
+        one rule (Iceberg spec, "Commit Conflicts") that depends only
+        on the commit's inputs:
+
+        - adding files only: every column written still exists at the
+          head with the same type (a column added since reads NULL in
+          the new files); otherwise ValueError;
+        - removing files: also every removed file still live at the
+          head and the schema unchanged (`add_column`'s default covers
+          only files that predate it, so a rewrite landing after it
+          would turn defaults into NULLs); otherwise a permanent
+          CommitConflict. Merge-on-read deletes added since `base` that
+          apply to a removed file are reapplied to the written rows.
+
+        The new files land at the end of the file list."""
+        removed = set(remove or ())
+        summary = dict(summary or {})
 
         def _attempt() -> Snapshot:
-            head = self.current_version()
-            hprev = self.snapshot(head)
-            if (
-                head != base
-                and hprev.schema_json
-                and hprev.schema_json != aligned_schema
-            ):
-                # a concurrent commit evolved the schema after our files
-                # were written against the old one — data would read
-                # wrong; surface it instead of rebasing
-                raise ValueError(
-                    "table schema changed while this append was in "
-                    "flight — re-run the append against the new schema"
+            nonlocal written
+            head = self.snapshot(self.current_version())
+            if head.version != base:
+                reapply = self._validate_landing(
+                    base, head, schema_json, removed
                 )
-            new_files = self._stamp_seq(written)
+                if reapply:
+                    written = self._reapply_mor_deletes(written, reapply)
+                    # the rebase re-filtered the replacement rows, so
+                    # removed-minus-added no longer equals the recorded
+                    # DML text's rows — changelog must fall back to
+                    # the exact exceptAll diff for this commit
+                    summary.pop("predicate", None)
+                    summary.pop("assignments", None)
+            new_files = self._stamp_seq(list(written))
             return self._commit_snapshot(
                 operation=operation,
-                files=hprev.files + new_files,
-                schema_json=hprev.schema_json or aligned_schema,
-                base=head,
-                summary={"added_files": len(new_files),
-                         "added_rows": sum(f.rows for f in new_files),
-                         **(summary or {})},
+                files=[f for f in head.files if f.path not in removed]
+                + new_files,
+                schema_json=head.schema_json or schema_json,
+                base=head.version,
+                summary={
+                    **summary,
+                    "removed_files": len(removed),
+                    "added_files": len(new_files),
+                    "added_rows": sum(f.rows for f in new_files),
+                },
             )
 
         return self._rebase_retry(_attempt)
+
+    def _validate_landing(
+        self,
+        base: int,
+        head: "Snapshot",
+        schema_json: str,
+        removed: set[str],
+    ) -> list[str]:
+        """`_land`'s rule for a head that moved since v`base`. Returns
+        the merge-on-read delete predicates to reapply to the written
+        rows before committing (empty = land as-is)."""
+        if not removed:
+            if head.schema_json and head.schema_json != schema_json:
+                have = _field_types(head.schema_json)
+                bad = [
+                    n
+                    for n, t in _field_types(schema_json).items()
+                    if have.get(n) != t
+                ]
+                if bad:
+                    raise ValueError(
+                        f"columns {bad} no longer match the table schema "
+                        f"at v{head.version} (files written at v{base} "
+                        "would read wrong) — re-run against the new schema"
+                    )
+            return []
+
+        def _permanent(msg: str) -> CommitConflict:
+            exc = CommitConflict(f"concurrent modification: {msg}")
+            exc.permanent = True  # retrying cannot help — head won't rewind
+            return exc
+
+        if head.schema_json != schema_json:
+            raise _permanent(
+                f"schema changed between planned v{base} and head "
+                f"v{head.version} — re-plan against the new schema"
+            )
+        gone = removed - {f.path for f in head.files}
+        if gone:
+            raise _permanent(
+                "files replaced by this commit were rewritten or removed "
+                f"since v{base}: "
+                f"{sorted(gone)[:3]}{'…' if len(gone) > 3 else ''}"
+            )
+        # MOR delete entries added since the planned base that apply to
+        # a file we are rewriting (entry applies to files with
+        # seq < entry seq)
+        base_del = {
+            json.dumps(d, sort_keys=True) for d in self.snapshot(base).deletes
+        }
+        removed_seqs = [f.seq for f in head.files if f.path in removed]
+        reapply: list[str] = []
+        for d in head.deletes:
+            if json.dumps(d, sort_keys=True) in base_del or not any(
+                s < d["seq"] for s in removed_seqs
+            ):
+                continue  # predates the plan or nothing we rewrite
+            if "predicate" not in d:
+                # a delete entry we cannot re-express as a filter
+                # (future delete-file formats) stays a hard stop
+                raise _permanent(
+                    f"a merge-on-read delete landed since v{base}, "
+                    "applies to a file this commit rewrites, and carries "
+                    "no reapplicable predicate — re-plan"
+                )
+            reapply.append(d["predicate"])
+        return reapply
 
     def append(
         self,
@@ -1132,12 +1185,13 @@ class LakeTable:
         with the data commit). File additions commute, so losing a
         commit race rebases the already-written files onto the new head
         and retries (Iceberg's fast-append semantics) — both of two
-        concurrent appends survive, in some serial order."""
+        concurrent appends survive, in some serial order. A head that
+        moved since the write takes the files iff every column they
+        carry still exists there with the same type (`_land`; a column
+        added meanwhile reads NULL in them); otherwise ValueError."""
         base, df, aligned_schema = self._align_to_head(df)
         written = self._write_files(df, writer_options=writer_options)
-        return self._commit_additions(
-            written, base, aligned_schema, operation, summary
-        )
+        return self._land(operation, written, base, aligned_schema, summary)
 
     def append_clustered(
         self,
@@ -1182,9 +1236,7 @@ class LakeTable:
         # prune on a non-spec partition key)
         for e in written:
             e.partition.pop("_cluster", None)
-        return self._commit_additions(
-            written, base, aligned_schema, operation, summary
-        )
+        return self._land(operation, written, base, aligned_schema, summary)
 
     def overwrite(
         self,
@@ -1214,46 +1266,38 @@ class LakeTable:
         add_df: DataFrame | None,
         operation: str,
         summary: dict[str, Any] | None = None,
-        expected_base: int | None = None,
+        *,
+        expected_base: int,
         writer_options: dict[str, Any] | None = None,
     ) -> Snapshot:
         """Copy-on-write commit primitive: drop `remove` (relative paths)
         from the live file set, add files written from `add_df`. Used by
-        DML (delete/update/merge) and maintenance (compaction/sort).
+        DML (delete/update/merge), maintenance (compaction/sort) and
+        rollup/MV refresh.
 
         `expected_base` pins the snapshot the mutation was PLANNED
-        against. When another commit lands in between, the commit
-        REBASES onto the new head iff the rebase is provably safe
-        (Iceberg's snapshot-isolation validation for overwrite
-        operations, Spec §Commit Conflicts):
-
-        - every file this commit removes is still LIVE at the head —
-          if a concurrent commit rewrote or dropped one, the two
-          mutations touched the same rows and the loser must re-plan;
-        - a merge-on-read delete entry added since the planned base
-          that applies to a removed file is REAPPLIED (Iceberg's
-          validate-then-reapply pattern): the replacement files carry
-          a newer sequence number than the delete entry, so their rows
-          would silently resurrect — instead the rebase re-filters the
-          already-written output with the new predicates and commits
-          the rewritten files, serializing this commit AFTER the
-          delete (both effects survive);
-        - the table schema is unchanged — the new files were written
-          against the planned schema.
-
-        Files appended concurrently are simply kept (additions
-        commute), so two MERGEs over DISJOINT file sets both commit —
-        the r9 behavior (abort on ANY concurrent commit) serialized
-        every concurrent upsert (VERDICT r9 "What's wrong" #2).
-        Snapshot isolation, as in Iceberg: rows landed by a concurrent
-        append are not re-matched against this DML's predicate."""
-        removed = set(remove)
-        plan_snap = self.snapshot(
-            expected_base if expected_base is not None
-            else self.current_version()
-        )
-        if add_df is not None and plan_snap.schema_json:
-            add_df = self._align_to_schema(add_df, plan_snap.schema_json)
+        against; `add_df` is written against its schema. If another
+        commit lands in between, the commit rebases onto the new head
+        only when that is provably safe (`_land`; Iceberg's
+        snapshot-isolation validation for overwrites): every removed
+        file is still LIVE at the head (else the two mutations touched
+        the same rows) and the schema is unchanged (the new files were
+        written against the planned one); otherwise a permanent
+        CommitConflict tells the caller to re-plan. A merge-on-read
+        delete added since the planned base that applies to a removed
+        file is REAPPLIED to the already-written output, serializing
+        this commit after the delete. With nothing to remove, the
+        commit only adds files and follows `append`'s rule. Files
+        appended concurrently are kept (additions commute), so two
+        MERGEs over DISJOINT file sets both commit; as in Iceberg, rows
+        landed by a concurrent append are not re-matched against this
+        DML's predicate."""
+        schema_json = self.snapshot(expected_base).schema_json
+        if add_df is not None:
+            if schema_json:
+                add_df = self._align_to_schema(add_df, schema_json)
+            else:
+                schema_json = add_df.schema.json()
         # write ONCE, outside the retry loop — a rebase re-commits the
         # manifest, never re-runs the write job
         written = (
@@ -1261,45 +1305,9 @@ class LakeTable:
             if add_df is not None
             else []
         )
-
-        def _attempt() -> Snapshot:
-            nonlocal written, summary
-            head = self.current_version()
-            prev = self.snapshot(head)
-            if expected_base is not None and head != expected_base:
-                reapply = self._validate_replace_rebase(
-                    expected_base, prev, removed
-                )
-                if reapply:
-                    written = self._reapply_mor_deletes(written, reapply)
-                    # the rebase re-filtered the replacement rows, so
-                    # removed-minus-added no longer equals the recorded
-                    # DML text's rows — changelog must fall back to
-                    # the exact exceptAll diff for this commit
-                    if summary and (
-                        "predicate" in summary or "assignments" in summary
-                    ):
-                        summary = {
-                            k: v
-                            for k, v in summary.items()
-                            if k not in ("predicate", "assignments")
-                        }
-            kept = [f for f in prev.files if f.path not in removed]
-            new_files = self._stamp_seq(list(written))
-            return self._commit_snapshot(
-                operation=operation,
-                files=kept + new_files,
-                schema_json=prev.schema_json
-                or (add_df.schema.json() if add_df is not None else ""),
-                base=head,
-                summary=dict(
-                    summary or {},
-                    removed_files=len(removed),
-                    added_files=len(new_files),
-                ),
-            )
-
-        return self._rebase_retry(_attempt)
+        return self._land(
+            operation, written, expected_base, schema_json, summary, remove
+        )
 
     def _reapply_mor_deletes(
         self, written: list["FileEntry"], predicates: list[str]
@@ -1323,71 +1331,6 @@ class LakeTable:
         for p in predicates:
             df = df.filter(~F.coalesce(F.expr(p), F.lit(False)))
         return self._write_files(df)
-
-    def _validate_replace_rebase(
-        self,
-        expected_base: int,
-        head: "Snapshot",
-        removed: set[str],
-    ) -> list[str]:
-        """Validate that a copy-on-write commit planned against
-        v`expected_base` can land on `head` (see `replace_files`
-        docstring). Raises a PERMANENT CommitConflict on schema drift
-        or replaced-file liveness violations; returns the list of
-        merge-on-read delete predicates added since the planned base
-        that apply to a rewritten file — the caller must reapply them
-        to its output before committing (empty = land as-is)."""
-        def _permanent(msg: str) -> CommitConflict:
-            exc = CommitConflict(msg)
-            exc.permanent = True  # retrying cannot help — head won't rewind
-            return exc
-
-        base_snap = self.snapshot(expected_base)
-        if (
-            base_snap.schema_json
-            and head.schema_json
-            and head.schema_json != base_snap.schema_json
-        ):
-            raise _permanent(
-                f"concurrent modification: schema changed between "
-                f"planned v{expected_base} and head v{head.version} — "
-                "re-plan against the new schema"
-            )
-        head_live = {f.path for f in head.files}
-        gone = removed - head_live
-        if gone:
-            raise _permanent(
-                "concurrent modification: files replaced by this commit "
-                f"were rewritten or removed since v{expected_base}: "
-                f"{sorted(gone)[:3]}{'…' if len(gone) > 3 else ''}"
-            )
-        # MOR delete entries added since the planned base that apply to
-        # a file we are rewriting (entry applies to files with
-        # seq < entry seq)
-        base_del = {json.dumps(d, sort_keys=True) for d in base_snap.deletes}
-        new_dels = [
-            d for d in head.deletes
-            if json.dumps(d, sort_keys=True) not in base_del
-        ]
-        reapply: list[str] = []
-        if new_dels:
-            removed_seqs = [
-                f.seq for f in head.files if f.path in removed
-            ]
-            for d in new_dels:
-                if not any(s < d["seq"] for s in removed_seqs):
-                    continue  # predates nothing we rewrite
-                if "predicate" not in d:
-                    # a delete entry we cannot re-express as a filter
-                    # (future delete-file formats) stays a hard stop
-                    raise _permanent(
-                        "concurrent modification: a merge-on-read "
-                        f"delete landed since v{expected_base}, applies "
-                        "to a file this commit rewrites, and carries no "
-                        "reapplicable predicate — re-plan"
-                    )
-                reapply.append(d["predicate"])
-        return reapply
 
     # ------------------------------------------------------------------
     # read paths

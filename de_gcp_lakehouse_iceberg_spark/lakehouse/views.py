@@ -139,7 +139,10 @@ class Warehouse:
         base_name = spec.get("base_table")
         pcol = spec.get("partition_col")
         mv = self.table(name)
-        last_src = mv.snapshot().summary.get("source_version")
+        # one MV snapshot plans the refresh and is its expected base: a
+        # concurrent refresh of the same partitions makes it conflict
+        mv_snap = mv.snapshot()
+        last_src = mv_snap.summary.get("source_version")
         base = self.table(base_name) if base_name else None
         incremental_ok = (
             base is not None
@@ -166,12 +169,11 @@ class Warehouse:
         if not changed:
             # touch: record freshness (and the source version) without
             # rewriting any data
-            snap = mv.snapshot()
             mv._commit_snapshot(
                 operation="mv_refresh_noop",
-                files=snap.files,
-                schema_json=snap.schema_json,
-                base=snap.version,
+                files=mv_snap.files,
+                schema_json=mv_snap.schema_json,
+                base=mv_snap.version,
                 summary={"source_version": cur_v},
             )
             return
@@ -184,7 +186,7 @@ class Warehouse:
         partial = self.spark.sql(spec["sql"])
         stale = [
             f.path
-            for f in mv.snapshot().files
+            for f in mv_snap.files
             if f.partition.get(pcol) in {str(c) for c in changed}
         ]
         mv.replace_files(
@@ -195,6 +197,7 @@ class Warehouse:
                 "source_version": cur_v,
                 "refreshed_partitions": sorted(str(c) for c in changed),
             },
+            expected_base=mv_snap.version,
         )
 
     def stale_materialized_views(self, now_ms: int | None = None) -> list[str]:

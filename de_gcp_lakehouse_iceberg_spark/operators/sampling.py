@@ -87,20 +87,17 @@ def sample_by_weights(
 # giant stratum is individually past the threshold bound, auto routes
 # the WHOLE input down the threshold path: the per-stratum cut already
 # adapts (giant strata filter to ~c·n survivors, small strata keep
-# everything and the bounded top-n finishes them), so no split is
-# needed. A per-stratum SPLIT route (giant→threshold, rest→topk,
-# union) exists (route="split", equality-tested) but MEASURED SLOWER —
-# its two extra corpus-wide semi/anti joins and second count pass cost
-# more than they save (skewed fixture, 3.2M rows, skew 188×:
-# threshold 3.06 s, topk 3.32 s, split 5.82 s min-of-3 interleaved;
-# SCALE.md "skew-aware stratified routing").
+# everything and the bounded top-n finishes them). A per-stratum split
+# (giant→threshold, rest→topk, union) measured slower — its two extra
+# corpus-wide semi/anti joins and second count pass cost more than
+# they save (skewed fixture, 3.2M rows, skew 188×: threshold 3.06 s,
+# topk 3.32 s, split 5.82 s min-of-3 interleaved; SCALE.md
+# "skew-aware stratified routing").
 STRATIFIED_SINGLE_MAX_ROWS_PER_STRATUM = 10_000
 STRATIFIED_AUTO_ROWS_PER_STRATUM = 300_000
-# Split (giant strata -> threshold, rest -> single/topk) when the
-# biggest stratum is individually past the threshold bound AND
-# dominates the mean by this much — measured on the skewed fixture in
-# SCALE.md "skew-aware stratified split" (1 giant + many tiny strata:
-# split beats the mean-routed topk).
+# Skew bound: auto takes the threshold route when the biggest stratum
+# is individually past the threshold bound AND dominates the mean by
+# this much (SCALE.md "skew-aware stratified routing").
 STRATIFIED_SKEW_SPLIT_RATIO = 8
 
 
@@ -114,12 +111,15 @@ def stratified_sample(
 ) -> DataFrame:
     """Exactly min(n, |stratum|) rows per stratum, chosen by hash order
     (deterministic, unbiased); ties broken by id. All routes produce
-    the identical (oracle-exact) row set. route="auto" (default — the
-    deployment shape) measures mean stratum size with one narrow
+    the identical (oracle-exact) row set. route="auto" (the default —
+    the deployment shape) measures the stratum sizes with one narrow
     aggregate and picks single/topk/threshold per the measured bounds
     above (SCALE.md "stratified sampling route crossover").
 
-    route="topk" (default): bounded grouped_topk with payload="rejoin"
+    route="single": all-JVM grouped_topk, one shuffle — for strata
+    that each fit one aggregation buffer.
+
+    route="topk": bounded grouped_topk with payload="rejoin"
     — only (stratum, hash, id) cross the Arrow partial, the k winners
     broadcast back, and the fat document payload never moves except
     for the selected rows. MEASURED fastest at every available
@@ -188,49 +188,10 @@ def stratified_sample(
             # Skew (r12 VERDICT #8): the MEAN sits in the topk band
             # only because many tiny strata dilute one giant one.
             # Measured answer: the plain threshold route (its cut is
-            # per-stratum already) — NOT the split route, which loses
-            # to both alternatives (see module comment).
+            # per-stratum already; see module comment).
             route = "threshold"
         else:
             route = "topk"
-    if route == "split":
-        if counts is None:
-            counts = df.groupBy(stratum_col).agg(
-                F.count(F.lit(1)).alias("_ns")
-            )
-        big_keys = counts.filter(
-            F.col("_ns") >= STRATIFIED_AUTO_ROWS_PER_STRATUM
-        ).select(F.col(stratum_col).alias("_bk"))
-        big = df.join(
-            F.broadcast(big_keys),
-            F.col(stratum_col).eqNullSafe(F.col("_bk")),
-            "left_semi",
-        )
-        small = df.join(
-            F.broadcast(big_keys),
-            F.col(stratum_col).eqNullSafe(F.col("_bk")),
-            "left_anti",
-        )
-        small_max = (
-            counts.filter(
-                F.col("_ns") < STRATIFIED_AUTO_ROWS_PER_STRATUM
-            )
-            .agg(F.max("_ns"))
-            .first()[0]
-            or 0
-        )
-        small_route = (
-            "single"
-            if small_max <= STRATIFIED_SINGLE_MAX_ROWS_PER_STRATUM
-            else "topk"
-        )
-        return stratified_sample(
-            big, n, stratum_col, id_col, "threshold", oversample
-        ).unionByName(
-            stratified_sample(
-                small, n, stratum_col, id_col, small_route, oversample
-            )
-        )
     if route == "single":
         return grouped_topk(
             df, [stratum_col], order(), n, route="single"
@@ -241,7 +202,7 @@ def stratified_sample(
         ).select(*df.columns)
     if route != "threshold":
         raise ValueError(
-            f"route must be auto|single|topk|threshold|split: {route!r}"
+            f"route must be auto|single|topk|threshold: {route!r}"
         )
     if counts is None:
         counts = df.groupBy(stratum_col).agg(

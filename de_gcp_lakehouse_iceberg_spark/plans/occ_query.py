@@ -3,7 +3,7 @@ gate: two writers, each with its OWN LakeTable handle on the same
 warehouse root, append disjoint halves of `supplier` CONCURRENTLY
 through a start barrier. The CAS manifest commit makes the race loser
 rebase-and-retry instead of clobbering (lakehouse/table.py
-`_commit_snapshot` / `_rebase_retry`), so BOTH commits must survive:
+`_commit_snapshot` / `_land`), so BOTH commits must survive:
 the per-parity row counts equal the source's, and the snapshot chain
 is create + exactly two appends. Before round 9's CAS, the loser's
 manifest overwrite silently DROPPED the winner's files — this query
@@ -102,7 +102,7 @@ def q116_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two MERGEs planned against the SAME base, each matching rows in
     a DIFFERENT file (parity-split appends), committed concurrently
     through a start barrier: copy-on-write rebase validation
-    (lakehouse/table.py `_validate_replace_rebase`) lets BOTH land —
+    (lakehouse/table.py `_land`) lets BOTH land —
     the r9 engine serialized them (any concurrent commit aborted the
     CoW loser). Hash gate: every row carries its merge's increment and
     the snapshot chain is create + 2 appends + 2 merges. Reference

@@ -7,7 +7,7 @@ Usage:
       [--runs 3] [--sf /root/testdata/sf0.1]
   python scripts/measure.py jobs q53_connected_components ... | all
   python scripts/measure.py explain q108_source_overlap_matrix \
-      [--out plans/r15/q108_before.txt]
+      [--out q108_plan.txt]
 
 Explain mode prints the plans to stdout, or writes the one query's plan
 to `--out`.

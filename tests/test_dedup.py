@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.operators import dedup
 from de_gcp_lakehouse_iceberg_spark.operators.corpus import clean_corpus
+from de_gcp_lakehouse_iceberg_spark.operators.dedup import ngram_jaccard_pairs
 from de_gcp_lakehouse_iceberg_spark.tables import table
 
 
@@ -512,3 +513,32 @@ def test_near_dup_pairs_routes_agree(spark):
     }
     assert exact == lsh == auto
     assert len(exact) > 0
+
+
+# -- plan-shape guards: the properties that make these operators
+# scale-safe must be visible in the physical plan, so a refactor that
+# silently reintroduces a cartesian product, a full-corpus window, or
+# a driver-side collapse fails here
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_jaccard_fast_path_has_no_string_shingle_shuffle(spark, sf_dir):
+    docs = table(spark, sf_dir, "documents")
+    out = ngram_jaccard_pairs(docs, threshold=0.5)
+    p = _plan(out)
+    # The invariant: per-doc signing is ONE lazy Arrow stage whose long
+    # keys feed the inverted-index join — no exploded shingle STRINGS
+    # are ever hashed/shuffled, and the signing is not eagerly
+    # materialized at call time (r7's eager localCheckpoint hid the
+    # stage behind `Scan ExistingRDD` and serialized through the RDD
+    # block manager — slower AND unguardable).
+    assert "Scan ExistingRDD" not in p  # lazy: no pre-materialized RDD
+    assert "ArrowEvalPython" in p or "PythonUDF" in p
+    assert "xxhash64" not in p
+    assert "CartesianProduct" not in p
+    # every consumer reads the signing result from the columnar cache —
+    # exactly one signing pass at execution time
+    assert "InMemoryTableScan" in p

@@ -4,9 +4,14 @@ incremental and idempotent, and sums stay exact."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from de_gcp_lakehouse_iceberg_spark.lakehouse import LakeTable, dml
+from de_gcp_lakehouse_iceberg_spark.lakehouse import (
+    CommitConflict,
+    LakeTable,
+    dml,
+)
 from de_gcp_lakehouse_iceberg_spark.lakehouse.ivm import IncrementalRollup
 
 
@@ -79,6 +84,36 @@ def test_refresh_is_idempotent_and_noop_when_fresh(spark, tmp_path):
     assert rollup.refresh()["mode"] == "noop"
     assert rollup.table.current_version() == v
     _assert_matches_recompute(rollup, base)
+
+
+def test_racing_refresh_conflicts_instead_of_double_applying(
+    spark, tmp_path, monkeypatch
+):
+    """A second refresh of the same rollup commits between the first
+    refresh's plan and its commit. The first planned against rollup
+    files the second rewrote, so it must raise a permanent
+    CommitConflict instead of applying the same delta twice; rerunning
+    it sees the second's marker and the rollup equals a recompute."""
+    base = _base(spark, tmp_path)
+    root = str(tmp_path / "ru")
+    first = IncrementalRollup.create(spark, root, base, ["g"], ["v"])
+    second = IncrementalRollup(spark, root)
+    dml.delete(base, "k % 11 = 2")
+    commit = first.table.replace_files
+
+    def second_refresh_then_commit(*args, **kwargs):
+        assert second.refresh()["mode"] == "delta"
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(
+        first.table, "replace_files", second_refresh_then_commit
+    )
+    with pytest.raises(CommitConflict) as exc:
+        first.refresh()
+    assert exc.value.permanent
+    monkeypatch.undo()
+    assert first.refresh()["mode"] == "noop"
+    _assert_matches_recompute(first, base)
 
 
 def test_group_disappears_when_emptied(spark, tmp_path):
@@ -661,7 +696,7 @@ def test_join_rollup_broadcast_is_size_gated(spark, tmp_path, monkeypatch):
     dml.update(dim, {"seg": "'RECODED'"}, "k % 3 = 1")
 
     def delta_plan():
-        handle, last, cur = ru._source_cursor()
+        handle, _snap, last, cur = ru._source_cursor()
         ch = ru._change_rows(handle, last, cur)
         return ch._jdf.queryExecution().optimizedPlan().toString()
 

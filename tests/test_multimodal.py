@@ -10,6 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.operators import multimodal
+from de_gcp_lakehouse_iceberg_spark.operators.multimodal import (
+    dhash_media,
+    dhash_near_pairs,
+)
 
 
 def _media(spark):
@@ -312,3 +316,36 @@ def test_dhash_codec_stub_policy(spark):
     with pytest.raises(Exception, match="pixel codec"):
         dhash_media(media).collect()
     assert dhash_media(media, on_unsupported="skip").count() == 0
+
+
+# -- plan-shape guards: the properties that make these operators
+# scale-safe must be visible in the physical plan, so a refactor that
+# silently reintroduces a cartesian product, a full-corpus window, or
+# a driver-side collapse fails here
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dhash_pairs_is_bucketed_not_cartesian(spark, sf_dir):
+    sigs = spark.range(100).select(
+        F.col("id").alias("media_id"), (F.col("id") % 17).alias("dhash")
+    )
+    p = _plan(dhash_near_pairs(sigs))
+    assert "CartesianProduct" not in p
+    assert "Window" not in p
+
+
+def test_dhash_media_is_single_pass(spark):
+    import numpy as np
+
+    img = np.zeros(10 * 8 * 3, dtype=np.uint8).tobytes()
+    media = spark.createDataFrame(
+        [(1, "raw_rgb", img, {"width": 10, "height": 8,
+                              "sample_rate": None, "n_bytes": 240})],
+        "media_id bigint, kind string, payload binary, "
+        "meta struct<width:int,height:int,sample_rate:int,n_bytes:bigint>",
+    )
+    p = _plan(dhash_media(media))
+    assert "Exchange" not in p  # zero shuffle: embarrassingly parallel

@@ -3,6 +3,7 @@ packing invariants, and connected-component dup clustering."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.operators import dedup, packing, sampling
@@ -301,9 +302,9 @@ def test_stratified_sample_skew_split_route(spark, monkeypatch):
     """r12 VERDICT #8: one giant stratum among many tiny ones puts the
     MEAN in the topk band while the giant stratum dominates cost.
     route="auto" must detect the skew and take the THRESHOLD path (the
-    measured winner — the per-stratum cut adapts; the split route is
-    implemented and equality-tested below but measured slower), with
-    the row set identical to every other route."""
+    measured winner — the per-stratum cut adapts; a per-stratum split
+    measured slower and is no route), with the row set identical to
+    every other route."""
     from de_gcp_lakehouse_iceberg_spark.operators import sampling
 
     giant = spark.range(1200).select(
@@ -334,13 +335,5 @@ def test_stratified_sample_skew_split_route(spark, monkeypatch):
     assert "Union" in plan  # the threshold side's shortfall union
     assert sorted(map(tuple, out.collect())) == want
 
-    # explicit route="split" is accepted and identical
-    out2 = sampling.stratified_sample(df, 5, route="split")
-    assert sorted(map(tuple, out2.collect())) == want
-
-    # tiny strata above the single bound push the small side to topk
-    monkeypatch.setattr(
-        sampling, "STRATIFIED_SINGLE_MAX_ROWS_PER_STRATUM", 5
-    )
-    out3 = sampling.stratified_sample(df, 5, route="split")
-    assert sorted(map(tuple, out3.collect())) == want
+    with pytest.raises(ValueError, match="route must be"):
+        sampling.stratified_sample(df, 5, route="split")

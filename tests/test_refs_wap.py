@@ -124,40 +124,100 @@ def test_wap_discard_and_orphan_cleanup(spark, tmp_path):
 
 
 def test_wap_publish_rejects_incompatible_schema_change(spark, tmp_path):
+    """One landing rule for every commit that only adds files, run for
+    both forms: a publish and an append whose head evolved after their
+    files were written land after an additive change (the new column
+    reads NULL in them) and raise after a retype."""
     from de_gcp_lakehouse_iceberg_spark.lakehouse.evolution import (
         add_column,
         drop_column,
     )
 
-    t = LakeTable.create(spark, str(tmp_path / "t"))
-    t.append(
-        spark.range(0, 5).select(
-            F.col("id").alias("k"), F.col("id").cast("int").alias("v")
-        )
-    )
-    wap = t.stage_append(
-        spark.range(5, 8).select(
-            F.col("id").alias("k"), F.col("id").cast("int").alias("v")
-        )
-    )
-    # additive evolution since staging: publish still fine (staged files
-    # simply read the new column as NULL)
-    add_column(t, "note", "string")
-    t.publish(wap)
-    assert t.scan().count() == 8
+    def land(t, df, evolve, form):
+        # evolve the head between the write and the commit
+        if form == "publish":
+            wap = t.stage_append(df)
+            evolve()
+            return t.publish(wap)
+        write = t._write_files
 
-    wap2 = t.stage_append(
-        spark.range(8, 10).select(
-            F.col("id").alias("k"),
-            F.col("id").cast("int").alias("v"),
-            F.lit("x").alias("note"),
+        def write_then_evolve(*args, **kwargs):
+            out = write(*args, **kwargs)
+            evolve()
+            return out
+
+        t._write_files = write_then_evolve
+        try:
+            return t.append(df)
+        finally:
+            del t._write_files
+
+    def retype_v():
+        drop_column(t, "v")
+        add_column(t, "v", "string")
+
+    for form in ("publish", "append"):
+        t = LakeTable.create(spark, str(tmp_path / form))
+        t.append(
+            spark.range(0, 5).select(
+                F.col("id").alias("k"), F.col("id").cast("int").alias("v")
+            )
         )
+        # additive evolution since the write: the commit still lands
+        # (its files simply read the new column as NULL)
+        land(
+            t,
+            spark.range(5, 8).select(
+                F.col("id").alias("k"), F.col("id").cast("int").alias("v")
+            ),
+            lambda: add_column(t, "note", "string"),
+            form,
+        )
+        assert t.scan().count() == 8
+        assert t.scan().filter(F.col("note").isNull()).count() == 8
+
+        # retype v int→string since the write ⇒ its files would read wrong
+        with pytest.raises(ValueError, match="no longer match"):
+            land(
+                t,
+                spark.range(8, 10).select(
+                    F.col("id").alias("k"),
+                    F.col("id").cast("int").alias("v"),
+                    F.lit("x").alias("note"),
+                ),
+                retype_v,
+                form,
+            )
+        assert t.scan().count() == 8
+
+
+def test_rewrite_planned_before_add_column_default_conflicts(spark, tmp_path):
+    """A commit that removes files needs the exact planned schema: a
+    compaction planned before `add_column(default=)` landed must raise
+    a permanent CommitConflict, because the rewritten files would
+    postdate the column and lose the default for their rows."""
+    from de_gcp_lakehouse_iceberg_spark.lakehouse import CommitConflict
+    from de_gcp_lakehouse_iceberg_spark.lakehouse.evolution import (
+        add_column,
+        apply_defaults,
     )
-    # retype v int→string since staging ⇒ staged files would read wrong
-    drop_column(t, "v")
-    add_column(t, "v", "string")
-    with pytest.raises(ValueError, match="no longer match"):
-        t.publish(wap2)
+
+    t = LakeTable.create(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 5))
+    t.append(_df(spark, 5, 10))
+    planned = t.snapshot()
+    add_column(t, "note", "string", default="d")
+    with pytest.raises(CommitConflict) as exc:
+        t.replace_files(
+            [f.path for f in planned.files],
+            t.scan(version=planned.version).coalesce(1),
+            operation="compact",
+            expected_base=planned.version,
+        )
+    assert exc.value.permanent
+    got = apply_defaults(t, t.scan())
+    assert got.count() == 10
+    assert got.filter(F.col("note") == "d").count() == 10
 
 
 # ---------------------------------------------------------------------------
@@ -194,6 +254,37 @@ def test_partition_spec_evolution_prunes_per_file_spec(spark, tmp_path):
         )["partition_spec_history"]
     ]
     assert ["bucket(8, k)"] in props_hist
+
+
+def test_partition_spec_lost_cas_leaves_properties(
+    spark, tmp_path, monkeypatch
+):
+    """The new spec takes force only with the snapshot that records it:
+    a set_partition_spec that loses its CAS leaves `_properties.json`
+    (spec and spec history) as it was, and the retry records the true
+    old spec."""
+    import json
+
+    from de_gcp_lakehouse_iceberg_spark.lakehouse import CommitConflict
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), partition_by=["bucket(8, k)"]
+    )
+    t.append(_df(spark, 0, 16))
+    props = tmp_path / "t" / "_properties.json"
+    before = props.read_text()
+    monkeypatch.setattr(t.committer, "cas_create", lambda path, data: False)
+    with pytest.raises(CommitConflict):
+        set_partition_spec(t, ["bucket(16, k)"])
+    assert props.read_text() == before
+    assert t.partition_by == ["bucket(8, k)"]
+
+    monkeypatch.undo()
+    snap = set_partition_spec(t, ["bucket(16, k)"])
+    assert snap.summary["old_spec"] == ["bucket(8, k)"]
+    assert [h["spec"] for h in json.loads(props.read_text())[
+        "partition_spec_history"
+    ]] == [["bucket(8, k)"]]
 
 
 def test_partition_spec_evolution_add_transform(spark, tmp_path):

@@ -8,6 +8,10 @@ import math
 from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.operators import similarity
+from de_gcp_lakehouse_iceberg_spark.operators.similarity import (
+    centroid_rollup,
+    sq8_topk,
+)
 from de_gcp_lakehouse_iceberg_spark.tables import table
 
 
@@ -280,3 +284,34 @@ def test_nearest_pairs_tie_band_survives_matmul_selection(spark):
             ).collect()
         ]
         assert got == [(i, j, c) for c, i, j in exact[:20]], par
+
+
+# -- plan-shape guards: the properties that make these operators
+# scale-safe must be visible in the physical plan, so a refactor that
+# silently reintroduces a cartesian product, a full-corpus window, or
+# a driver-side collapse fails here
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_centroid_rollup_partial_aggregates_no_window(spark, sf_dir):
+    emb = table(spark, sf_dir, "embeddings")
+    p = _plan(centroid_rollup(emb))
+    assert "Window" not in p
+    # the (group, dim) aggregation must combine map-side
+    assert "partial" in p.lower()
+
+
+def test_sq8_candidates_avoid_global_window(spark, sf_dir):
+    emb = table(spark, sf_dir, "embeddings")
+    out = sq8_topk(emb, emb.filter(F.col("vec_id") < 2), k=5, rerank=10)
+    p = _plan(out)
+    # NO Window nodes at all since r10: both the candidate selection
+    # AND the exact-cosine rerank run as the two-phase grouped top-k
+    # (partial top-k collapses map-side; no per-query sort task)
+    assert "Window" not in p
+    assert "CartesianProduct" not in p.replace(
+        "BroadcastNestedLoopJoin", ""
+    )  # the broadcast query-side cross is the intended tiny side
