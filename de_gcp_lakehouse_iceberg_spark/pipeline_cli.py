@@ -9,10 +9,12 @@ batch | streaming pipeline).
         --mode streaming --input /data/stream_dir --warehouse /wh \
         --window-seconds 60
 
-Batch: JSONL (or positional NYC CSV with --format csv) → validate →
-taxi_trips + hourly_trip_stats + processing_errors (run_batch_pipeline).
-Streaming: bounded availableNow run of the three-sink streaming flow
-(run_streaming_pipeline). Both print one JSON result line.
+Batch: the --format reader (JSONL, or positional NYC CSV) feeds the one
+fan-out, run_batch_pipeline → taxi_trips + hourly_trip_stats +
+processing_errors. Streaming: bounded availableNow run of the
+three-sink flow (run_streaming_pipeline); a rerun on the same
+warehouse resumes its checkpoint and lands each batch exactly once per
+sink. Both print one JSON result line.
 """
 
 from __future__ import annotations
@@ -43,43 +45,11 @@ def run(args: argparse.Namespace) -> dict:
     if args.mode == "batch":
         from .sources import ingest
 
-        if args.format == "csv":
-            raw = ingest.read_nyc_csv(spark, args.input)
-            classified = ingest.classify_trips(raw, mode="batch").cache()
-            valid = ingest.valid_trips(classified)
-            invalid = ingest.invalid_trips(classified)
-            import os
-
-            from .lakehouse import LakeTable
-            from pyspark.sql import functions as F
-
-            trips = LakeTable.create(
-                spark,
-                os.path.join(args.warehouse, "taxi_trips"),
-                partition_by=["pickup_date"],
-            )
-            trips.append(
-                valid.withColumn(
-                    "pickup_date", F.to_date("pickup_datetime").cast("string")
-                )
-            )
-            stats = LakeTable.create(
-                spark, os.path.join(args.warehouse, "hourly_trip_stats")
-            )
-            stats.append(ingest.hourly_stats(valid))
-            errors = LakeTable.create(
-                spark, os.path.join(args.warehouse, "processing_errors")
-            )
-            errors.append(invalid)
-            counts = {
-                "valid": trips.snapshot().total_rows,
-                "invalid": errors.snapshot().total_rows,
-                "stats_rows": stats.snapshot().total_rows,
-            }
-            classified.unpersist()
-            return {"mode": "batch", "format": "csv", **counts}
-        counts = ingest.run_batch_pipeline(spark, args.input, args.warehouse)
-        return {"mode": "batch", "format": "jsonl", **counts}
+        read = ingest.read_nyc_csv if args.format == "csv" else ingest.read_jsonl
+        counts = ingest.run_batch_pipeline(
+            spark, read(spark, args.input), args.warehouse
+        )
+        return {"mode": "batch", "format": args.format, **counts}
 
     from .streaming import taxi
 

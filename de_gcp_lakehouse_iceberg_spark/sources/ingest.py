@@ -20,8 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..lakehouse import LakeTable
+from ..lakehouse import Warehouse
 from .taxi_schema import TRIP_INPUT
 
 MONEY_COLS = [
@@ -41,25 +42,24 @@ COORD_COLS = [
 REQUIRED = ["pickup_datetime", "dropoff_datetime", "trip_distance", "total_amount"]
 
 
-def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:
-    """S1: newline-delimited JSON scan with a pinned schema — no
-    inference in production paths (SURVEY.md §1.4). Malformed lines
-    land in `_corrupt` (PERMISSIVE mode) so the classifier can tag them
-    json_parsing_failed, matching the reference's error taxonomy
-    (main.py:134-140)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    # StructType.add mutates in place — never call it on the shared
-    # module-level schema
-    schema = StructType(
-        list(TRIP_INPUT.fields) + [StructField("_corrupt", StringType(), True)]
-    )
+def trip_json_reader(reader):
+    """The trip JSON read contract, shared by batch `read_jsonl` and the
+    taxi stream: `reader` (spark.read / spark.readStream) gets a pinned
+    schema — no inference in production paths (SURVEY.md §1.4) — and
+    PERMISSIVE mode keeps malformed lines in `_corrupt`, so the
+    classifier tags them json_parsing_failed in both modes (main.py:
+    134-140). A fresh StructType: .add would mutate TRIP_INPUT."""
+    schema = StructType(list(TRIP_INPUT.fields) + [StructField("_corrupt", StringType())])
     return (
-        spark.read.schema(schema)
+        reader.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(path_glob)
     )
+
+
+def read_jsonl(spark: SparkSession, path_glob: str) -> DataFrame:
+    """S1: newline-delimited JSON batch scan (`trip_json_reader`)."""
+    return trip_json_reader(spark.read).json(path_glob)
 
 
 # NYC-taxi CSV positional layout (S2, PRD.md:338-358): 18 columns, the
@@ -299,35 +299,32 @@ def hourly_stats(valid: DataFrame) -> DataFrame:
 
 
 def run_batch_pipeline(
-    spark: SparkSession, input_glob: str, warehouse: str, mode: str = "batch"
+    spark: SparkSession, raw: DataFrame, warehouse: str, mode: str = "batch"
 ) -> dict:
     """End-to-end batch ingest (run_batch_processor, main.py:268-330):
-    read → classify → fan out to taxi_trips + hourly_trip_stats +
-    processing_errors, each an atomic lakehouse commit."""
-    import os
-
-    classified = classify_trips(read_jsonl(spark, input_glob), mode=mode).cache()
+    classify `raw` (read_jsonl / read_nyc_csv) → fan out to taxi_trips
+    + hourly_trip_stats + processing_errors, each an atomic lakehouse
+    commit. Counts come from the snapshot manifests, not scans."""
+    classified = classify_trips(raw, mode=mode).cache()
     valid = valid_trips(classified)
     invalid = invalid_trips(classified)
 
-    trips_t = LakeTable.create(
-        spark, os.path.join(warehouse, "taxi_trips"), partition_by=["pickup_date"]
-    )
+    wh = Warehouse(spark, warehouse)
+    trips_t = wh.create_table("taxi_trips", partition_by=["pickup_date"])
     trips_with_date = valid.withColumn(
         "pickup_date", F.to_date("pickup_datetime").cast("string")
     )
     trips_t.append(trips_with_date)
 
-    stats_t = LakeTable.create(spark, os.path.join(warehouse, "hourly_trip_stats"))
+    stats_t = wh.create_table("hourly_trip_stats")
     stats_t.append(hourly_stats(valid))
 
-    errors_t = LakeTable.create(spark, os.path.join(warehouse, "processing_errors"))
+    errors_t = wh.create_table("processing_errors")
     errors_t.append(invalid)
 
-    counts = {
-        "valid": trips_t.scan().count(),
-        "invalid": errors_t.scan().count(),
-        "stats_rows": stats_t.scan().count(),
-    }
     classified.unpersist()
-    return counts
+    return {
+        "valid": trips_t.snapshot().total_rows,
+        "invalid": errors_t.snapshot().total_rows,
+        "stats_rows": stats_t.snapshot().total_rows,
+    }

@@ -10,14 +10,14 @@ them too. This is the reference's continuous-ingestion loop
 keeps a 100 TB corpus duplicate-free as it grows, at per-batch cost
 O(batch × collisions).
 
-Exactly-once: at-least-once delivery (checkpointed offsets) + the
-idempotent-commit watermark of `stream_append_to_laketable` — each
-batch's id rides in the INDEX table's snapshot summary
-(`stream_watermarks`), so a replayed micro-batch is skipped instead of
-re-probed/re-appended (a replay would otherwise see its own batch-1
-signatures in the index and drop everything as duplicates). Within a
-batch, probe + append happen before the watermark commit is visible,
-and the append itself is WAP (stage → audit → publish).
+Exactly-once: the commit rule and query runner every foreachBatch
+sink shares (streaming/pipeline.py). `run_foreach_batch` checkpoints
+offsets at `<index root>/_checkpoints/<checkpoint_name>`; the batch's
+`batch_mark` rides the WAP publish of the INDEX table, so a replayed
+micro-batch that `batch_landed` is skipped before any probe — a replay
+would otherwise see its own signatures in the index and drop
+everything as duplicates. A run still active after `poll_timeout_s`
+is stopped with TimeoutError.
 
 Intra-batch duplicates: the probe is batch-vs-index only, so two
 near-identical docs ARRIVING TOGETHER both survive the probe. The
@@ -28,13 +28,12 @@ no corpus involvement.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lakehouse.dedup_index import SignatureIndex
 from ..operators.dedup import minhash_lsh_pairs
+from .pipeline import batch_landed, batch_mark, run_foreach_batch
 
 
 def streaming_dedup_ingest(
@@ -54,10 +53,7 @@ def streaming_dedup_ingest(
     stats = {"batches": 0, "kept": 0, "dropped": 0}
 
     def _commit(df: DataFrame, batch_id: int) -> None:
-        wm = index.table.snapshot().summary.get("stream_watermarks", {})
-        if batch_id <= wm.get(checkpoint_name, -1):
-            return
-        if df.isEmpty():
+        if batch_landed(index.table, checkpoint_name, batch_id) or df.isEmpty():
             return
         batch = df.select(id_col, text_col).localCheckpoint()
         n_in = batch.count()
@@ -83,43 +79,18 @@ def streaming_dedup_ingest(
         )
         kept = batch.join(hits, id_col, "left_anti").localCheckpoint()
         n_kept = kept.count()
-        # WAP ingest of the survivors' signatures; the batch watermark
-        # rides the publishing commit itself (extra_summary → one
-        # atomic snapshot), so a replayed batch is skipped before any
-        # probe — it can never see its own signatures in the index.
+        # WAP ingest of the survivors' signatures; the batch mark rides
+        # the publishing commit itself (one atomic snapshot)
         index.append(
             kept,
             id_col,
             text_col,
             wap=True,
-            extra_summary={
-                "stream_watermarks": {checkpoint_name: batch_id}
-            },
+            extra_summary=batch_mark(checkpoint_name, batch_id),
         )
         stats["batches"] += 1
         stats["kept"] += n_kept
         stats["dropped"] += n_in - n_kept
 
-    q = (
-        source.writeStream.foreachBatch(_commit)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            f"{index.table.root}/_checkpoints/{checkpoint_name}",
-        )
-        .start()
-    )
-    deadline = time.time() + poll_timeout_s
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(1.0)
-    if q.isActive:
-        # a hung micro-batch must not turn the bound into forever:
-        # stop the query and surface the timeout instead of falling
-        # through to an unbounded awaitTermination
-        q.stop()
-        raise TimeoutError(
-            f"streaming dedup ingest still active after "
-            f"poll_timeout_s={poll_timeout_s}"
-        )
-    q.awaitTermination()  # re-raises any micro-batch exception
+    run_foreach_batch(source, index.table.root, checkpoint_name, _commit, poll_timeout_s)
     return stats

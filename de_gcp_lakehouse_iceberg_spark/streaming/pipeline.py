@@ -6,8 +6,10 @@ Semantics upgrades over the reference, per SURVEY.md §7.3:
 - event-time windows with a watermark (the reference has none, T5) —
   required for state cleanup in append mode and the correct late-data
   story at scale;
-- exactly-once sink commits via foreachBatch → LakeTable's atomic
-  snapshot append (the reference's WRITE_APPEND is at-least-once, T7).
+- exactly-once sink commits (the reference's WRITE_APPEND is
+  at-least-once, T7): every foreachBatch sink in this package runs
+  through `run_foreach_batch` and commits under one rule
+  (`batch_landed` / `batch_mark`).
 
 Parity is defined as SURVEY.md Q22: a bounded replay of the stream must
 equal the batch `groupBy(window(...))` over the same rows — which the
@@ -22,7 +24,6 @@ source (Kafka/file/rate) — the pipeline is source-agnostic past
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,6 +115,39 @@ def replay_windowed_aggregate(
     return spark.table(sink).orderBy("window_start", "event_type")
 
 
+def batch_landed(table: LakeTable, name: str, batch_id: int) -> bool:
+    """The exactly-once commit rule: batch `batch_id` of checkpoint
+    `name` already landed in `table` iff the latest snapshot's mark for
+    `name` is at or above it. LakeTable._commit_snapshot carries the
+    marks through every later commit, so this reads ONE manifest on the
+    driver — no Spark job, O(1) in the snapshot-log length."""
+    marks = table.snapshot().summary.get("stream_watermarks", {})
+    return batch_id <= marks.get(name, -1)
+
+
+def batch_mark(name: str, batch_id: int) -> dict:
+    """The summary entry a sink commits atomically with batch
+    `batch_id`'s rows, advancing `name`'s mark in that table."""
+    return {"stream_watermarks": {name: batch_id}}
+
+
+def run_foreach_batch(source, root, name, commit, timeout_s=None) -> None:
+    """Drain `source` (availableNow) through `commit(df, batch_id)`,
+    checkpointed at the stable `<root>/_checkpoints/<name>` so a rerun
+    resumes; re-raises a micro-batch error. A query still running when
+    `timeout_s` runs out is stopped and TimeoutError raised."""
+    q = (
+        source.writeStream.foreachBatch(commit)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/_checkpoints/{name}")
+        .start()
+    )
+    if timeout_s is not None and not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query {name!r} still active after {timeout_s} s")
+    q.awaitTermination()
+
+
 def stream_append_to_laketable(
     spark: SparkSession,
     source: DataFrame,
@@ -124,28 +158,20 @@ def stream_append_to_laketable(
 ) -> int:
     """Continuous append of a bounded stream into a LakeTable via
     foreachBatch (S11: the streaming Iceberg append). Exactly-once =
-    at-least-once delivery (checkpointed offsets, STABLE checkpoint path
-    so a restart resumes instead of replaying from scratch) + an
-    idempotent commit: each checkpoint's max committed batch_id rides in
-    the snapshot summary (`stream_watermarks`, carried forward through
-    every later commit by LakeTable._commit_snapshot), so a
-    retried/replayed batch at or below the watermark is skipped instead
-    of double-appended. The check reads ONLY the latest snapshot —
-    O(1) per micro-batch regardless of snapshot-log length (the old
-    form scanned every snapshot's operation name).
+    at-least-once delivery (checkpointed offsets) + an idempotent
+    commit: a batch's rows and its `batch_mark` land in one snapshot,
+    and a replayed batch that `batch_landed` is skipped. A run still
+    active after `poll_timeout_s` is stopped with TimeoutError.
     Returns the number of micro-batches newly committed."""
     batches = {"n": 0}
 
     def _commit(df: DataFrame, batch_id: int) -> None:
-        wm = table.snapshot().summary.get("stream_watermarks", {})
-        if batch_id <= wm.get(checkpoint_name, -1):
-            return
-        if df.isEmpty():
+        if batch_landed(table, checkpoint_name, batch_id) or df.isEmpty():
             return
         table.append(
             df,
             operation=f"stream_batch_{batch_id}",
-            summary={"stream_watermarks": {checkpoint_name: batch_id}},
+            summary=batch_mark(checkpoint_name, batch_id),
         )
         batches["n"] += 1
         # STREAMING IVM: downstream rollups ride the micro-batch —
@@ -158,16 +184,5 @@ def stream_append_to_laketable(
         for rollup in refresh_rollups or []:
             rollup.refresh()
 
-    q = (
-        source.writeStream.foreachBatch(_commit)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", f"{table.root}/_checkpoints/{checkpoint_name}"
-        )
-        .start()
-    )
-    deadline = time.time() + poll_timeout_s
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(1.0)
-    q.awaitTermination()
+    run_foreach_batch(source, table.root, checkpoint_name, _commit, poll_timeout_s)
     return batches["n"]

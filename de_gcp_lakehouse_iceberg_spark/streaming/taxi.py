@@ -7,26 +7,29 @@ job with THREE sinks off a single parsed stream:
 3. 60 s tumbling-window stats → `windowed_trip_stats` with
    window_start/window_end columns (main.py:373-390, T1-T3).
 
-All three land in ONE foreachBatch: each micro-batch commits the three
-tables from the same parsed DataFrame, so a replayed batch can't split
-(per-batch atomicity mirrors the reference's per-element at-least-once
-semantics but without dupes — T7 upgrade). The windowed stats are
-recomputed per batch from that batch's rows; because the reference
+All three are fed by ONE foreachBatch and commit as three appends.
+Replay contract (T7 upgrade): one checkpoint per warehouse
+(`_checkpoints/taxi_stream`), so a rerun on the same input and
+warehouse resumes; input files are tracked by path, each read once per
+checkpoint; every sink applies the shared commit rule (streaming/
+pipeline.py), so a batch replayed after a failure between appends
+re-lands only in the sinks that missed it — exactly once per sink.
+The windowed stats are recomputed per batch; because the reference
 defines parity on full bounded replay (SURVEY.md §7.3 item 3), the
 test re-aggregates across batches exactly like Q22.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lakehouse import LakeTable, Warehouse
-from ..sources.ingest import classify_trips, hourly_stats, invalid_trips, valid_trips
-from ..sources.taxi_schema import TRIP_INPUT
+from ..sources.ingest import classify_trips, invalid_trips, trip_json_reader, valid_trips
+from .pipeline import batch_landed, batch_mark, run_foreach_batch
+
+CHECKPOINT = "taxi_stream"
+SINKS = ("taxi_trips", "windowed_trip_stats", "processing_errors")
 
 
 def rate_trip_stream(spark: SparkSession, rows_per_second: int = 50) -> DataFrame:
@@ -85,8 +88,9 @@ def rate_trip_stream(spark: SparkSession, rows_per_second: int = 50) -> DataFram
 def read_trips_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """JSONL file stream standing in for the Pub/Sub subscription (S3)."""
-    reader = spark.readStream.schema(TRIP_INPUT)
+    """JSONL file stream standing in for the Pub/Sub subscription (S3),
+    read under the same contract as batch `read_jsonl`."""
+    reader = trip_json_reader(spark.readStream)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(input_dir)
@@ -130,41 +134,41 @@ def run_streaming_pipeline(
     max_files_per_trigger: int | None = 1,
 ) -> dict:
     """Bounded streaming run (Trigger.AvailableNow): every input file
-    flows through parse → validate → three-sink fan-out. Returns final
-    counts per sink."""
+    not yet read by this warehouse's checkpoint flows through parse →
+    validate → three-sink fan-out. Returns final counts per sink."""
     wh = Warehouse(spark, warehouse_root)
-    trips_t = wh.create_table("taxi_trips")
-    errors_t = wh.create_table("processing_errors")
-    windows_t = wh.create_table("windowed_trip_stats")
+    existing = wh.table_names()
+    trips_t, windows_t, errors_t = (
+        wh.table(n) if n in existing else wh.create_table(n) for n in SINKS
+    )
 
-    stream = read_trips_stream(spark, input_dir, max_files_per_trigger)
+    def _land(t: LakeTable, df: DataFrame, batch_id: int) -> None:
+        if not batch_landed(t, CHECKPOINT, batch_id):
+            t.append(
+                df,
+                operation=f"stream_batch_{batch_id}",
+                summary=batch_mark(CHECKPOINT, batch_id),
+            )
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         classified = classify_trips(batch_df, mode="streaming").cache()
         try:
             v = valid_trips(classified)
             if not v.isEmpty():
-                trips_t.append(v, operation=f"stream_batch_{batch_id}")
-                windows_t.append(
-                    windowed_trip_stats(v, window=window),
-                    operation=f"stream_batch_{batch_id}",
-                )
+                _land(trips_t, v, batch_id)
+                _land(windows_t, windowed_trip_stats(v, window=window), batch_id)
             inv = invalid_trips(classified)
             if not inv.isEmpty():
-                errors_t.append(inv, operation=f"stream_batch_{batch_id}")
+                _land(errors_t, inv, batch_id)
         finally:
             classified.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_commit)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(warehouse_root, "_checkpoints", uuid.uuid4().hex[:8]),
-        )
-        .start()
+    run_foreach_batch(
+        read_trips_stream(spark, input_dir, max_files_per_trigger),
+        wh.root,
+        CHECKPOINT,
+        _commit,
     )
-    q.awaitTermination()
     # row counts from snapshot manifests — O(#files) metadata, no scan
     return {
         "valid": trips_t.snapshot().total_rows,

@@ -173,3 +173,49 @@ def test_kmeans_kwarg_validation(spark, sf_dir):
         kmeans(emb, k=2, iters=0, fast=True, assign_mode="fold")
     # consistent combination stays allowed
     kmeans(emb, k=2, iters=0, fast=True, assign_mode="fast")
+
+
+def test_dispersion_matches_bruteforce_pairwise(spark):
+    """The ||Σv||² identity == the quadratic definition on a planted
+    set (up to the operator's documented 1e-6 centroid quantization)."""
+    import itertools
+
+    vecs = {
+        0: [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [1.0, 0.0, 0.0]],
+        1: [[0.5, 0.5, 0.0], [0.5, 0.5, 0.0]],
+    }
+    rows = [
+        (int(label), [float(x) for x in v])
+        for label, vs in vecs.items()
+        for v in vs
+    ]
+    df = spark.createDataFrame(
+        rows, "label int, embedding array<float>"
+    ).withColumn("vec_id", F.monotonically_increasing_id())
+
+    from de_gcp_lakehouse_iceberg_spark.plans.dispersion_query import (
+        q109_embedding_dispersion,
+    )
+    import de_gcp_lakehouse_iceberg_spark.tables as tables
+
+    orig = tables.table
+    try:
+        tables_table = lambda sp, sf, name: df  # noqa: E731
+        import de_gcp_lakehouse_iceberg_spark.plans.dispersion_query as dq
+
+        dq.table = tables_table
+        got = {
+            r["label"]: r["mean_pair_dot"]
+            for r in q109_embedding_dispersion(spark, "ignored").collect()
+        }
+    finally:
+        import de_gcp_lakehouse_iceberg_spark.plans.dispersion_query as dq
+
+        dq.table = orig
+    for label, vs in vecs.items():
+        dots = [
+            sum(a * b for a, b in zip(x, y))
+            for x, y in itertools.permutations(vs, 2)
+        ]
+        expect = sum(dots) / (len(vs) * (len(vs) - 1))
+        assert abs(got[label] - expect) < 1e-4, (label, got[label], expect)

@@ -8,6 +8,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 from de_gcp_lakehouse_iceberg_spark import pipeline_cli
+from de_gcp_lakehouse_iceberg_spark.lakehouse import LakeTable
 from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
 from de_gcp_lakehouse_iceberg_spark.sources import generator
 
@@ -24,6 +25,39 @@ def test_pipeline_cli_batch_mode(spark, tmp_path):
     res = pipeline_cli.run(args)
     assert res["mode"] == "batch"
     assert res["valid"] + res["invalid"] == 120
+
+
+def test_pipeline_cli_batch_csv_mode(spark, tmp_path):
+    """--format csv reads positional NYC CSV into the same fan-out as
+    JSONL: two valid trips in two hours, one rejected for distance."""
+
+    def line(pickup, dropoff, dist):
+        row = [""] * 18
+        row[0], row[1], row[2], row[3], row[4] = "1", pickup, dropoff, "2", dist
+        row[5], row[6], row[9], row[10] = "-73.98", "40.75", "-73.95", "40.78"
+        row[11], row[12], row[17] = "card", "20.00", "25.00"
+        return ",".join(row)
+
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "trips.csv").write_text(
+        "\n".join([
+            line("2025-03-01 08:00:00", "2025-03-01 08:30:00", "3.5"),
+            line("2025-03-01 09:00:00", "2025-03-01 09:20:00", "2.0"),
+            line("2025-03-01 10:00:00", "2025-03-01 10:10:00", "-1"),
+        ]) + "\n"
+    )
+    args = pipeline_cli.build_parser().parse_args(
+        ["--mode", "batch", "--format", "csv",
+         "--input", str(tmp_path / "in" / "trips.csv"),
+         "--warehouse", str(tmp_path / "wh")]
+    )
+    res = pipeline_cli.run(args)
+    assert res == {
+        "mode": "batch", "format": "csv",
+        "valid": 2, "invalid": 1, "stats_rows": 2,
+    }
+    errors = LakeTable.load(spark, str(tmp_path / "wh" / "processing_errors"))
+    assert [r.error_type for r in errors.scan().collect()] == ["validation_failed"]
 
 
 def test_pipeline_cli_streaming_mode(spark, tmp_path):

@@ -9,6 +9,7 @@ from de_gcp_lakehouse_iceberg_spark.operators.sketches import (
     kmv_sketch,
     merge_kmv,
 )
+from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
 from de_gcp_lakehouse_iceberg_spark.tables import table
 
 
@@ -227,3 +228,46 @@ def test_unigram_scores_rank_typical_above_gibberish(spark):
     assert scores[0] == scores[19]              # identical docs, same score
     assert scores[100] < scores[0]              # gibberish scores lower
     assert all(s <= 0 for s in scores.values())  # log-probs
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_overlap_matrix_never_joins_the_corpus_with_itself(
+    spark, sf_dir_medium
+):
+    """q108's sketch half must be sketch-vs-sketch arithmetic. The only
+    corpus-scale self-join allowed is the EXACT verification column's
+    key equi-join; there must be no cartesian product anywhere (the
+    20x20 source-pair expansion is a broadcast nested-loop over
+    source NAMES, never over corpus rows)."""
+    plan = _plan(QUERIES["q108_source_overlap_matrix"](spark, sf_dir_medium))
+    assert "CartesianProduct" not in plan
+
+
+def test_trigram_fast_udf_equals_expression_form(spark, sf_dir):
+    """q108's Arrow keying UDF must stay bit-identical to the
+    cross-engine expression anchor (the oracle replays the anchor)."""
+    from de_gcp_lakehouse_iceberg_spark.plans.overlap_matrix_query import (
+        _trigram_keys,
+        trigram_keys_fast,
+    )
+    from de_gcp_lakehouse_iceberg_spark.tables import table
+
+    docs = table(spark, sf_dir, "documents")
+    edge = spark.createDataFrame(
+        [("",), ("one",), ("two words",), ("a b c d e",)], "text string"
+    )
+    for df in (docs.select("text"), edge):
+        bad = (
+            df.select(
+                (
+                    _trigram_keys(F.col("text"))
+                    == trigram_keys_fast()(F.col("text"))
+                ).alias("eq")
+            )
+            .filter(~F.col("eq"))
+            .count()
+        )
+        assert bad == 0

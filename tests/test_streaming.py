@@ -4,6 +4,7 @@ under a watermark."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from de_gcp_lakehouse_iceberg_spark.lakehouse import LakeTable
@@ -278,3 +279,26 @@ def test_stream_append_maintains_rollup(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_stream_append_poll_timeout_stops_a_hung_batch(spark, sf_dir, tmp_path):
+    """`poll_timeout_s` bounds the run: a micro-batch still busy when it
+    runs out (here a rollup refresh that hangs) stops the query and
+    surfaces as TimeoutError instead of an unbounded wait."""
+    import time
+
+    class HungRollup:
+        def refresh(self):
+            time.sleep(4)
+
+    t = LakeTable.create(spark, str(tmp_path / "sink"))
+    with pytest.raises(TimeoutError):
+        stream_append_to_laketable(
+            spark,
+            read_events_stream(spark, sf_dir),
+            t,
+            poll_timeout_s=1.0,
+            checkpoint_name="hung",
+            refresh_rollups=[HungRollup()],
+        )
+    assert not any(q.isActive for q in spark.streams.active)

@@ -162,7 +162,9 @@ def test_batch_pipeline_end_to_end(spark, tmp_path):
     )
     generator.write_jsonl(trips, str(tmp_path / "in"), files=2)
     counts = ingest.run_batch_pipeline(
-        spark, str(tmp_path / "in") + "/*.jsonl", str(tmp_path / "wh")
+        spark,
+        ingest.read_jsonl(spark, str(tmp_path / "in") + "/*.jsonl"),
+        str(tmp_path / "wh"),
     )
     assert counts["valid"] + counts["invalid"] == 300
     assert counts["valid"] > 200

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from de_gcp_lakehouse_iceberg_spark.lakehouse.term_index import (
     TermStatsIndex,
 )
+from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
 
 
 def _docs(spark, rows):
@@ -141,3 +142,23 @@ def test_bm25_from_index_scores_missing_terms_like_direct(
     assert len(direct) == len(stored) > 0
     assert all(r["bm25"] is not None for r in stored)
     assert [tuple(r) for r in direct] == [tuple(r) for r in stored]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_tfidf_and_bm25_use_no_window(spark, sf_dir_medium):
+    """Per-group top-k must run through the bounded-state two-phase
+    kernel — a Window over the corpus would sort whole partitions."""
+    for q in ("q105_tfidf_terms", "q107_bm25_topk"):
+        plan = _plan(QUERIES[q](spark, sf_dir_medium))
+        assert "Window" not in plan, f"{q} regressed to a Window plan"
+
+
+def test_bm25_stats_are_broadcast(spark, sf_dir_medium):
+    """Corpus stats (idf row, avgdl row) must reach the scoring join
+    as broadcasts — a shuffle join against a 1-row side is the
+    anti-pattern."""
+    plan = _plan(QUERIES["q107_bm25_topk"](spark, sf_dir_medium))
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
