@@ -19,6 +19,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import plan_bytes, small_statement
 from .table import FILE_COL as _FILE
 from .table import LakeTable, Snapshot
 
@@ -76,33 +77,34 @@ def delete(table: LakeTable, predicate: Column | str) -> Snapshot:
     """DELETE FROM t WHERE pred (D5)."""
     pred = _as_col(predicate)
     snap = table.snapshot()  # pin the base BEFORE planning (OCC)
-    df = table.scan(version=snap.version, with_file_path=True)
-    affected = _affected_files(table, df, pred)
-    if not affected:
-        return snap
-    survivors = (
-        table._read_files(snap, affected)
-        .filter(~pred | pred.isNull())
-    )
-    # A string predicate is recorded in the commit summary: for a CoW
-    # delete, removed-rows minus survivor-rows IS exactly the set of
-    # pred-true rows, so `changelog` can emit the DELETE feed from a
-    # filter over the removed files instead of a two-sided exceptAll
-    # diff (r14 — replace_files drops the summary key if a concurrent
-    # rebase re-filtered the output, where the identity no longer
-    # holds).
-    summary = (
-        {"predicate": predicate}
-        if isinstance(predicate, str) and _deterministic_text(predicate)
-        else None
-    )
-    return table.replace_files(
-        affected,
-        survivors,
-        operation="delete",
-        summary=summary,
-        expected_base=snap.version,
-    )
+    with small_statement(table.spark, snap.total_bytes):
+        df = table.scan(version=snap.version, with_file_path=True)
+        affected = _affected_files(table, df, pred)
+        if not affected:
+            return snap
+        survivors = (
+            table._read_files(snap, affected)
+            .filter(~pred | pred.isNull())
+        )
+        # A string predicate is recorded in the commit summary: for a CoW
+        # delete, removed-rows minus survivor-rows IS exactly the set of
+        # pred-true rows, so `changelog` can emit the DELETE feed from a
+        # filter over the removed files instead of a two-sided exceptAll
+        # diff (r14 — replace_files drops the summary key if a concurrent
+        # rebase re-filtered the output, where the identity no longer
+        # holds).
+        summary = (
+            {"predicate": predicate}
+            if isinstance(predicate, str) and _deterministic_text(predicate)
+            else None
+        )
+        return table.replace_files(
+            affected,
+            survivors,
+            operation="delete",
+            summary=summary,
+            expected_base=snap.version,
+        )
 
 
 def _update_replayable(
@@ -136,41 +138,42 @@ def update(
     expressions evaluated per-row (CASE recodes, anonymization, etc.)."""
     pred = _as_col(predicate)
     snap = table.snapshot()  # pin the base BEFORE planning (OCC)
-    df = table.scan(version=snap.version, with_file_path=True)
-    affected = _affected_files(table, df, pred)
-    if not affected:
-        return snap
-    rewritten = table._read_files(snap, affected)
-    for name, expr in assignments.items():
-        new_val = _as_col(expr) if isinstance(expr, str) else expr
-        rewritten = rewritten.withColumn(
-            name, F.when(pred, new_val).otherwise(F.col(name))
+    with small_statement(table.spark, snap.total_bytes):
+        df = table.scan(version=snap.version, with_file_path=True)
+        affected = _affected_files(table, df, pred)
+        if not affected:
+            return snap
+        rewritten = table._read_files(snap, affected)
+        for name, expr in assignments.items():
+            new_val = _as_col(expr) if isinstance(expr, str) else expr
+            rewritten = rewritten.withColumn(
+                name, F.when(pred, new_val).otherwise(F.col(name))
+            )
+        # All-text DML records itself in the commit summary so `changelog`
+        # can replay the net diff from the REMOVED files only (r14): the
+        # rewritten files are pred-false rows unchanged plus pred-true rows
+        # mapped, and multiset difference cancels the unchanged side
+        # analytically — (A ⊎ B) \ (C ⊎ B) = A \ C — so the feed is
+        # exceptAll over just the pred-true slice instead of both full file
+        # sets. Guarded by _update_replayable (chain-order visibility) and
+        # dropped by replace_files if a concurrent rebase re-filters the
+        # output (same rule as the delete fast path).
+        summary = None
+        if isinstance(predicate, str) and all(
+            isinstance(e, str) for e in assignments.values()
+        ) and _deterministic_text(predicate, *assignments.values()):
+            if _update_replayable(predicate, dict(assignments)):
+                summary = {
+                    "predicate": predicate,
+                    "assignments": dict(assignments),
+                }
+        return table.replace_files(
+            affected,
+            rewritten,
+            operation="update",
+            summary=summary,
+            expected_base=snap.version,
         )
-    # All-text DML records itself in the commit summary so `changelog`
-    # can replay the net diff from the REMOVED files only (r14): the
-    # rewritten files are pred-false rows unchanged plus pred-true rows
-    # mapped, and multiset difference cancels the unchanged side
-    # analytically — (A ⊎ B) \ (C ⊎ B) = A \ C — so the feed is
-    # exceptAll over just the pred-true slice instead of both full file
-    # sets. Guarded by _update_replayable (chain-order visibility) and
-    # dropped by replace_files if a concurrent rebase re-filters the
-    # output (same rule as the delete fast path).
-    summary = None
-    if isinstance(predicate, str) and all(
-        isinstance(e, str) for e in assignments.values()
-    ) and _deterministic_text(predicate, *assignments.values()):
-        if _update_replayable(predicate, dict(assignments)):
-            summary = {
-                "predicate": predicate,
-                "assignments": dict(assignments),
-            }
-    return table.replace_files(
-        affected,
-        rewritten,
-        operation="update",
-        summary=summary,
-        expected_base=snap.version,
-    )
 
 
 def merge(
@@ -222,88 +225,88 @@ def merge(
             add_column(table, f.name, f.dataType.simpleString())
 
     snap = table.snapshot()  # pin the base BEFORE planning (OCC)
-    target = table.scan(version=snap.version, with_file_path=True)
-    src = source.alias("source")
-
-    # duplicate source keys are only fatal if they MATCH a target row
-    # (duplicate unmatched keys legitimately insert one row each)
-    dup_keys = (
-        source.groupBy(*on).agg(F.count("*").alias("_c")).filter(F.col("_c") > 1).drop("_c")
-    )
-    if (
-        dup_keys.join(
-            table.scan(version=snap.version).select(*on), on=on, how="left_semi"
-        )
-        .limit(1)
-        .count()
-        > 0
+    with small_statement(
+        table.spark, snap.total_bytes + plan_bytes(source)
     ):
-        raise ValueError(
-            "MERGE source has duplicate join keys matching a target row — "
-            "each target row may match at most one source row (BigQuery "
-            "MERGE semantics); dedupe the source first"
+        # the one planned scan: the guard and the anti-join use its keys,
+        # the rewrite its columns
+        target = table.scan(version=snap.version, with_file_path=True)
+        tgt_cols = [c for c in target.columns if c != _FILE]
+        tgt_keys = target.select(*on)
+        src = source.alias("source")
+
+        # duplicate source keys are only fatal if they MATCH a target row
+        # (duplicate unmatched keys legitimately insert one row each)
+        dup_keys = (
+            source.groupBy(*on)
+            .agg(F.count("*").alias("_c"))
+            .filter(F.col("_c") > 1)
+            .drop("_c")
+        )
+        if dup_keys.join(tgt_keys, on=on, how="left_semi").limit(1).count() > 0:
+            raise ValueError(
+                "MERGE source has duplicate join keys matching a target row — "
+                "each target row may match at most one source row (BigQuery "
+                "MERGE semantics); dedupe the source first"
+            )
+
+        # files holding matched rows — semi join keeps only file names moving
+        matched_files = _rel_paths(
+            table,
+            [
+                r[0]
+                for r in target.alias("t")
+                .join(src, on=on, how="left_semi")
+                .select(_FILE)
+                .distinct()
+                .collect()
+            ],
         )
 
-    # files holding matched rows — semi join keeps only file names moving
-    matched_files = _rel_paths(
-        table,
-        [
-            r[0]
-            for r in target.alias("t")
-            .join(src, on=on, how="left_semi")
-            .select(_FILE)
-            .distinct()
-            .collect()
-        ],
-    )
+        rewritten: DataFrame | None = None
+        if matched_files:
+            base = table._read_files(snap, matched_files).alias("t")
+            joined = base.join(src, on=on, how="left")
+            matched = F.col(f"source.{on[0]}").isNotNull()
+            proj = []
+            for c in tgt_cols:
+                if when_matched_update and c in when_matched_update:
+                    expr = when_matched_update[c]
+                    new_val = F.expr(expr) if isinstance(expr, str) else expr
+                    proj.append(
+                        F.when(matched, new_val)
+                        .otherwise(F.col(f"t.{c}"))
+                        .alias(c)
+                    )
+                else:
+                    proj.append(F.col(f"t.{c}").alias(c))
+            rewritten = joined.select(*proj)
 
-    rewritten: DataFrame | None = None
-    if matched_files:
-        tgt_cols = [c for c in table.scan(version=snap.version).columns]
-        base = table._read_files(snap, matched_files).alias("t")
-        joined = base.join(src, on=on, how="left")
-        matched = F.col(f"source.{on[0]}").isNotNull()
-        proj = []
-        for c in tgt_cols:
-            if when_matched_update and c in when_matched_update:
-                expr = when_matched_update[c]
-                new_val = F.expr(expr) if isinstance(expr, str) else expr
-                proj.append(
-                    F.when(matched, new_val).otherwise(F.col(f"t.{c}")).alias(c)
-                )
-            else:
-                proj.append(F.col(f"t.{c}").alias(c))
-        rewritten = joined.select(*proj)
-
-    inserts: DataFrame | None = None
-    if when_not_matched_insert:
-        tgt_cols = table.scan(version=snap.version).columns
-        src_cols = set(source.columns)
-        inserts = (
-            src.join(table.scan(version=snap.version).select(*on), on=on, how="left_anti")
-            .select(
+        inserts: DataFrame | None = None
+        if when_not_matched_insert:
+            src_cols = set(source.columns)
+            inserts = src.join(tgt_keys, on=on, how="left_anti").select(
                 *[
                     # target columns the source doesn't carry insert NULL
                     (F.col(c) if c in src_cols else F.lit(None)).alias(c)
                     for c in tgt_cols
                 ]
             )
+
+        if rewritten is not None and inserts is not None:
+            add_df = rewritten.unionByName(inserts)
+        else:
+            add_df = rewritten if rewritten is not None else inserts
+
+        if add_df is None and not matched_files:
+            return table.snapshot()
+        return table.replace_files(
+            matched_files,
+            add_df,
+            operation="merge",
+            summary={"merge_on": on},
+            expected_base=snap.version,
         )
-
-    if rewritten is not None and inserts is not None:
-        add_df = rewritten.unionByName(inserts)
-    else:
-        add_df = rewritten if rewritten is not None else inserts
-
-    if add_df is None and not matched_files:
-        return table.snapshot()
-    return table.replace_files(
-        matched_files,
-        add_df,
-        operation="merge",
-        summary={"merge_on": on},
-        expected_base=snap.version,
-    )
 
 
 def _net_diff_feed(
@@ -575,107 +578,110 @@ def apply_changelog(
     Requires `key_cols` to identify rows uniquely in the source's end
     state (CDC on non-unique keys is ill-defined).
     """
-    # latest change per key via struct-MIN, not a row_number window:
-    # the aggregate partial-combines each key's feed rows map-side and
-    # needs no per-key sort (the feed is the hot input at scale —
-    # O(changes), every one of which the window form shuffled AND
-    # sorted). Order key: newest version first (negated ASC), INSERT
-    # (0) outranking its paired DELETE (1) within a version; remaining
-    # payload fields are deterministic tie-breaks that a well-formed
-    # feed (one INSERT / one DELETE per key-version) never reaches.
-    rest = [
-        c for c in changes.columns
-        if c not in key_cols
-        and c not in ("_change_version", "_change_timestamp")
-    ]
-    # External feeds are arbitrary DataFrames: negation needs a numeric
-    # version, and a NULL version must LOSE (the desc-window form
-    # sorted nulls last) — negated-ascending would rank it FIRST, so
-    # order on an explicit null flag before the negated value.
-    vtype = changes.schema["_change_version"].dataType.typeName()
-    if vtype not in (
-        "byte", "short", "integer", "long", "float", "double", "decimal"
-    ):
-        raise TypeError(
-            f"_change_version must be numeric, got {vtype}: cast the "
-            "feed's version to a monotone number before apply_changelog"
-        )
-    order_fields = [
-        F.col("_change_version").isNull().cast("int").alias("_vnull"),
-        (-F.coalesce(F.col("_change_version"), F.lit(0))).alias("_negv"),
-        F.when(F.col("_change_type") == "INSERT", 0)
-        .otherwise(1)
-        .alias("_typ"),
-    ]
-    from ..operators.topk import _has_map
-
-    if any(_has_map(changes.schema[c].dataType) for c in rest):
-        # map-typed payload is unorderable inside the MIN struct —
-        # fall back to the window form (any payload schema), same
-        # order: newest version first, nulls last, INSERT over DELETE
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(*key_cols).orderBy(
-            F.col("_change_version").desc_nulls_last(),
-            F.when(F.col("_change_type") == "INSERT", 0).otherwise(1),
-        )
-        picked = (
-            changes.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    else:
-        picked = (
-            changes.groupBy(*key_cols)
-            .agg(
-                F.min(
-                    F.struct(*order_fields, F.struct(*rest).alias("_row"))
-                ).alias("_w")
-            )
-            .select(*key_cols, F.col("_w._row.*"))
-        )
-    last = (
-        picked.select(  # restore the feed's column order
-            *[
-                c for c in changes.columns
-                if c not in ("_change_version", "_change_timestamp")
-            ]
-        )
-        # consumed 4x below (upserts, two key joins, summary counts):
-        # checkpoint once so the feed agg never recomputes per action
-        .localCheckpoint(eager=True)
-    )
-    payload_cols = [c for c in last.columns if c != "_change_type"]
-    upserts = last.filter(F.col("_change_type") == "INSERT").select(
-        *payload_cols
-    )
-    touched_keys = last.select(*key_cols)
-    # ONE job for both summary counts (was two full-feed jobs)
-    n_keys, n_upserts = last.agg(
-        F.count(F.lit(1)),
-        F.count(F.when(F.col("_change_type") == "INSERT", 1)),
-    ).first()
-
     snap = replica.snapshot()  # pin base (OCC)
-    target = replica.scan(version=snap.version, with_file_path=True)
-    hit = target.join(touched_keys, on=key_cols, how="left_semi")
-    affected = _rel_paths(
-        replica, [r[0] for r in hit.select(_FILE).distinct().collect()]
-    )
-    if affected:
-        kept = replica._read_files(snap, affected).join(
-            touched_keys, on=key_cols, how="left_anti"
+    with small_statement(
+        replica.spark, snap.total_bytes + plan_bytes(changes)
+    ):
+        # latest change per key via struct-MIN, not a row_number window:
+        # the aggregate partial-combines each key's feed rows map-side and
+        # needs no per-key sort (the feed is the hot input at scale —
+        # O(changes), every one of which the window form shuffled AND
+        # sorted). Order key: newest version first (negated ASC), INSERT
+        # (0) outranking its paired DELETE (1) within a version; remaining
+        # payload fields are deterministic tie-breaks that a well-formed
+        # feed (one INSERT / one DELETE per key-version) never reaches.
+        rest = [
+            c for c in changes.columns
+            if c not in key_cols
+            and c not in ("_change_version", "_change_timestamp")
+        ]
+        # External feeds are arbitrary DataFrames: negation needs a numeric
+        # version, and a NULL version must LOSE (the desc-window form
+        # sorted nulls last) — negated-ascending would rank it FIRST, so
+        # order on an explicit null flag before the negated value.
+        vtype = changes.schema["_change_version"].dataType.typeName()
+        if vtype not in (
+            "byte", "short", "integer", "long", "float", "double", "decimal"
+        ):
+            raise TypeError(
+                f"_change_version must be numeric, got {vtype}: cast the "
+                "feed's version to a monotone number before apply_changelog"
+            )
+        order_fields = [
+            F.col("_change_version").isNull().cast("int").alias("_vnull"),
+            (-F.coalesce(F.col("_change_version"), F.lit(0))).alias("_negv"),
+            F.when(F.col("_change_type") == "INSERT", 0)
+            .otherwise(1)
+            .alias("_typ"),
+        ]
+        from ..operators.topk import _has_map
+
+        if any(_has_map(changes.schema[c].dataType) for c in rest):
+            # map-typed payload is unorderable inside the MIN struct —
+            # fall back to the window form (any payload schema), same
+            # order: newest version first, nulls last, INSERT over DELETE
+            from pyspark.sql import Window as W
+
+            w = W.partitionBy(*key_cols).orderBy(
+                F.col("_change_version").desc_nulls_last(),
+                F.when(F.col("_change_type") == "INSERT", 0).otherwise(1),
+            )
+            picked = (
+                changes.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+        else:
+            picked = (
+                changes.groupBy(*key_cols)
+                .agg(
+                    F.min(
+                        F.struct(*order_fields, F.struct(*rest).alias("_row"))
+                    ).alias("_w")
+                )
+                .select(*key_cols, F.col("_w._row.*"))
+            )
+        last = (
+            picked.select(  # restore the feed's column order
+                *[
+                    c for c in changes.columns
+                    if c not in ("_change_version", "_change_timestamp")
+                ]
+            )
+            # consumed 4x below (upserts, two key joins, summary counts):
+            # checkpoint once so the feed agg never recomputes per action
+            .localCheckpoint(eager=True)
         )
-        add_df = kept.unionByName(upserts)
-    else:
-        add_df = upserts
-    return replica.replace_files(
-        affected,
-        add_df,
-        operation="apply_changelog",
-        summary={"upserts": n_upserts, "keys": n_keys},
-        expected_base=snap.version,
-    )
+        payload_cols = [c for c in last.columns if c != "_change_type"]
+        upserts = last.filter(F.col("_change_type") == "INSERT").select(
+            *payload_cols
+        )
+        touched_keys = last.select(*key_cols)
+        # ONE job for both summary counts (was two full-feed jobs)
+        n_keys, n_upserts = last.agg(
+            F.count(F.lit(1)),
+            F.count(F.when(F.col("_change_type") == "INSERT", 1)),
+        ).first()
+
+        target = replica.scan(version=snap.version, with_file_path=True)
+        hit = target.join(touched_keys, on=key_cols, how="left_semi")
+        affected = _rel_paths(
+            replica, [r[0] for r in hit.select(_FILE).distinct().collect()]
+        )
+        if affected:
+            kept = replica._read_files(snap, affected).join(
+                touched_keys, on=key_cols, how="left_anti"
+            )
+            add_df = kept.unionByName(upserts)
+        else:
+            add_df = upserts
+        return replica.replace_files(
+            affected,
+            add_df,
+            operation="apply_changelog",
+            summary={"upserts": n_upserts, "keys": n_keys},
+            expected_base=snap.version,
+        )
 
 
 def delete_mor(table: LakeTable, predicate: str) -> Snapshot:
@@ -730,14 +736,15 @@ def materialize_deletes(table: LakeTable) -> Snapshot:
     ]
     if not affected:
         return snap
-    rewritten = table._read_files(snap, affected)  # deletes applied here
-    return table.replace_files(
-        affected,
-        rewritten,
-        operation="materialize_deletes",
-        summary={"applied_deletes": len(snap.deletes)},
-        expected_base=snap.version,
-    )
+    with small_statement(table.spark, snap.total_bytes):
+        rewritten = table._read_files(snap, affected)  # deletes applied here
+        return table.replace_files(
+            affected,
+            rewritten,
+            operation="materialize_deletes",
+            summary={"applied_deletes": len(snap.deletes)},
+            expected_base=snap.version,
+        )
 
 
 def update_mor(
@@ -760,23 +767,24 @@ def update_mor(
     snap = table.snapshot()
     if not snap.files:
         return snap
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    current = table._read_files(snap, [f.path for f in snap.files])
-    updated = current.filter(pred)
-    for name, expr in assignments.items():
-        updated = updated.withColumn(
-            name, _as_col(expr) if isinstance(expr, str) else expr
+    with small_statement(table.spark, snap.total_bytes):
+        pred = F.coalesce(F.expr(predicate), F.lit(False))
+        current = table._read_files(snap, [f.path for f in snap.files])
+        updated = current.filter(pred)
+        for name, expr in assignments.items():
+            updated = updated.withColumn(
+                name, _as_col(expr) if isinstance(expr, str) else expr
+            )
+        if snap.schema_json:
+            updated = table._align_to_schema(updated, snap.schema_json)
+        new_files = table._stamp_seq(table._write_files(updated))
+        new_seq = snap.version + 1
+        return table._commit_snapshot(
+            operation="update_mor",
+            files=snap.files + new_files,
+            schema_json=snap.schema_json,
+            base=snap.version,
+            summary={"predicate": predicate,
+                     "updated_rows": sum(f.rows for f in new_files)},
+            deletes=snap.deletes + [{"predicate": predicate, "seq": new_seq}],
         )
-    if snap.schema_json:
-        updated = table._align_to_schema(updated, snap.schema_json)
-    new_files = table._stamp_seq(table._write_files(updated))
-    new_seq = snap.version + 1
-    return table._commit_snapshot(
-        operation="update_mor",
-        files=snap.files + new_files,
-        schema_json=snap.schema_json,
-        base=snap.version,
-        summary={"predicate": predicate,
-                 "updated_rows": sum(f.rows for f in new_files)},
-        deletes=snap.deletes + [{"predicate": predicate, "seq": new_seq}],
-    )

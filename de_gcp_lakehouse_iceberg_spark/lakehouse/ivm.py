@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import id_hash
+from ..session import plan_bytes, small_statement
 from . import dml
 from .table import LakeTable
 
@@ -321,163 +322,175 @@ class IncrementalRollup:
                 "partitions_rewritten": 0,
             }
         ch = self._change_rows(base, last, cur)
-        # weighted feed (r15): `_n` is the multiplicity the replicated
-        # feed would carry (0 for values the projected diff cancelled —
-        # those ride only for `_gross`, the uncancelled input-row count
-        # reported as delta_rows), so every per-row contribution scales
-        # by _n and the value-level min/max/sketch terms ignore _n = 0
-        # rows. Per projected value the signed net is IDENTICAL to the
-        # full-width feed's, which is the whole correctness contract of
-        # abelian delta maintenance; the recompute triggers may only
-        # differ on values whose delete cancelled against an equal
-        # insert — exactly the case where the stored extremum/sketch is
-        # provably unchanged either way.
-        is_ins = F.col("_change_type") == "INSERT"
-        w = F.col("_n")
-        live = w > 0
-        sign = F.when(is_ins, F.lit(1)).otherwise(F.lit(-1))
-        # the change-row count rides the deltas aggregation instead of
-        # a separate ch.count(): the changelog feed is a chain of
-        # exceptAll diffs over the commits' rewritten files, and an
-        # uncached count() recomputes that whole chain a second time —
-        # strictly wasted work that grows with the DML window (measured
-        # ~10% of refresh wall at sf0.1's small window; the diff chain
-        # dominates as the window and file sizes grow)
-        deltas = ch.groupBy(*self.group_cols).agg(
-            F.sum("_gross").alias("_d_rows"),
-            F.sum(sign * w).alias("_d_cnt"),
-            F.sum(F.when(~is_ins, w).otherwise(F.lit(0))).alias("_d_ndel"),
-            *[
-                F.sum((sign * w).cast(_DEC) * F.col(c).cast(_DEC))
-                .cast(_DEC)
-                .alias(f"_d_sum_{c}")
-                for c in self.sum_cols
-            ],
-            *[
-                a
-                for c in self.minmax_cols
-                for a in (
-                    F.min(F.when(is_ins & live, F.col(c))).alias(
-                        f"_ins_min_{c}"
-                    ),
-                    F.max(F.when(is_ins & live, F.col(c))).alias(
-                        f"_ins_max_{c}"
-                    ),
-                    F.min(F.when(~is_ins & live, F.col(c))).alias(
-                        f"_del_min_{c}"
-                    ),
-                    F.max(F.when(~is_ins & live, F.col(c))).alias(
-                        f"_del_max_{c}"
-                    ),
-                )
-            ],
-            *[
-                a
-                for c in self.distinct_cols
-                for a in (
-                    # sketch of the window's inserted values (≤ k) …
-                    F.slice(
-                        F.array_sort(
-                            F.collect_set(
-                                F.when(is_ins & live, id_hash(F.col(c)))
-                            )
+        # the MIN/MAX/KMV targeted recompute re-aggregates the source
+        # PINNED at `cur`, so a base commit landing mid-refresh cannot
+        # leak newer rows into the recomputed extrema
+        recompute_src = (
+            self._base_df_at(base, cur)
+            if self.minmax_cols or self.distinct_cols
+            else None
+        )
+        nbytes = snap.total_bytes + plan_bytes(ch)
+        if recompute_src is not None:
+            nbytes += plan_bytes(recompute_src)
+        with small_statement(self.spark, nbytes):
+            # weighted feed (r15): `_n` is the multiplicity the replicated
+            # feed would carry (0 for values the projected diff cancelled —
+            # those ride only for `_gross`, the uncancelled input-row count
+            # reported as delta_rows), so every per-row contribution scales
+            # by _n and the value-level min/max/sketch terms ignore _n = 0
+            # rows. Per projected value the signed net is IDENTICAL to the
+            # full-width feed's, which is the whole correctness contract of
+            # abelian delta maintenance; the recompute triggers may only
+            # differ on values whose delete cancelled against an equal
+            # insert — exactly the case where the stored extremum/sketch is
+            # provably unchanged either way.
+            is_ins = F.col("_change_type") == "INSERT"
+            w = F.col("_n")
+            live = w > 0
+            sign = F.when(is_ins, F.lit(1)).otherwise(F.lit(-1))
+            # the change-row count rides the deltas aggregation instead of
+            # a separate ch.count(): the changelog feed is a chain of
+            # exceptAll diffs over the commits' rewritten files, and an
+            # uncached count() recomputes that whole chain a second time —
+            # strictly wasted work that grows with the DML window (measured
+            # ~10% of refresh wall at sf0.1's small window; the diff chain
+            # dominates as the window and file sizes grow)
+            deltas = ch.groupBy(*self.group_cols).agg(
+                F.sum("_gross").alias("_d_rows"),
+                F.sum(sign * w).alias("_d_cnt"),
+                F.sum(F.when(~is_ins, w).otherwise(F.lit(0))).alias("_d_ndel"),
+                *[
+                    F.sum((sign * w).cast(_DEC) * F.col(c).cast(_DEC))
+                    .cast(_DEC)
+                    .alias(f"_d_sum_{c}")
+                    for c in self.sum_cols
+                ],
+                *[
+                    a
+                    for c in self.minmax_cols
+                    for a in (
+                        F.min(F.when(is_ins & live, F.col(c))).alias(
+                            f"_ins_min_{c}"
                         ),
-                        1,
-                        self.kmv_k,
-                    ).alias(f"_ins_kmv_{c}"),
-                    # … and the smallest deleted hash (recompute trigger)
-                    F.min(
-                        F.when(~is_ins & live, id_hash(F.col(c)))
-                    ).alias(f"_del_minh_{c}"),
-                )
-            ],
-        )
-        deltas = deltas.select(
-            *[F.col(c).alias(f"_g_{c}") for c in self.group_cols],
-            self._bucket().alias("_gb_d"),
-            *[c for c in deltas.columns if c.startswith("_d_")],
-            *[
-                c
-                for c in deltas.columns
-                if c.startswith(("_ins_", "_del_"))
-            ],
-        ).localCheckpoint()
-
-        # partitions holding affected groups — a bounded collect
-        # (≤ self.buckets rows) that carries the per-bucket change-row
-        # totals, doubling as the partition-pruning handle
-        bucket_rows = (
-            deltas.groupBy("_gb_d")
-            .agg(F.sum("_d_rows").alias("_r"))
-            .collect()
-        )
-        affected = sorted(r["_gb_d"] for r in bucket_rows)
-        delta_rows = int(sum(r["_r"] for r in bucket_rows))
-        aff_strs = {str(b) for b in affected}
-        remove = [
-            f.path for f in snap.files if f.partition.get(_GB) in aff_strs
-        ]
-        old = self.table.scan(
-            version=snap.version,
-            partition_filter=lambda p: p.get(_GB) in aff_strs,
-        )
-
-        # NULL-safe group match: a NULL group value is a real group
-        # (SQL GROUP BY semantics) — plain equality in a full_outer
-        # join would never match it against its existing rollup row
-        # and split the NULL group in two.
-        cond = None
-        for c in self.group_cols:
-            eq = old[c].eqNullSafe(deltas[f"_g_{c}"])
-            cond = eq if cond is None else (cond & eq)
-        merged = old.join(deltas, cond, "full_outer").select(
-            *[
-                F.coalesce(old[c], deltas[f"_g_{c}"]).alias(c)
-                for c in self.group_cols
-            ],
-            F.coalesce(F.col(_GB), F.col("_gb_d")).alias(_GB),
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("_d_cnt"), F.lit(0))
-            ).alias("cnt"),
-            *[
-                (
-                    F.coalesce(F.col(f"sum_{c}"), F.lit(0).cast(_DEC))
-                    + F.coalesce(F.col(f"_d_sum_{c}"), F.lit(0).cast(_DEC))
-                )
-                .cast(_DEC)
-                .alias(f"sum_{c}")
-                for c in self.sum_cols
-            ],
-            *self._minmax_merge_cols(),
-            *self._kmv_merge_cols(),
-            self._needs_recompute().alias("_recompute"),
-        ).filter(F.col("cnt") > 0)  # groups net-deleted drop out
-
-        out_cols = (
-            self.group_cols
-            + [_GB, "cnt"]
-            + [f"sum_{c}" for c in self.sum_cols]
-            + [x for c in self.minmax_cols for x in (f"min_{c}", f"max_{c}")]
-            + [f"kmv_{c}" for c in self.distinct_cols]
-        )
-        if self.minmax_cols or self.distinct_cols:
-            merged = merged.localCheckpoint()
-            fast = merged.filter(~F.col("_recompute")).select(*out_cols)
-            rec = merged.filter(F.col("_recompute"))
-            merged = fast.unionByName(
-                self._targeted_recompute(base, rec, out_cols, version=cur)
+                        F.max(F.when(is_ins & live, F.col(c))).alias(
+                            f"_ins_max_{c}"
+                        ),
+                        F.min(F.when(~is_ins & live, F.col(c))).alias(
+                            f"_del_min_{c}"
+                        ),
+                        F.max(F.when(~is_ins & live, F.col(c))).alias(
+                            f"_del_max_{c}"
+                        ),
+                    )
+                ],
+                *[
+                    a
+                    for c in self.distinct_cols
+                    for a in (
+                        # sketch of the window's inserted values (≤ k) …
+                        F.slice(
+                            F.array_sort(
+                                F.collect_set(
+                                    F.when(is_ins & live, id_hash(F.col(c)))
+                                )
+                            ),
+                            1,
+                            self.kmv_k,
+                        ).alias(f"_ins_kmv_{c}"),
+                        # … and the smallest deleted hash (recompute trigger)
+                        F.min(
+                            F.when(~is_ins & live, id_hash(F.col(c)))
+                        ).alias(f"_del_minh_{c}"),
+                    )
+                ],
             )
-        else:
-            merged = merged.select(*out_cols)
+            deltas = deltas.select(
+                *[F.col(c).alias(f"_g_{c}") for c in self.group_cols],
+                self._bucket().alias("_gb_d"),
+                *[c for c in deltas.columns if c.startswith("_d_")],
+                *[
+                    c
+                    for c in deltas.columns
+                    if c.startswith(("_ins_", "_del_"))
+                ],
+            ).localCheckpoint()
 
-        self.table.replace_files(
-            remove=remove,
-            add_df=merged,
-            operation="ivm_delta_refresh",
-            summary={"source_version": cur, "delta_rows": delta_rows},
-            expected_base=snap.version,
-        )
+            # partitions holding affected groups — a bounded collect
+            # (≤ self.buckets rows) that carries the per-bucket change-row
+            # totals, doubling as the partition-pruning handle
+            bucket_rows = (
+                deltas.groupBy("_gb_d")
+                .agg(F.sum("_d_rows").alias("_r"))
+                .collect()
+            )
+            affected = sorted(r["_gb_d"] for r in bucket_rows)
+            delta_rows = int(sum(r["_r"] for r in bucket_rows))
+            aff_strs = {str(b) for b in affected}
+            remove = [
+                f.path for f in snap.files if f.partition.get(_GB) in aff_strs
+            ]
+            old = self.table.scan(
+                version=snap.version,
+                partition_filter=lambda p: p.get(_GB) in aff_strs,
+            )
+
+            # NULL-safe group match: a NULL group value is a real group
+            # (SQL GROUP BY semantics) — plain equality in a full_outer
+            # join would never match it against its existing rollup row
+            # and split the NULL group in two.
+            cond = None
+            for c in self.group_cols:
+                eq = old[c].eqNullSafe(deltas[f"_g_{c}"])
+                cond = eq if cond is None else (cond & eq)
+            merged = old.join(deltas, cond, "full_outer").select(
+                *[
+                    F.coalesce(old[c], deltas[f"_g_{c}"]).alias(c)
+                    for c in self.group_cols
+                ],
+                F.coalesce(F.col(_GB), F.col("_gb_d")).alias(_GB),
+                (
+                    F.coalesce(F.col("cnt"), F.lit(0))
+                    + F.coalesce(F.col("_d_cnt"), F.lit(0))
+                ).alias("cnt"),
+                *[
+                    (
+                        F.coalesce(F.col(f"sum_{c}"), F.lit(0).cast(_DEC))
+                        + F.coalesce(F.col(f"_d_sum_{c}"), F.lit(0).cast(_DEC))
+                    )
+                    .cast(_DEC)
+                    .alias(f"sum_{c}")
+                    for c in self.sum_cols
+                ],
+                *self._minmax_merge_cols(),
+                *self._kmv_merge_cols(),
+                self._needs_recompute().alias("_recompute"),
+            ).filter(F.col("cnt") > 0)  # groups net-deleted drop out
+
+            out_cols = (
+                self.group_cols
+                + [_GB, "cnt"]
+                + [f"sum_{c}" for c in self.sum_cols]
+                + [x for c in self.minmax_cols for x in (f"min_{c}", f"max_{c}")]
+                + [f"kmv_{c}" for c in self.distinct_cols]
+            )
+            if recompute_src is not None:
+                merged = merged.localCheckpoint()
+                fast = merged.filter(~F.col("_recompute")).select(*out_cols)
+                rec = merged.filter(F.col("_recompute"))
+                merged = fast.unionByName(
+                    self._targeted_recompute(recompute_src, rec, out_cols)
+                )
+            else:
+                merged = merged.select(*out_cols)
+
+            self.table.replace_files(
+                remove=remove,
+                add_df=merged,
+                operation="ivm_delta_refresh",
+                summary={"source_version": cur, "delta_rows": delta_rows},
+                expected_base=snap.version,
+            )
         return {
             "mode": "delta",
             "delta_rows": delta_rows,
@@ -573,24 +586,17 @@ class IncrementalRollup:
         return F.coalesce(had_del & (touches | absent), F.lit(False))
 
     def _targeted_recompute(
-        self,
-        base: LakeTable,
-        rec: DataFrame,
-        out_cols: list[str],
-        version: int | None = None,
+        self, b: DataFrame, rec: DataFrame, out_cols: list[str]
     ) -> DataFrame:
-        """Re-aggregate MIN/MAX from the base for exactly the flagged
+        """Re-aggregate MIN/MAX from the base `b` for exactly the flagged
         groups (semi-join restriction — O(base partitions containing
         those groups), not a full re-scan of aggregates: cnt/sum stay
-        on the exact delta math). The scan is PINNED to `version` — the
-        base version this refresh planned its changelog window against —
-        so a concurrent base commit landing mid-refresh cannot leak
-        newer rows into the recomputed extrema (the rollup must equal a
-        recompute at exactly source_version)."""
+        on the exact delta math). `b` is pinned to the base version
+        this refresh planned its changelog window against (the rollup
+        must equal a recompute at exactly source_version)."""
         keys = rec.select(
             *[F.col(c).alias(f"_k_{c}") for c in self.group_cols]
         ).distinct()
-        b = self._base_df_at(base, version)
         cond = None
         for c in self.group_cols:
             eq = b[c].eqNullSafe(keys[f"_k_{c}"])

@@ -22,6 +22,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
+from ..session import small_statement
 from .table import LakeTable, Snapshot
 
 MB = 1024 * 1024
@@ -85,10 +86,11 @@ def compact(
     pcols = [c for c in table.partition_by if c in df.columns]
     n_out = max(1, math.ceil(total_bytes / target_file_size))
     df = df.repartition(n_out, *pcols) if pcols else df.coalesce(n_out)
-    new_snap = table.replace_files(
-        [f.path for f in to_rewrite], df, operation="compact",
-        expected_base=snap.version,
-    )
+    with small_statement(table.spark, total_bytes):
+        new_snap = table.replace_files(
+            [f.path for f in to_rewrite], df, operation="compact",
+            expected_base=snap.version,
+        )
     return {
         "status": "success",
         "files_before": before_files,
@@ -130,16 +132,17 @@ def rewrite_sorted(
             max(1, len(targets)), *[F.col(c) for c in sort_columns]
         )
     df = df.sortWithinPartitions(*sort_columns)
-    new_snap = table.replace_files(
-        [f.path for f in targets], df, operation="rewrite_sorted",
-        summary={"sort_columns": sort_columns},
-        expected_base=snap.version,
-        writer_options=(
-            {"parquet.block.size": rowgroup_bytes}
-            if rowgroup_bytes
-            else None
-        ),
-    )
+    with small_statement(table.spark, sum(f.bytes for f in targets)):
+        new_snap = table.replace_files(
+            [f.path for f in targets], df, operation="rewrite_sorted",
+            summary={"sort_columns": sort_columns},
+            expected_base=snap.version,
+            writer_options=(
+                {"parquet.block.size": rowgroup_bytes}
+                if rowgroup_bytes
+                else None
+            ),
+        )
     return {
         "status": "success",
         "rewritten_files": len(targets),
@@ -175,54 +178,55 @@ def rewrite_zorder(
     if not targets:
         return {"status": "skipped", "reason": "no matching partitions"}
     df = table._read_files(snap, [f.path for f in targets])
-    stats = df.agg(
-        *[F.min(c).alias(f"{c}__min") for c in zorder_columns],
-        *[F.max(c).alias(f"{c}__max") for c in zorder_columns],
-    ).collect()[0]
-    n_buckets = 1 << bits_per_column
-    scaled = []
-    for c in zorder_columns:
-        lo = float(stats[f"{c}__min"])
-        hi = float(stats[f"{c}__max"])
-        span = (hi - lo) or 1.0
-        scaled.append(
-            F.least(
-                F.floor((F.col(c).cast("double") - lo) / span * n_buckets)
-                .cast("long"),
-                F.lit(n_buckets - 1),
-            )
-        )
-    # interleave: bit j of column i lands at position j*len(cols)+i
-    z = F.lit(0).cast("long")
-    for j in range(bits_per_column):
-        for i, s in enumerate(scaled):
-            pos = j * len(scaled) + i
-            bit = F.shiftright(s, bits_per_column - 1 - j).bitwiseAND(F.lit(1))
-            z = z + bit * F.lit(1 << (bits_per_column * len(scaled) - 1 - pos))
-    # range-partition by z then sort within — the distributed form (a
-    # bare orderBy would let AQE coalesce tiny inputs into one file and
-    # erase the per-file clustering this rewrite exists to create)
     total_bytes = sum(f.bytes for f in targets)
-    n_out = max(2, math.ceil(total_bytes / target_file_size))
-    out = (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_out, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    # rowgroup_bytes tunes the WITHIN-file stats granularity the
-    # clustering exists to sharpen: smaller row groups → finer
-    # plan_row_groups/scan_rowgroups skipping on every z-ordered column
-    new_snap = table.replace_files(
-        [f.path for f in targets], out, operation="rewrite_zorder",
-        summary={"zorder_columns": zorder_columns},
-        expected_base=snap.version,
-        writer_options=(
-            {"parquet.block.size": rowgroup_bytes}
-            if rowgroup_bytes
-            else None
-        ),
-    )
+    with small_statement(table.spark, total_bytes):
+        stats = df.agg(
+            *[F.min(c).alias(f"{c}__min") for c in zorder_columns],
+            *[F.max(c).alias(f"{c}__max") for c in zorder_columns],
+        ).collect()[0]
+        n_buckets = 1 << bits_per_column
+        scaled = []
+        for c in zorder_columns:
+            lo = float(stats[f"{c}__min"])
+            hi = float(stats[f"{c}__max"])
+            span = (hi - lo) or 1.0
+            scaled.append(
+                F.least(
+                    F.floor((F.col(c).cast("double") - lo) / span * n_buckets)
+                    .cast("long"),
+                    F.lit(n_buckets - 1),
+                )
+            )
+        # interleave: bit j of column i lands at position j*len(cols)+i
+        z = F.lit(0).cast("long")
+        for j in range(bits_per_column):
+            for i, s in enumerate(scaled):
+                pos = j * len(scaled) + i
+                bit = F.shiftright(s, bits_per_column - 1 - j).bitwiseAND(F.lit(1))
+                z = z + bit * F.lit(1 << (bits_per_column * len(scaled) - 1 - pos))
+        # range-partition by z then sort within — the distributed form (a
+        # bare orderBy would let AQE coalesce tiny inputs into one file and
+        # erase the per-file clustering this rewrite exists to create)
+        n_out = max(2, math.ceil(total_bytes / target_file_size))
+        out = (
+            df.withColumn("_z", z)
+            .repartitionByRange(n_out, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+        )
+        # rowgroup_bytes tunes the WITHIN-file stats granularity the
+        # clustering exists to sharpen: smaller row groups → finer
+        # plan_row_groups/scan_rowgroups skipping on every z-ordered column
+        new_snap = table.replace_files(
+            [f.path for f in targets], out, operation="rewrite_zorder",
+            summary={"zorder_columns": zorder_columns},
+            expected_base=snap.version,
+            writer_options=(
+                {"parquet.block.size": rowgroup_bytes}
+                if rowgroup_bytes
+                else None
+            ),
+        )
     return {
         "status": "success",
         "rewritten_files": len(targets),

@@ -136,9 +136,13 @@ def select_compatible_merges(
 # 31-word vocabulary still paid ~0.42 s of scheduling per iteration).
 # Below the gate the loop runs on the COLLECTED (seq, freq) pairs —
 # the k-means-centroid-collect posture; bounded: 131072 words × ~100 B
-# ≈ 13 MB of driver state. Above it, the distributed incremental
-# learner keeps cluster-sized vocabularies cluster-resident.
+# ≈ 13 MB of driver state. The bytes are gated too (the collected
+# marker-wrapped sequences, 3 bytes per ASCII character), so a few
+# very long tokens cannot pass the word count alone. Above either
+# bound, the distributed incremental learner keeps cluster-sized
+# vocabularies cluster-resident.
 DRIVER_VOCAB_MAX_WORDS = 131_072
+DRIVER_VOCAB_MAX_BYTES = DRIVER_VOCAB_MAX_WORDS * 100
 
 
 def bpe_learn(
@@ -179,8 +183,9 @@ def bpe_learn(
       text and bounded by M; `merges_per_pass=1` (default) is exactly
       sequential BPE and is what the q106 driver gate runs.
     - `driver_vocab_max` (r15): sequential learning over a vocabulary
-      at most this many unique words collects the (seq, freq) table
-      and runs the merge loop on the driver — results IDENTICAL by
+      at most this many unique words (and at most
+      `DRIVER_VOCAB_MAX_BYTES` of sequences) collects the (seq, freq)
+      table and runs the merge loop on the driver — results IDENTICAL by
       construction (Python `str.replace` is the same greedy
       left-to-right non-overlapping rewrite as Spark's `replace()`,
       tuple ordering matches the struct-MIN tie-break because UTF-8
@@ -194,18 +199,24 @@ def bpe_learn(
         "freq",
     ).persist()
     # One job materializes the base AND yields the corpus word count
-    # plus the vocabulary size the driver-route gate needs.
+    # plus the vocabulary size and bytes the driver-route gate needs.
     first = seqs.agg(
-        F.sum("freq").alias("f"), F.count(F.lit(1)).alias("n")
+        F.sum("freq").alias("f"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.octet_length("seq")).alias("b"),
     ).collect()[0]
     total_freq = int(first["f"] or 0)
     n_words = int(first["n"])
+    n_bytes = int(first["b"] or 0)
     try:
         if merges_per_pass > 1:
             rows = _learn_batched(
                 seqs, total_freq, n_merges, checkpoint_every, merges_per_pass
             )
-        elif n_words <= driver_vocab_max:
+        elif (
+            n_words <= driver_vocab_max
+            and n_bytes <= DRIVER_VOCAB_MAX_BYTES
+        ):
             pairs = [
                 (r["seq"], int(r["freq"])) for r in seqs.collect()
             ]

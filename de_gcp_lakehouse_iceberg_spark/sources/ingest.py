@@ -252,12 +252,17 @@ def valid_trips(classified: DataFrame) -> DataFrame:
 
 def invalid_trips(classified: DataFrame) -> DataFrame:
     """The dead-letter branch with the reference's error envelope
-    (streaming_taxi_processor.py:200-208 / S12)."""
+    (streaming_taxi_processor.py:200-208 / S12). A line the JSON reader
+    could not parse keeps its raw text (`_corrupt`) as `record`; every
+    other rejected row stores its fields as JSON."""
+    record = F.to_json(
+        F.struct(*[c for c in classified.columns if not c.startswith("_")])
+    )
+    if "_corrupt" in classified.columns:
+        record = F.coalesce(F.col("_corrupt"), record)
     return classified.filter(F.col("_error_type").isNotNull()).select(
         F.concat(F.lit("rejected: "), F.col("_error_type")).alias("error"),
-        F.to_json(
-            F.struct(*[c for c in classified.columns if not c.startswith("_")])
-        ).alias("record"),
+        record.alias("record"),
         F.col("_error_type").alias("error_type"),
         F.concat(F.col("_mode"), F.lit("_taxi_processor")).alias(
             "pipeline_name"

@@ -327,3 +327,27 @@ def test_bpe_driver_route_equals_distributed(spark):
         ).collect()
     ]
     assert a == b
+
+
+def test_bpe_byte_gate_takes_distributed_route(spark, monkeypatch):
+    """A vocabulary under the word bound but over the byte bound (a few
+    very long tokens) skips the driver route and learns the same
+    merges distributed."""
+    from de_gcp_lakehouse_iceberg_spark.operators import bpe
+
+    docs = spark.createDataFrame(
+        [("abcab" * 40 + " " + "cabba" * 30 + " abab abab",)], "text string"
+    )
+    want = [tuple(r) for r in bpe.bpe_learn(spark, docs, n_merges=5).collect()]
+    routes = []
+    real = bpe._learn_sequential
+
+    def distributed(*a, **kw):
+        routes.append("distributed")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(bpe, "_learn_sequential", distributed)
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_MAX_BYTES", 100)
+    got = [tuple(r) for r in bpe.bpe_learn(spark, docs, n_merges=5).collect()]
+    assert routes == ["distributed"]
+    assert got == want and len(got) == 5

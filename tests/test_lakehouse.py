@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import time
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,9 +107,17 @@ def test_update(spark, warehouse):
     assert untouched == 0
 
 
-def test_merge_update_and_insert(spark, warehouse):
+def test_merge_update_and_insert(spark, warehouse, monkeypatch):
     t = LakeTable.create(spark, warehouse)
     t.append(_orders_df(spark, 20))
+    planned = []
+    real_plan = LakeTable.plan_files
+
+    def counting_plan(self, *a, **kw):
+        planned.append(a or kw)
+        return real_plan(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "plan_files", counting_plan)
     source = spark.createDataFrame(
         [(5, 999.0), (19, 888.0), (100, 123.0)], "order_id long, new_amount double"
     ).select(
@@ -124,6 +133,8 @@ def test_merge_update_and_insert(spark, warehouse):
         when_matched_update={"amount": F.col("source.amount")},
         when_not_matched_insert=True,
     )
+    # the guard, the rewrite and the anti-join share one planned scan
+    assert len(planned) == 1
     out = {r.order_id: r.amount for r in t.scan().collect()}
     assert out[5] == 999.0 and out[19] == 888.0  # matched → updated
     assert out[100] == 123.0  # not matched → inserted
@@ -924,3 +935,133 @@ def test_metadata_tables_run_no_python_worker(spark, warehouse):
     df = t.refs_df()
     assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
     assert rows(df) == [("v1", "tag", 1, snaps[1].timestamp_ms, snaps[1].operation)]
+
+
+# -- execution posture: small statements run interpreted ---------------
+_POSTURE = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+
+def _posture(s):
+    return {k: s.conf.get(k, None) for k in _POSTURE}
+
+
+def _compiles(spark):
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_small_statements_compile_no_code(spark, warehouse, monkeypatch):
+    """An UPDATE or DELETE with a fresh literal on a table under
+    SMALL_STATEMENT_BYTES runs interpreted: no Janino compile. With the
+    bound at 0 the same statements compile again."""
+    from de_gcp_lakehouse_iceberg_spark import session
+
+    t = LakeTable.create(spark, warehouse, partition_by=["order_date"])
+    t.append(_orders_df(spark, 500))
+    assert t.snapshot().total_bytes <= session.SMALL_STATEMENT_BYTES
+    lit = iter(range(1000))
+
+    def statements():
+        before = _compiles(spark)
+        dml.update(t, {"amount": f"amount + {next(lit)}"}, f"order_id = {next(lit)}")
+        dml.delete(t, f"order_id = {next(lit)}")
+        return _compiles(spark) - before
+
+    statements()  # warm: scans and writes set up their first classes
+    assert statements() == 0
+    monkeypatch.setattr(session, "SMALL_STATEMENT_BYTES", 0)
+    assert statements() > 0
+
+
+def test_small_statement_restores_caller_confs(spark, tmp_path):
+    """A value the caller set survives a statement; an unset one is
+    unset again, also when the statement raises (MERGE's cardinality
+    guard)."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    want = {"spark.sql.codegen.wholeStage": "false",
+            "spark.sql.codegen.factoryMode": None}
+    assert _posture(s) == want
+    t = LakeTable.create(s, str(tmp_path / "t"))
+    t.append(_orders_df(s, 50))
+    dml.update(t, {"amount": "0.0"}, "bucket = 1")
+    assert _posture(s) == want
+    dup = s.createDataFrame(
+        pd.DataFrame({"order_id": [3, 3], "amount": [1.0, 2.0]})
+    )
+    with pytest.raises(ValueError, match="duplicate join keys"):
+        dml.merge(t, dup, on=["order_id"])
+    assert _posture(s) == want
+
+
+def test_concurrent_dml_leaves_session_confs_unchanged(spark, tmp_path):
+    """Four threads run DML on one session; once all are done the
+    session's confs are what they were before."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from de_gcp_lakehouse_iceberg_spark import session
+
+    s = spark.newSession()
+    before = _posture(s)
+    tables = []
+    for i in range(4):
+        t = LakeTable.create(s, str(tmp_path / f"t{i}"))
+        t.append(_orders_df(s, 40))
+        tables.append(t)
+
+    def work(t):
+        for k in range(3):
+            dml.update(t, {"amount": f"amount + {k}"}, f"bucket = {k}")
+            dml.delete(t, f"order_id = {k}")
+        return t.scan().count()
+
+    with ThreadPoolExecutor(4) as pool:
+        counts = [f.result(timeout=600) for f in
+                  [pool.submit(work, t) for t in tables]]
+    assert counts == [37] * 4
+    assert _posture(s) == before
+    assert s._jsparkSession.sessionUUID() not in session._scopes
+
+
+def test_small_statement_scopes_nest_and_share_a_session(spark):
+    """The outermost scope picks the mode; counted scopes from many
+    threads (more than cores, frequent switches) restore the session's
+    values when the last one closes."""
+    import random
+    import sys
+    import threading
+
+    from de_gcp_lakehouse_iceberg_spark.session import small_statement
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    before = _posture(s)
+    interpreted = {"spark.sql.codegen.wholeStage": "false",
+                   "spark.sql.codegen.factoryMode": "NO_CODEGEN"}
+    with small_statement(s, 0):
+        with small_statement(s, 1 << 40):
+            assert _posture(s) == interpreted
+    with small_statement(s, 1 << 40):
+        with small_statement(s, 0):
+            assert _posture(s) == before
+    assert _posture(s) == before
+
+    def worker(seed):
+        rng = random.Random(seed)
+        for _ in range(30):
+            with small_statement(s, rng.choice([0, 1 << 40])):
+                with small_statement(s, rng.choice([0, 1 << 40])):
+                    pass
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert _posture(s) == before

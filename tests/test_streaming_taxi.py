@@ -72,6 +72,17 @@ def test_streaming_matches_batch_validation(spark, tmp_path):
     }
     assert batch_errors.get("json_parsing_failed") == 2
     assert stream_errors == batch_errors
+    # the dead letter keeps each malformed line's raw text
+    records = [
+        r["record"]
+        for r in errors.scan()
+        .filter(F.col("error_type") == "json_parsing_failed")
+        .collect()
+    ]
+    assert sorted(records) == [
+        "this line is not json",
+        '{"trip_id": "cut-off", "vendor_id": 1, ',
+    ]
 
 
 def test_replayed_windows_equal_batch_windows(spark, tmp_path):

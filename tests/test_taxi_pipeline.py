@@ -100,9 +100,11 @@ def test_corrupt_json_lines_get_their_own_class(spark, tmp_path):
     }
     assert by.get("json_parsing_failed") == 2
     assert by.get(None) == 2
-    # corrupt payloads flow to the dead letter with the envelope intact
+    # corrupt payloads flow to the dead letter with the envelope intact,
+    # each keeping its raw line as the record
     errs = ingest.invalid_trips(classified).collect()
     assert all(e.error_type == "json_parsing_failed" for e in errs)
+    assert sorted(e.record for e in errs) == ["[1, 2, 3]", "{this is not json"]
 
 
 def test_valid_trips_normalization(spark, tmp_path):
