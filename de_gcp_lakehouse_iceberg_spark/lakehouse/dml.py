@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..session import plan_bytes, small_statement
 from .table import FILE_COL as _FILE
-from .table import LakeTable, Snapshot
+from .table import LakeTable, Snapshot, local_path
 
 
 def _as_col(pred: Column | str) -> Column:
@@ -54,14 +54,7 @@ def _deterministic_text(*exprs: str) -> bool:
 
 
 def _rel_paths(table: LakeTable, abs_paths: list[str]) -> list[str]:
-    out = []
-    for p in abs_paths:
-        if p.startswith("file:"):
-            p = p[len("file:") :]
-            while p.startswith("//"):
-                p = p[1:]
-        out.append(os.path.relpath(p, table.root))
-    return out
+    return [os.path.relpath(local_path(p), table.root) for p in abs_paths]
 
 
 def _affected_files(table: LakeTable, df_with_file: DataFrame, pred: Column) -> list[str]:
@@ -554,7 +547,14 @@ def changelog(
             tagged = _tag1(rem_df, "DELETE", v, cur.timestamp_ms)
         out = tagged if out is None else out.unionByName(tagged)
     if out is None:
-        raise ValueError("no changes between requested versions")
+        if from_version >= to_version:
+            raise ValueError("no changes between requested versions")
+        # no commit of the window changed a data file (metadata-only
+        # commits, appends of no rows): an empty feed
+        last = snaps[-1]
+        out = _tag1(
+            table._read_files(last, []), "INSERT", to_version, last.timestamp_ms
+        )
     # every branch emits the weighted shape; the default feed is its
     # replication
     return out if columns is not None else _replicate(out)

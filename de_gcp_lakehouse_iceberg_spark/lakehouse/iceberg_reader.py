@@ -46,17 +46,10 @@ from pyspark.sql import functions as F
 
 from . import avro
 from .iceberg_export import iceberg_schema_to_spark, norm_file_path
+from .table import local_path
 
 ADDED, EXISTING, DELETED = 1, 0, 2
 DATA, POSITION_DELETES, EQUALITY_DELETES = 0, 1, 2
-
-
-def _strip_scheme(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
 
 
 def load_metadata(path: str) -> dict:
@@ -120,11 +113,11 @@ def _manifest_entries(
             {"manifest_path": p} for p in inline_manifests
         ]
     else:
-        _, _, manifests = avro.read_ocf(_strip_scheme(manifest_list_path))
+        _, _, manifests = avro.read_ocf(local_path(manifest_list_path))
     data_entries: list[dict] = []
     delete_entries: list[dict] = []
     for mf in manifests:
-        _, _, entries = avro.read_ocf(_strip_scheme(mf["manifest_path"]))
+        _, _, entries = avro.read_ocf(local_path(mf["manifest_path"]))
         for e in entries:
             if e.get("status") == DELETED:
                 continue
@@ -151,7 +144,7 @@ def _manifest_entries(
                     seq = mf.get("sequence_number", 0)
             content = e["data_file"].get("content", 0)
             rec = {
-                "path": _strip_scheme(e["data_file"]["file_path"]),
+                "path": local_path(e["data_file"]["file_path"]),
                 "seq": seq,
                 "format": e["data_file"].get("file_format", "PARQUET"),
                 "rows": e["data_file"].get("record_count"),

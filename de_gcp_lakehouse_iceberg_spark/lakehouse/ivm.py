@@ -61,7 +61,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import id_hash
-from ..session import plan_bytes, small_statement
+from ..session import small_statement
 from . import dml
 from .table import LakeTable
 
@@ -274,6 +274,10 @@ class IncrementalRollup:
             )
         )
 
+    def _source_pins(self, handle, last, cur):
+        """(table, last version, cur version) of each source table."""
+        return [(handle, last, cur)]
+
     def _change_rows(self, handle, last, cur) -> DataFrame:
         """The signed WEIGHTED row-change feed between the markers:
         rows with `_change_type` (INSERT/DELETE), `_n` (multiplicity),
@@ -330,9 +334,12 @@ class IncrementalRollup:
             if self.minmax_cols or self.distinct_cols
             else None
         )
-        nbytes = snap.total_bytes + plan_bytes(ch)
-        if recompute_src is not None:
-            nbytes += plan_bytes(recompute_src)
+        # sized from the pinned snapshots, not Catalyst's estimate
+        # (which multiplies a join's sides)
+        nbytes = snap.total_bytes + sum(
+            max(t.snapshot(v0).total_bytes, t.snapshot(v1).total_bytes)
+            for t, v0, v1 in self._source_pins(base, last, cur)
+        )
         with small_statement(self.spark, nbytes):
             # weighted feed (r15): `_n` is the multiplicity the replicated
             # feed would carry (0 for values the projected diff cancelled —
@@ -736,11 +743,8 @@ class JoinRollup(IncrementalRollup):
         return rollup
 
     # -- source hooks --------------------------------------------------
-    @staticmethod
-    def _snapshot_bytes(tbl: LakeTable, version: int) -> int:
-        """Data bytes of one snapshot, from table METADATA only (no
-        file reads) — the broadcast gate's input."""
-        return tbl.snapshot(version).total_bytes
+    def _source_pins(self, handle, last, cur):
+        return [(t, last[n], cur[n]) for n, t in zip(("fact", "dim"), handle)]
 
     def _source_cursor(self):
         fact = LakeTable.load(self.spark, self.base_root)
@@ -801,8 +805,7 @@ class JoinRollup(IncrementalRollup):
             dscan = dim.scan(version=cur["dim"]).select(
                 *self._side_columns(dim, cur["dim"])
             )
-            if self._snapshot_bytes(dim, cur["dim"]) <= \
-                    IVM_BROADCAST_MAX_BYTES:
+            if dim.snapshot(cur["dim"]).total_bytes <= IVM_BROADCAST_MAX_BYTES:
                 dscan = F.broadcast(dscan)
             terms.append(self._joined(df_, dscan))
         if cur["dim"] != last["dim"]:
@@ -818,8 +821,8 @@ class JoinRollup(IncrementalRollup):
                 columns=self._side_columns(dim, cur["dim"]),
             )
             dd_bound = max(
-                self._snapshot_bytes(dim, last["dim"]),
-                self._snapshot_bytes(dim, cur["dim"]),
+                dim.snapshot(last["dim"]).total_bytes,
+                dim.snapshot(cur["dim"]).total_bytes,
             )
             if dd_bound <= IVM_BROADCAST_MAX_BYTES:
                 dd = F.broadcast(dd)

@@ -250,20 +250,17 @@ def rewrite_manifests(
     keep_last: int = 1,
 ) -> dict[str, Any]:
     """Metadata compaction — the `rewrite_manifests` analog for the
-    JSON + parquet-sidecar manifest family. Every commit leaves one
-    snapshot JSON (full file list) and possibly a columnar sidecar;
-    after hundreds of commits the _manifests/ dir is O(commits) files
-    even though planning only needs the retained window. This pass:
+    JSON manifest family. Every commit leaves one snapshot JSON (full
+    file list); after hundreds of commits the _manifests/ dir is
+    O(commits) files even though planning only needs the retained
+    window. This pass:
 
     1. ARCHIVES the headers of every snapshot the expire window is
        about to drop into ONE compacted history log (commit audit
        trail survives; file lists don't — those versions stop being
        time-travel targets, exactly `expire_snapshots`' contract);
-    2. runs the expire itself (per-version JSONs + sidecars deleted,
-       unreferenced data files GC'd);
-    3. drops parquet sidecars of retained NON-current versions (the
-       distributed planner only ever plans the current snapshot at
-       scale; older retained versions fall back to the JSON loop).
+    2. runs the expire itself (per-version JSONs deleted,
+       unreferenced data files GC'd).
 
     `plan_files` output and every query over retained versions are
     byte-identical before/after — proven by tests/test_rewrite_manifests.py.
@@ -277,20 +274,10 @@ def rewrite_manifests(
     before = len(os.listdir(mdir))
     archived = table.archive_snapshot_headers(victims)
     res = table.expire_snapshots(older_than_ms=cutoff, keep_last=keep_last)
-    cur = table.current_version()
-    dropped_sidecars = 0
-    for s in table.snapshots():
-        if s.version == cur:
-            continue
-        side = table._parquet_manifest_path(s.version)
-        if os.path.exists(side):
-            os.remove(side)
-            dropped_sidecars += 1
     after = len(os.listdir(mdir))
     return {
         "status": "success",
         "archived_headers": archived,
-        "dropped_sidecars": dropped_sidecars,
         "metadata_files_before": before,
         "metadata_files_after": after,
         **res,
@@ -400,7 +387,7 @@ def run_full_maintenance(
     if sort_columns:
         report.add("sort_rewrite", **rewrite_sorted(table, sort_columns))
     # expire + metadata compaction in one leg: headers archived, old
-    # manifests/sidecars dropped, data files GC'd
+    # manifests dropped, data files GC'd
     report.add(
         "expire_snapshots", **rewrite_manifests(table, retention_days)
     )

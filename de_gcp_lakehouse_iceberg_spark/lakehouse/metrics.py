@@ -19,7 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .table import LakeTable
+from .table import LakeTable, local_path
 
 # reference thresholds (iceberg_maintenance.py:183,191; PRD.md:2916-2930)
 SLOW_QUERY_SECONDS = 30.0
@@ -62,11 +62,8 @@ class QueryMetrics:
             files_n = len(files)
             input_bytes = 0
             for f in files:
-                p = f[len("file:") :] if f.startswith("file:") else f
-                while p.startswith("//"):
-                    p = p[1:]
                 try:
-                    input_bytes += os.path.getsize(p)
+                    input_bytes += os.path.getsize(local_path(f))
                 except OSError:
                     pass
         t0 = time.time()

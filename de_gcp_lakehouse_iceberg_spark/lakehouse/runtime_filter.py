@@ -70,14 +70,7 @@ def scan_with_join_filter(
     keys = harvest_keys(dim, dim_col or fact_col, max_keys)
     # sorted ONCE: planning and row-group refinement share the key set
     where = _normalize_where([(fact_col, "in", keys)])
-    # Plan ONCE. When the snapshot carries a columnar manifest sidecar
-    # (≥ PARQUET_MANIFEST_MIN files), pruning runs as a Spark job —
-    # sorted-key range intersection + bloom probes per manifest batch on
-    # executors, so a 10⁶-file × 10⁵-key plan never loops on the
-    # driver. plan_files_distributed falls back to the driver loop for
-    # small snapshots; results are identical by construction (same
-    # per-entry `_file_survives`).
-    snap, planned = fact.plan_files_distributed(where=where)
+    snap, planned = fact.plan_files(where=where)
     # Row-group refinement: surviving files whose manifest entries
     # carry per-row-group stats are narrowed to the groups the key set
     # can actually touch (the `in` op binary-searches each group's

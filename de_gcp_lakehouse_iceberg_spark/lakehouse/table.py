@@ -61,9 +61,29 @@ DATA_DIR = "data"
 POINTER = "_current"
 REFS = "_refs.json"
 FILE_COL = "__file_path"  # hidden provenance column (scan(with_file_path=True))
-# snapshots with at least this many files also get a columnar
-# (parquet) manifest sidecar for Spark-distributed scan planning
-PARQUET_MANIFEST_MIN = 2000
+
+
+def local_path(uri: str) -> str:
+    """A `file:` URI (as Spark reports file paths) → its POSIX path;
+    any other string unchanged."""
+    if uri.startswith("file:"):
+        uri = uri[len("file:"):]
+        while uri.startswith("//"):
+            uri = uri[1:]
+    return uri
+
+
+_NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _nullable(node):
+    """A parsed schema JSON with every field, element and map value
+    nullable: what Spark's parquet reader makes of a schema it is given."""
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    if isinstance(node, dict):
+        return {k: k in _NULL_FLAGS or _nullable(v) for k, v in node.items()}
+    return node
 
 
 def _stat_value(v):
@@ -177,8 +197,7 @@ class _SortedKeys:
     [min, max] stats range with the key list by binary search —
     O(log keys + keys-in-range) per file instead of O(keys). At the
     runtime-filter ceiling (10⁵ keys × 10⁶ files) that's the difference
-    between ~10⁷ and ~10¹¹ plan-time ops. Picklable (plain lists), so
-    `plan_files_distributed` ships it to executors as-is."""
+    between ~10⁷ and ~10¹¹ plan-time ops."""
 
     __slots__ = ("keys", "svs", "skeys", "unsortable", "sortable")
 
@@ -321,8 +340,7 @@ def _file_survives(
     """The complete per-file pruning decision — column-stats skipping,
     bloom equality probes, and hidden-partition transform mapping under
     the file's OWN spec (Iceberg spec_id semantics). Pure function of
-    one manifest entry, which is what lets `plan_files_distributed`
-    evaluate it inside a Spark job for million-file snapshots."""
+    one manifest entry; `LakeTable.plan_files` applies it to each."""
     from .bloom import bloom_may_contain
     from .transforms import parse_spec
 
@@ -872,12 +890,6 @@ class LakeTable:
                 f"concurrent modification: v{version} was committed by "
                 "another writer while this commit was being prepared"
             )
-        # manifest-as-a-table: large snapshots ALSO get a columnar
-        # manifest sidecar so planning can run as a Spark job
-        # (plan_files_distributed) instead of a driver loop — the
-        # Iceberg manifest-list posture for million-file tables.
-        if len(files) >= PARQUET_MANIFEST_MIN:
-            self._write_parquet_manifest(version, files)
         # pointer-hint swap — a crash before this line leaves the
         # commit durable (the manifest IS the commit point); readers
         # forward-walk past the stale hint and repair it
@@ -954,6 +966,9 @@ class LakeTable:
         return entries
 
     def _scan_written(self, out_dir: str) -> list[FileEntry]:
+        """Manifest entries of the parquet files a write left under
+        `out_dir`. Spark writes a file even for an empty task; such a
+        0-row file could never be pruned, so it is deleted instead."""
         paths: list[str] = []
         for dirpath, _dirnames, filenames in os.walk(out_dir):
             for fn in filenames:
@@ -978,7 +993,11 @@ class LakeTable:
                 rg_stats=rg_stats,
             )
 
-        return sorted(_map_footers(paths, _one), key=lambda e: e.path)
+        entries = _map_footers(paths, _one)
+        for e in entries:
+            if not e.rows:
+                os.remove(os.path.join(self.root, e.path))
+        return sorted((e for e in entries if e.rows), key=lambda e: e.path)
 
     def _align_to_schema(self, df: DataFrame, schema_json: str) -> DataFrame:
         """Write-side schema enforcement: appended rows are cast to the
@@ -1364,94 +1383,6 @@ class LakeTable:
         ]
         return snap, files
 
-    # -- manifest-as-a-table (million-file snapshots) -------------------
-    def _parquet_manifest_path(self, version: int) -> str:
-        return os.path.join(
-            self.root, MANIFEST_DIR, f"v{version:08d}.files.parquet"
-        )
-
-    def _write_parquet_manifest(
-        self, version: int, files: list[FileEntry]
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pa.table(
-            {
-                "path": [f.path for f in files],
-                "rows": [f.rows for f in files],
-                "bytes": [f.bytes for f in files],
-                "partition": [json.dumps(f.partition) for f in files],
-                "stats": [json.dumps(f.stats) for f in files],
-                "spec": [
-                    None if f.spec is None else json.dumps(f.spec)
-                    for f in files
-                ],
-                "seq": [f.seq for f in files],
-                "rg_stats": [
-                    None if f.rg_stats is None else json.dumps(f.rg_stats)
-                    for f in files
-                ],
-            }
-        )
-        out = self._parquet_manifest_path(version)
-        pq.write_table(tbl, out + ".tmp")
-        os.replace(out + ".tmp", out)
-
-    @staticmethod
-    def _sidecar_entry(r) -> FileEntry:
-        """One sidecar row (any mapping of its columns) → its manifest
-        entry: the inverse of `_write_parquet_manifest`, which stores
-        the dict/list fields as JSON text. Sidecars written before
-        row-group stats have no `rg_stats` column."""
-        return FileEntry.from_json({
-            k: json.loads(v) if k in ("partition", "stats", "spec", "rg_stats") else v
-            for k, v in r.items()
-            if v is not None
-        })
-
-    def plan_files_distributed(
-        self,
-        version: int | None = None,
-        where: list[tuple[str, str, Any]] | None = None,
-    ) -> tuple[Snapshot, list[FileEntry]]:
-        """`plan_files` as a Spark job: the pruning decision
-        (`_file_survives` — stats + bloom + per-spec transforms) runs
-        over the columnar manifest sidecar with mapInPandas, so a
-        million-entry manifest never materializes as Python objects on
-        the driver — only the SURVIVING entries come back (the file
-        list Spark needs anyway). Falls back to the driver loop when
-        the snapshot is below the sidecar threshold. Results are
-        identical to `plan_files` by construction (same per-entry
-        function)."""
-        snap = self.snapshot(version)
-        pq_path = self._parquet_manifest_path(snap.version)
-        if not os.path.exists(pq_path):
-            return self.plan_files(version=snap.version, where=where)
-
-        current_spec = self.partition_by
-        # normalized ONCE on the driver; ships to executors pickled so
-        # no task re-sorts the key set
-        preds = list(_normalize_where(where) or [])
-
-        def prune(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                keep = [
-                    _file_survives(
-                        LakeTable._sidecar_entry(r), preds, current_spec
-                    )
-                    for r in pdf.to_dict("records")
-                ]
-                yield pdf[pd.Series(keep, index=pdf.index, dtype=bool)]
-
-        mdf = self.spark.read.parquet(pq_path)
-        survivors = mdf.mapInPandas(prune, schema=mdf.schema).collect()
-        files = [self._sidecar_entry(r.asDict()) for r in survivors]
-        files.sort(key=lambda e: e.path)
-        return snap, files
-
     def scan(
         self,
         version: int | None = None,
@@ -1687,10 +1618,13 @@ class LakeTable:
         if snap.schema_json:
             # pinned schema → additive evolution: old files lacking newly
             # added columns read them as NULL (PRD.md:3421-3473 semantics)
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            reader = reader.schema(schema)
+            schema = json.loads(snap.schema_json)
+            reader = reader.schema(StructType.fromJson(schema))
             if not rel_paths:
-                return self.spark.createDataFrame([], schema)
+                # one scan schema whether or not the snapshot holds files
+                return self.spark.createDataFrame(
+                    [], StructType.fromJson(_nullable(schema))
+                )
         elif not rel_paths:
             raise ValueError("empty table with no recorded schema")
 
@@ -1944,9 +1878,6 @@ class LakeTable:
                         removed_files += 1
                     live_files.add(f.path)  # only count once
             os.remove(self._manifest_path(s.version))
-            side = self._parquet_manifest_path(s.version)
-            if os.path.exists(side):
-                os.remove(side)
             removed_manifests += 1
         return {
             "expired_snapshots": removed_manifests,

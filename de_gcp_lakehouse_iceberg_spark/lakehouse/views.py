@@ -42,6 +42,12 @@ class Warehouse:
     def table(self, name: str) -> LakeTable:
         return LakeTable.load(self.spark, self.table_root(name))
 
+    def table_or_create(self, name: str, **kwargs) -> LakeTable:
+        """The table `name`, created with `kwargs` if it does not exist."""
+        if name in self.table_names():
+            return self.table(name)
+        return self.create_table(name, **kwargs)
+
     def table_names(self) -> list[str]:
         out = []
         for d in sorted(os.listdir(self.root)):

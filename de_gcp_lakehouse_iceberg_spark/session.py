@@ -59,6 +59,20 @@ _INTERPRETED = (
     ("spark.sql.codegen.factoryMode", "NO_CODEGEN"),
 )
 
+# Runtime-settable tunings, shared by `get_spark` and `tune_session`.
+_RUNTIME_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    # modern timestamp physical type: INT96 (Spark's legacy default)
+    # carries NO parquet min/max statistics, which would blind the
+    # lakehouse column-stats file skipping on every time column
+    ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"),
+)
+
 # Open scopes per JVM session (keyed by its UUID, since two Python
 # wrappers may share one session): [open scope count, the confs the
 # outermost scope saved, or None when it kept code generation].
@@ -77,19 +91,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # modern timestamp physical type: INT96 (Spark's legacy default)
-        # carries NO parquet min/max statistics, which would blind the
-        # lakehouse column-stats file skipping on every time column
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
+        .config(map=dict(_RUNTIME_CONFS))
     )
     if warehouse_dir:
         # static conf — only effective when this call CREATES the session
@@ -104,15 +109,7 @@ def get_spark(
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tunings to an externally provided session
     (the driver hands us its own SparkSession in `entry()`)."""
-    for k, v in [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
-        ("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"),
-    ]:
+    for k, v in _RUNTIME_CONFS:
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -309,27 +309,23 @@ def run_batch_pipeline(
     """End-to-end batch ingest (run_batch_processor, main.py:268-330):
     classify `raw` (read_jsonl / read_nyc_csv) → fan out to taxi_trips
     + hourly_trip_stats + processing_errors, each an atomic lakehouse
-    commit. Counts come from the snapshot manifests, not scans."""
+    commit. Sinks that already exist are appended to, so a run can
+    repeat on the same warehouse. Counts are this run's rows, from each
+    commit's `added_rows` summary, not scans."""
     classified = classify_trips(raw, mode=mode).cache()
     valid = valid_trips(classified)
     invalid = invalid_trips(classified)
 
     wh = Warehouse(spark, warehouse)
-    trips_t = wh.create_table("taxi_trips", partition_by=["pickup_date"])
-    trips_with_date = valid.withColumn(
-        "pickup_date", F.to_date("pickup_datetime").cast("string")
+    trips = wh.table_or_create("taxi_trips", partition_by=["pickup_date"]).append(
+        valid.withColumn("pickup_date", F.to_date("pickup_datetime").cast("string"))
     )
-    trips_t.append(trips_with_date)
-
-    stats_t = wh.create_table("hourly_trip_stats")
-    stats_t.append(hourly_stats(valid))
-
-    errors_t = wh.create_table("processing_errors")
-    errors_t.append(invalid)
+    stats = wh.table_or_create("hourly_trip_stats").append(hourly_stats(valid))
+    errors = wh.table_or_create("processing_errors").append(invalid)
 
     classified.unpersist()
     return {
-        "valid": trips_t.snapshot().total_rows,
-        "invalid": errors_t.snapshot().total_rows,
-        "stats_rows": stats_t.snapshot().total_rows,
+        "valid": trips.summary["added_rows"],
+        "invalid": errors.summary["added_rows"],
+        "stats_rows": stats.summary["added_rows"],
     }

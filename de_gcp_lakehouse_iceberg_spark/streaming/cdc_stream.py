@@ -87,10 +87,7 @@ def export_changelog(table: LakeTable) -> int:
                 )
             )
     if cur > base:
-        try:
-            pieces.append(changelog(table, base, cur))
-        except ValueError:
-            pass  # metadata-only commits produce no rows
+        pieces.append(changelog(table, base, cur))
     delta = None
     for p in pieces:
         delta = p if delta is None else delta.unionByName(p)

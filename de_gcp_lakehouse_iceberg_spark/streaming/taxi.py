@@ -137,10 +137,7 @@ def run_streaming_pipeline(
     not yet read by this warehouse's checkpoint flows through parse →
     validate → three-sink fan-out. Returns final counts per sink."""
     wh = Warehouse(spark, warehouse_root)
-    existing = wh.table_names()
-    trips_t, windows_t, errors_t = (
-        wh.table(n) if n in existing else wh.create_table(n) for n in SINKS
-    )
+    trips_t, windows_t, errors_t = (wh.table_or_create(n) for n in SINKS)
 
     def _land(t: LakeTable, df: DataFrame, batch_id: int) -> None:
         if not batch_landed(t, CHECKPOINT, batch_id):

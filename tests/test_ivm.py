@@ -717,6 +717,43 @@ def test_join_rollup_broadcast_is_size_gated(spark, tmp_path, monkeypatch):
     _assert_join_matches(ru, fact, dim)
 
 
+def test_join_rollup_refresh_sized_from_pinned_snapshots(
+    spark, tmp_path, monkeypatch
+):
+    """Catalyst's estimate of a join multiplies its sides, so a refresh
+    sized by it never ran as a small statement. The refresh passes the
+    rollup's bytes plus, per source, the larger of its bytes at the two
+    pinned versions: a small join rollup runs interpreted."""
+    from de_gcp_lakehouse_iceberg_spark.lakehouse import ivm
+    from de_gcp_lakehouse_iceberg_spark.session import SMALL_STATEMENT_BYTES
+
+    fact, dim = _join_tables(spark, tmp_path)
+    ru = JoinRollup.create_join(
+        spark, str(tmp_path / "ru"), fact, dim, ["k"], ["seg"], ["v"],
+        minmax_cols=["v"],
+    )
+    last = {"fact": fact.current_version(), "dim": dim.current_version()}
+    dml.delete(fact, "fk % 7 = 3")
+    dml.update(dim, {"seg": "'RECODED'"}, "k % 3 = 1")
+    want = ru.table.snapshot().total_bytes + sum(
+        max(t.snapshot(last[n]).total_bytes, t.snapshot().total_bytes)
+        for n, t in (("fact", fact), ("dim", dim))
+    )
+
+    sizes = []
+    scope = ivm.small_statement
+
+    def recording(spark_, nbytes):
+        sizes.append(nbytes)
+        return scope(spark_, nbytes)
+
+    monkeypatch.setattr(ivm, "small_statement", recording)
+    assert ru.refresh()["mode"] == "delta"
+    assert sizes == [want]
+    assert want <= SMALL_STATEMENT_BYTES
+    _assert_join_matches(ru, fact, dim)
+
+
 def test_delta_rows_counts_rewritten_rows_a_merge_cancels(spark, tmp_path):
     """`delta_rows` is Σ`_gross`: on a generic-diff MERGE commit it
     counts the rewritten unchanged rows that the full-width feed

@@ -1065,3 +1065,51 @@ def test_small_statement_scopes_nest_and_share_a_session(spark):
     finally:
         sys.setswitchinterval(old)
     assert _posture(s) == before
+
+
+def test_append_commits_no_empty_files(spark, warehouse):
+    """Spark writes a file for an empty partition 0; a 0-row file can
+    never be pruned, so the commit drops it and deletes it. An empty
+    overwrite then commits no file and keeps the table's schema."""
+    import os
+
+    t = LakeTable.create(spark, warehouse + "/t")
+    df = spark.range(0, 3, 1, 4).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    snap = t.append(df)
+    assert len(snap.files) == 3
+    assert all(f.rows == 1 and f.stats for f in snap.files)
+    assert sorted(r["k"] for r in t.scan().collect()) == [0, 1, 2]
+    on_disk = [
+        fn
+        for _d, _s, fns in os.walk(os.path.join(t.root, "data"))
+        for fn in fns
+        if fn.endswith(".parquet")
+    ]
+    assert len(on_disk) == 3
+
+    schema = t.scan().schema
+    empty = t.overwrite(df.filter(F.col("k") < 0))
+    assert empty.files == []
+    assert t.scan().schema == schema
+    assert t.scan().count() == 0
+
+
+def test_changelog_of_a_window_without_file_changes_is_empty(spark, warehouse):
+    """Commits that change no data file (an append of no rows, a bloom
+    index) give an empty change feed, so CDC and IVM consumers can
+    advance past them."""
+    from de_gcp_lakehouse_iceberg_spark.lakehouse.bloom import add_bloom_filters
+
+    t = LakeTable.create(spark, warehouse + "/t")
+    df = spark.range(5).select(F.col("id").alias("k"))
+    t.append(df)
+    v = t.current_version()
+    add_bloom_filters(t, ["k"])
+    t.append(df.filter(F.col("k") < 0))
+    for lo, hi in ((v, v + 1), (v + 1, v + 2)):
+        feed = dml.changelog(t, lo, hi)
+        assert feed.count() == 0
+        assert {"k", "_change_type", "_change_version"} <= set(feed.columns)
+    assert dml.changelog(t, 0, v).count() == 5

@@ -126,19 +126,11 @@ def test_in_prune_with_datetime_keys(spark, tmp_path):
     assert rows == [29, 89]  # hour offsets 24+5 and 72+17
 
 
-def test_distributed_runtime_filter_many_files_large_keyset(
-    spark, tmp_path, monkeypatch
-):
-    """Above the sidecar threshold the runtime filter plans as a Spark
-    job (plan_files_distributed) with the sorted-key range
-    intersection; planned set and rows are identical to the driver
-    loop."""
-    import os
-
-    import de_gcp_lakehouse_iceberg_spark.lakehouse.table as table_mod
-
+def test_runtime_filter_many_files_large_keyset(spark, tmp_path):
+    """Over a many-file bloom-indexed table the runtime filter plans
+    with the sorted-key range intersection; planned set and rows are
+    identical to `plan_files` under the same key set."""
     n_files = 20
-    monkeypatch.setattr(table_mod, "PARQUET_MANIFEST_MIN", n_files)
     t = LakeTable.create(spark, str(tmp_path / "fact"))
     rows = n_files * 100
     df = spark.range(rows).select(
@@ -150,7 +142,6 @@ def test_distributed_runtime_filter_many_files_large_keyset(
             df.filter((F.col("k") / w).cast("long") == i).coalesce(1)
         )
     add_bloom_filters(t, ["k"])
-    assert os.path.exists(t._parquet_manifest_path(t.current_version()))
 
     # a large key set clustered in a few stripes + strays: the sorted
     # binary search narrows per-file probes to in-range keys only

@@ -179,3 +179,33 @@ def test_batch_pipeline_end_to_end(spark, tmp_path):
     assert t.partition_by == ["pickup_date"]
     got = t.scan().filter(F.col("payment_type") == "card").count()
     assert got > 0
+
+
+def test_batch_pipeline_reruns_on_the_same_warehouse(spark, tmp_path):
+    """A second batch run appends to the sinks the first one created,
+    and each run reports its own rows, not the table totals."""
+    from de_gcp_lakehouse_iceberg_spark.lakehouse import Warehouse
+
+    trips = generator.corrupt_some(
+        generator.generate_trips(120, seed=42), seed=43, frac=0.2
+    )
+    generator.write_jsonl(trips, str(tmp_path / "in"), files=2)
+    wh = str(tmp_path / "wh")
+
+    def run():
+        return ingest.run_batch_pipeline(
+            spark, ingest.read_jsonl(spark, str(tmp_path / "in") + "/*.jsonl"), wh
+        )
+
+    first = run()
+    second = run()
+    assert first == second
+    assert first["valid"] + first["invalid"] == 120
+    tables = Warehouse(spark, wh)
+    for name, key in (
+        ("taxi_trips", "valid"),
+        ("processing_errors", "invalid"),
+        ("hourly_trip_stats", "stats_rows"),
+    ):
+        assert tables.table(name).scan().count() == 2 * first[key], name
+    assert tables.table("taxi_trips").partition_by == ["pickup_date"]
